@@ -4,6 +4,14 @@ Local mode is the test harness; the configs are chosen so the same job is
 correct on a multi-executor cluster: AQE on (runtime coalesce + skew-split),
 Arrow on (vectorized UDF transfer), shuffle partitions sized to parallelism
 rather than the 200 default.
+
+Two defaults serve long-lived sessions that run the same pipelines
+again and again: the periodic cleaner GC (dropped cache blocks are freed
+between operators) and a generated-code cache of 500 classes. The cache
+size comes from a measured working set: one snapshot-mode
+``prepare_corpus`` call with every stage on compiles 238 distinct
+classes, which Spark's 100-entry default evicted on every call. 500
+gives 2x headroom at ~21 KB of heap per cached class (~11 MB when full).
 """
 
 from __future__ import annotations
@@ -55,6 +63,17 @@ def get_spark(
         # long-lived session — same value at cluster scale, where
         # sessions live far past 30 minutes anyway.
         .config("spark.cleaner.periodicGC.interval", "1min")
+        # Janino-compiled classes are cached per JVM in an LRU sized by
+        # this static conf (default 100). One snapshot-mode
+        # prepare_corpus call (every optional stage on) needs 238
+        # distinct classes, so at 100 the LRU evicted each class before
+        # its reuse and every warm call recompiled all of them (~2-3 s
+        # of driver time a call on 4 cores). 500 holds that working set
+        # twice over, the headroom a cache that evicts per segment (4
+        # Guava segments of 125) needs. A cached class retains ~21 KB of
+        # heap (5 MB for the 238, measured by invalidating the cache),
+        # so a full cache costs ~11 MB plus its loaded-class metadata.
+        .config("spark.sql.codegen.cache.maxEntries", "500")
         # ANSI off: we rely on wrap-around-free integer ranges but want
         # slice()/element_at() permissive semantics identical to DuckDB's
         # list ops for the oracle comparisons.

@@ -206,9 +206,11 @@ DSIR_G_MOD = 1 << 20
 # train predicate: operators/split.py affine bucket < 80 (the 'train'
 # split — same arithmetic the NB quality filter trains on)
 _DSIR_SPLIT = "((({id}) * 9973 + 12345) % 100) < 80"
+# NULL token elements are not distinct values (DuckDB's list_distinct
+# drops them; Spark's array_distinct would keep one)
 _DSIR_TARGET = {
-    True: "case when size(array_distinct(tokens)) * 2 >= n_tok "
-    "then 1 else 0 end",
+    True: "case when size(array_distinct(filter(tokens, t -> t is not null)))"
+    " * 2 >= n_tok then 1 else 0 end",
     False: "CASE WHEN len(list_distinct(tokens)) * 2 >= n_tok "
     "THEN 1 ELSE 0 END",
 }
@@ -319,47 +321,55 @@ def _dsir_fit_literals_kernel(tokseq: DataFrame) -> list[int]:
 
     v, m1, m2, off = DSIR_BUCKETS, DSIR_M1, DSIR_M2, DSIR_OFF
 
+    def cell(t):
+        # (int64 values, non-null mask): Arrow hands an int list with
+        # NULL elements over as floats with NaN
+        a = np.asarray(() if t is None else t)
+        ok = ~pd.isna(a)
+        return np.where(ok, a, 0).astype(np.int64), ok
+
+    def cat(parts, dtype):
+        return np.concatenate(parts) if parts else np.empty(0, dtype)
+
     def run(batches):
-        c1 = np.zeros(v, dtype=np.int64)
-        c0 = np.zeros(v, dtype=np.int64)
+        # slot v holds the features that touch a NULL element: they count
+        # toward the split totals but in no bucket (the SQL trainer's
+        # NULL group)
+        c1 = np.zeros(v + 1, dtype=np.int64)
+        c0 = np.zeros(v + 1, dtype=np.int64)
         for pdf in batches:
             train = _train_mask_np(pdf["doc_id"].tolist())
             if not train.any():
                 continue
-            toks = [
-                np.asarray(() if t is None else t, dtype=np.int64)
-                for t, m in zip(pdf["tokens"], train)
-                if m
-            ]
+            cells = [cell(t) for t, m in zip(pdf["tokens"], train) if m]
+            toks = [t for t, _ in cells]
+            oks = [ok for _, ok in cells]
             n_tok = pdf["n_tok"].to_numpy()[train]
             lens = np.fromiter(
                 (len(t) for t in toks), dtype=np.int64, count=len(toks)
             )
-            allv = (
-                np.concatenate(toks) if toks else np.empty(0, np.int64)
-            )
+            allv, allok = cat(toks, np.int64), cat(oks, bool)
             doc_idx = np.repeat(np.arange(len(toks)), lens)
-            distinct = _distinct_counts_np(doc_idx, allv, len(toks))
+            distinct = _distinct_counts_np(
+                doc_idx[allok], allv[allok], len(toks)
+            )
             is_t = (distinct * 2 >= n_tok).astype(np.int64)
             blens = np.maximum(lens - 1, 0)
-            pairs = [t[:-1] * np.int64(m1) + t[1:] * np.int64(m2)
-                     for t in toks if len(t) > 1]
-            x = (
-                np.concatenate(pairs) + np.int64(off)
-                if pairs
-                else np.empty(0, np.int64)
-            )
-            buckets = x % np.int64(v)  # pmod: floor-mod, positive v
+            x = cat([t[:-1] * np.int64(m1) + t[1:] * np.int64(m2)
+                     for t in toks if len(t) > 1], np.int64) + np.int64(off)
+            pair_ok = cat([ok[:-1] & ok[1:] for ok in oks if len(ok) > 1],
+                          bool)
+            buckets = np.where(pair_ok, x % np.int64(v), v)  # pmod
             feat_t = np.repeat(is_t, blens)
-            c1 += np.bincount(buckets[feat_t == 1], minlength=v)
-            c0 += np.bincount(buckets[feat_t == 0], minlength=v)
+            c1 += np.bincount(buckets[feat_t == 1], minlength=v + 1)
+            c0 += np.bincount(buckets[feat_t == 0], minlength=v + 1)
         yield pd.DataFrame({"c1": [c1.tolist()], "c0": [c0.tolist()]})
 
     parts = tokseq.select("doc_id", "tokens", "n_tok").mapInPandas(
         run, schema="c1 array<long>, c0 array<long>"
     ).collect()
-    c1 = [sum(p.c1[i] for p in parts) for i in range(v)]
-    c0 = [sum(p.c0[i] for p in parts) for i in range(v)]
+    c1 = [sum(p.c1[i] for p in parts) for i in range(v + 1)]
+    c0 = [sum(p.c0[i] for p in parts) for i in range(v + 1)]
     n1, n0 = sum(c1), sum(c0)
     return [
         math.floor(
@@ -391,13 +401,22 @@ def dsir_weights(tokseq: DataFrame) -> DataFrame:
     short-doc union (an empty feature array folds to 0 by itself). The
     only remaining shuffle in the whole weighting job is the tiny
     fit's bucket aggregation.
+
+    NULL token elements: a bigram feature touching a NULL element is
+    NULL, and the score skips it — ``n_feats`` counts only the non-null
+    features and ``lw_micro`` sums only theirs, exactly what the old
+    explode + inner join (and the DuckDB twin) keep. The fit still counts
+    such features in the split totals, in no bucket, as the SQL trainer's
+    NULL group does.
     """
     lam_vals = _dsir_fit_literals_kernel(tokseq)
     arr = "array(%s)" % ", ".join(f"{int(w)}L" for w in lam_vals)
     feats = _dsir_feats(True)
+    # NULL features drop out of the fold instead of NULL-poisoning it
     fold = (
         f"aggregate({feats}, cast(0 as bigint), "
-        f"(acc, b) -> acc + element_at({arr}, cast(b as int) + 1))"
+        f"(acc, b) -> acc + coalesce(element_at({arr}, cast(b as int) + 1), "
+        f"cast(0 as bigint)))"
     )
     num = "CAST(regexp_replace(doc_id, '[^0-9]', '') AS BIGINT)"
     g = _dsir_gumbel(num)
@@ -405,7 +424,9 @@ def dsir_weights(tokseq: DataFrame) -> DataFrame:
         "doc_id",
         "source",
         "n_tok",
-        F.expr(f"cast(size({feats}) as bigint)").alias("n_feats"),
+        F.expr(
+            f"cast(size(filter({feats}, b -> b is not null)) as bigint)"
+        ).alias("n_feats"),
         F.expr(fold).alias("lw_micro"),
     )
     return base.select(

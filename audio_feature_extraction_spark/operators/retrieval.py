@@ -184,6 +184,11 @@ def retrieval_topk(
     This is the in-session analog of :func:`write_postings_index` —
     at cluster scale a repeated workload reads the persistent index
     instead; pass ``materialize=False`` to keep the fully lazy plan.
+
+    ``materialize=True`` makes the CALL eager: ``docs.count()`` and the
+    postings ``localCheckpoint`` run Spark jobs before this function
+    returns. Both paths return the same rows; NULL and wordless text
+    count toward ``n_docs`` with document length 0.
     """
     post = postings(docs, text_col=text_col)
     if materialize:
@@ -210,9 +215,10 @@ def retrieval_topk(
             )
         )
     else:
-        scalars = docs.selectExpr(
-            "doc_id", f"size({_words(text_col, True)}) as dl"
-        ).agg(
+        # NULL text has no words: dl 0 (as in the postings), not the -1
+        # that size(NULL) returns
+        words = _words(f"coalesce({text_col}, '')", True)
+        scalars = docs.selectExpr("doc_id", f"size({words}) as dl").agg(
             F.count("*").alias("n_docs"),
             (
                 F.sum("dl").cast("double") / F.count("*").cast("double")

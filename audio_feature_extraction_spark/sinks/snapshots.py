@@ -17,6 +17,16 @@ actually relies on, with nothing but parquet + JSON + one atomic rename:
   old files on disk exactly like Iceberg until a GC/expire pass).
 * ``overwrite`` is a metadata operation: the new manifest simply lists
   only the new directory — no data deletion on the write path.
+* a manifest carries the committed schema twice: ``schema`` (the
+  ``simpleString``, for people) and ``schema_json`` (the writer's
+  ``StructType`` as JSON). ``read_snapshot`` hands ``schema_json`` to the
+  parquet reader, so a read starts no schema-inference job (a one-task
+  footer scan per read otherwise). Parquet reads make every field
+  nullable either way, so rows and schema equal an inferred read's. A
+  manifest without the field — an older writer's, or an append whose
+  names or types differ from its parent's, where the data dirs
+  disagree — falls back to inference, exactly like a plain
+  ``spark.read.parquet`` of its dirs.
 
 At cluster scale the manifest lists file-level stats and lives next to
 the data on object storage; the commit protocol (exclusive manifest
@@ -34,6 +44,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
@@ -157,9 +168,11 @@ def write_snapshot(
     stage_rel = f"data/s-{uuid.uuid4().hex[:12]}"
     staged_abs = os.path.join(table_dir, "data", stage_rel.split("/", 1)[1])
     df.write.parquet(staged_abs)
+    schema = df.schema
     props = dict(properties or {})
     if properties_fn is not None:
-        props.update(properties_fn(df.sparkSession.read.parquet(staged_abs)))
+        staged = df.sparkSession.read.schema(schema).parquet(staged_abs)
+        props.update(properties_fn(staged))
 
     for _ in range(max_retries):
         cur = current_version(table_dir)
@@ -170,16 +183,28 @@ def write_snapshot(
         while os.path.exists(_manifest_path(table_dir, version)):
             version += 1
         dirs = [stage_rel]
+        schema_json = schema.jsonValue()
         if mode == "append" and cur is not None:
-            dirs = _load_manifest(table_dir, cur)["data_dirs"] + dirs
+            parent = _load_manifest(table_dir, cur)
+            dirs = parent["data_dirs"] + dirs
+            # the schema holds while every dir agrees on names and types
+            # (a parquet read makes all fields nullable anyway); past
+            # that, inference decides, as for a plain read of the dirs
+            if (
+                "schema_json" not in parent
+                or parent["schema"] != schema.simpleString()
+            ):
+                schema_json = None
         manifest = {
             "version": version,
             "parent": cur,
             "op": mode,
             "data_dirs": dirs,
-            "schema": df.schema.simpleString(),
+            "schema": schema.simpleString(),
             "properties": props,
         }
+        if schema_json is not None:
+            manifest["schema_json"] = schema_json
         try:
             # O_EXCL create = the commit lock: exactly one writer can own
             # a version number; a loser re-reads _current and retries
@@ -207,7 +232,9 @@ def read_snapshot(
 
     Only versions on the committed chain are readable — an orphan
     manifest (crashed writer, never pointer-swapped) raises instead of
-    silently exposing uncommitted data."""
+    silently exposing uncommitted data. The schema comes from the
+    manifest's ``schema_json`` when it has one, so the read starts no
+    Spark job; otherwise parquet infers it."""
     if version is None:
         version = current_version(table_dir)
         if version is None:
@@ -219,7 +246,10 @@ def read_snapshot(
         )
     m = _load_manifest(table_dir, version)
     paths = [os.path.join(table_dir, d) for d in m["data_dirs"]]
-    return spark.read.parquet(*paths)
+    reader = spark.read
+    if "schema_json" in m:
+        reader = reader.schema(StructType.fromJson(m["schema_json"]))
+    return reader.parquet(*paths)
 
 
 def snapshot_properties(table_dir: str, version: int | None = None) -> dict:

@@ -5,7 +5,13 @@ contract; bench.py stays the frozen measurement. Usage:
 
 Builds the same amplified inputs as bench.py (reuses the /tmp parquet
 cache), warms the page cache the same way, and times each named query
-best-of-N with the noop sink, printing one JSON line.
+best-of-N with the noop sink, printing one JSON line. Next to each
+query's per-rep ``samples`` it prints ``codegen_compiles``: the classes
+Janino compiled during that rep (the ``CodegenMetrics`` compilation
+count delta). A warm rep should compile 0; a nonzero warm count means
+the rep generated code it could not reuse, either because the cache
+evicted the query's classes or because the query generates new code
+on every call.
 """
 
 from __future__ import annotations
@@ -95,19 +101,26 @@ def main() -> None:
         )
     )
     _noop(ev)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     timings = {}
     for name in args or list(queries):
         thunk = queries[name]
         best = float("inf")
-        samples = []
+        samples, compiles = [], []
         for _ in range(reps):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+            c0 = codegen.METRIC_COMPILATION_TIME().getCount()
             t0 = time.perf_counter()
             _noop(thunk())
             dt = time.perf_counter() - t0
             samples.append(round(dt, 3))
+            compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - c0)
             best = min(best, dt)
-        timings[name] = {"best": round(best, 3), "samples": samples}
+        timings[name] = {
+            "best": round(best, 3),
+            "samples": samples,
+            "codegen_compiles": compiles,
+        }
     print(json.dumps({"queries": timings, "load": os.getloadavg()[0]}))
     spark.stop()
 

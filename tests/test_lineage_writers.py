@@ -440,3 +440,106 @@ def test_snapshot_pipeline_resume_no_duplicates(spark, tmp_path):
     v_before = sn.current_version(os.path.join(base_a, "stage=extracted"))
     p.run_stage(df, "extracted", "k", fn)
     assert sn.current_version(os.path.join(base_a, "stage=extracted")) == v_before
+
+
+def _inferred_read(spark, table_dir, version):
+    """A plain inferred parquet read of one snapshot's data dirs."""
+    import os
+
+    from audio_feature_extraction_spark.sinks import snapshots as sn
+
+    dirs = sn._load_manifest(table_dir, version)["data_dirs"]
+    return spark.read.parquet(*[os.path.join(table_dir, d) for d in dirs])
+
+
+def _sorted_rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def _wide(spark, lo, hi):
+    """Non-nullable scalars plus nested types, whose nullability a
+    parquet read relaxes everywhere."""
+    return spark.range(lo, hi).select(
+        "id",
+        F.col("id").cast("int").alias("i"),
+        F.array(F.col("id"), F.lit(7)).alias("arr"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.struct(F.col("id").alias("x"), F.lit("s").alias("y")).alias("st"),
+        F.lit(None).cast("string").alias("maybe"),
+        F.col("id").cast("decimal(12,3)").alias("dec"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+    )
+
+
+def test_snapshot_schema_from_manifest_matches_inference(spark, tmp_path):
+    """Overwrite, append and time-travel reads take their schema from
+    the manifest, and get the schema (nullability included) and rows a
+    plain inferred parquet read of the same dirs gets."""
+    from audio_feature_extraction_spark.sinks import snapshots as sn
+
+    t = str(tmp_path / "tbl")
+    sn.write_snapshot(_wide(spark, 0, 4), t, mode="overwrite")   # v0
+    sn.write_snapshot(_wide(spark, 10, 13), t, mode="append")    # v1
+    sn.write_snapshot(_wide(spark, 20, 22), t, mode="overwrite")  # v2
+    for v in (0, 1, 2):
+        assert "schema_json" in sn._load_manifest(t, v)
+        got = sn.read_snapshot(spark, t, version=v)
+        want = _inferred_read(spark, t, v)
+        assert got.schema == want.schema
+        assert all(f.nullable for f in got.schema.fields)
+        assert _sorted_rows(got) == _sorted_rows(want)
+    assert sn.read_snapshot(spark, t).count() == 2
+    assert sn.read_snapshot(spark, t, version=1).count() == 7
+
+
+def test_snapshot_without_schema_json_reads_by_inference(spark, tmp_path):
+    """A manifest written before ``schema_json`` existed still reads
+    (parquet infers its schema), and an append on top of it leaves the
+    field out too, since its parent's dirs carry no recorded schema."""
+    import json
+    import os
+
+    from audio_feature_extraction_spark.sinks import snapshots as sn
+
+    t = str(tmp_path / "tbl")
+    sn.write_snapshot(_wide(spark, 0, 3), t)
+    path = os.path.join(t, "manifest-0.json")
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema_json"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    got = sn.read_snapshot(spark, t)
+    assert got.schema == _inferred_read(spark, t, 0).schema
+    assert sorted(r.id for r in got.collect()) == [0, 1, 2]
+    v = sn.write_snapshot(_wide(spark, 5, 7), t, mode="append")
+    assert "schema_json" not in sn._load_manifest(t, v)
+    assert sorted(r.id for r in sn.read_snapshot(spark, t).collect()) == [
+        0, 1, 2, 5, 6
+    ]
+
+
+def test_snapshot_append_with_new_schema_falls_back_to_inference(
+    spark, tmp_path
+):
+    """An append whose names or types differ from its parent's leaves
+    ``schema_json`` out, so its dirs read exactly as a plain inferred
+    parquet read of them does; a later overwrite records it again."""
+    from audio_feature_extraction_spark.sinks import snapshots as sn
+
+    t = str(tmp_path / "tbl")
+    sn.write_snapshot(spark.range(0, 3), t)                          # v0
+    wider = spark.range(3, 5).withColumn("extra", F.lit("x"))
+    sn.write_snapshot(wider, t, mode="append")                      # v1
+    renamed = spark.range(5, 6).withColumnRenamed("id", "k")
+    sn.write_snapshot(renamed, t, mode="append")                    # v2
+    for v in (1, 2):
+        assert "schema_json" not in sn._load_manifest(t, v)
+        got = sn.read_snapshot(spark, t, version=v)
+        want = _inferred_read(spark, t, v)
+        assert got.schema == want.schema
+        assert _sorted_rows(got) == _sorted_rows(want)
+    # the parent's recorded schema still serves time travel to v0
+    assert "schema_json" in sn._load_manifest(t, 0)
+    sn.write_snapshot(spark.range(9, 10), t, mode="overwrite")      # v3
+    assert "schema_json" in sn._load_manifest(t, 3)

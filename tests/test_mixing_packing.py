@@ -172,6 +172,56 @@ def test_dsir_lm_parity_on_extreme_token_ids(spark):
         assert (sl[c].values == ol[c].values).all(), c
 
 
+def test_dsir_null_token_elements_match_duckdb(spark):
+    """A NULL element inside a tokens array nulls the bigram features
+    that touch it. Those features drop out of the fold, so ``n_feats``
+    and ``lw_micro`` cover only the non-null features, and the fit
+    counts them in the split totals but in no bucket. Spark and the
+    DuckDB twin must agree row for row, and the kernel fit must agree
+    with the SQL trainer."""
+    import duckdb
+    import pandas as pd
+
+    rows = []
+    for i in range(30):
+        toks = [(i * 13 + j * 7) % 50 for j in range(8)]
+        if i % 3 == 0:
+            toks[i % 8] = None          # one null element, varying place
+        rows.append((f"doc_{i}", toks, len(toks), "web"))
+    rows.append(("doc_allnull", [None, None, None], 3, "web"))
+    rows.append(("doc_nullpair", [None, 5], 2, "web"))
+    # NULL is no distinct value: 2 distinct of 5 is not target-like
+    rows += [(f"doc_{40 + i}", [1, 2, None, None, None], 5, "web")
+             for i in range(6)]
+    tokseq = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+
+    sw = mixing.dsir_weights(tokseq).orderBy("doc_id").toPandas()
+    con = duckdb.connect()
+    con.register(
+        "tokseq_t",
+        pd.DataFrame(rows, columns=["doc_id", "tokens", "n_tok", "source"]),
+    )
+    ow = con.execute(
+        "WITH tokseq AS (SELECT doc_id, CAST(tokens AS BIGINT[]) AS tokens, "
+        f"n_tok, source FROM tokseq_t), "
+        f"{mixing.dsir_weights_oracle_sql('tokseq')} ORDER BY doc_id"
+    ).df()
+    assert list(sw["doc_id"]) == list(ow["doc_id"])
+    for c in ["n_feats", "lw_micro", "key_micro"]:
+        assert sw[c].notna().all(), c
+        assert (sw[c].values == ow[c].values).all(), c
+    by_id = sw.set_index("doc_id")
+    assert by_id.loc["doc_allnull", "n_feats"] == 0
+    assert by_id.loc["doc_allnull", "lw_micro"] == 0
+    assert by_id.loc["doc_0", "n_feats"] == 6   # 7 bigrams, 1 touches null
+    # the kernel fit agrees with the SQL trainer on null elements too
+    kl = mixing._dsir_fit_literals_kernel(tokseq)
+    sl = {r.b: int(r.lam) for r in mixing.dsir_lambda_table(tokseq).collect()}
+    assert kl == [sl[b] for b in range(mixing.DSIR_BUCKETS)]
+
+
 def test_lm_perplexity_separates_quality(spark, quality_corpus):
     from audio_feature_extraction_spark.operators import textstats
 
@@ -561,3 +611,83 @@ def test_prepare_corpus_bpe_stage(spark):
     # packing conserves the subword token count
     total = mixed.agg(F.sum("n_tok")).collect()[0][0]
     assert blocks.agg(F.sum("slice_len")).collect()[0][0] == total
+
+
+def test_prepare_corpus_warm_call_compiles_nothing(spark, tmp_path):
+    """Regression guard for the per-call fixed cost of snapshot mode.
+    A second call over the same inputs finds every generated class in
+    the codegen cache (0 Janino compilations; the session's cache holds
+    a whole call's working set), and reading a committed stage back
+    takes its schema from the manifest, so it starts no Spark job."""
+    import os
+
+    from audio_feature_extraction_spark.plans import corpus
+    from audio_feature_extraction_spark.sinks import snapshots as sn
+    from audio_feature_extraction_spark.sources.tokens import tokenize_expr
+
+    def words(seed, n):
+        return " ".join(
+            chr(97 + (seed * 5 + i * 3) % 26)
+            + "x" * ((seed * 3 + i) % 7)
+            + chr(97 + (seed * 11 + i * 7) % 26)
+            for i in range(n)
+        )
+
+    rows = [(i, words(i, 30), "en", ["web", "wiki"][i % 2], 0)
+            for i in range(24)]
+    rows.append((100, rows[0][1], "en", "web", 0))  # exact dup
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    toks = tokenize_expr()
+    tokseq = docs.select(
+        F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias("doc_id"),
+        toks.alias("tokens"),
+        F.size(toks).cast("int").alias("n_tok"),
+        "source",
+    )
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    sc = spark.sparkContext
+
+    def run(resume):
+        cfg = corpus.CorpusConfig(
+            block_len=64, accounting=False, resume_dir=resume,
+            substring_k=8, semdedup_threshold=0.9, semdedup_clusters=4,
+            nb_min_score=0, dsir_k=12,
+        )
+        mixed, blocks, _ = corpus.prepare_corpus(
+            spark, "", cfg=cfg, docs=docs, tokseq=tokseq, emb=emb
+        )
+        return [sorted(map(repr, df.collect())) for df in (mixed, blocks)]
+
+    def compiles():
+        return compiled.METRIC_COMPILATION_TIME().getCount()
+
+    first = run(str(tmp_path / "r1"))
+    before = compiles()
+    assert run(str(tmp_path / "r2")) == first
+    assert compiles() - before == 0
+
+    def jobs_started(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    table = str(tmp_path / "r2" / "stage=after_quality")
+    assert jobs_started(
+        "guard-read-snapshot", lambda: sn.read_snapshot(spark, table)
+    ) == 0
+    # the inferred read of the same dirs does start one (the control)
+    dirs = sn._load_manifest(table, sn.current_version(table))["data_dirs"]
+    paths = [os.path.join(table, d) for d in dirs]
+    assert jobs_started(
+        "guard-inferred-read", lambda: spark.read.parquet(*paths)
+    ) >= 1

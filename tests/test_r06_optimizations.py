@@ -74,14 +74,16 @@ def test_dsir_fit_kernel_matches_sql_trainer(spark):
 
 def test_retrieval_scalars_from_postings_with_wordless_docs(spark):
     """The materialized path derives n_docs/avgdl from the postings
-    relation + a metadata count; wordless docs contribute dl=0 either
-    way, so both paths must return identical rows and scores."""
+    relation + a metadata count; wordless and NULL-text docs contribute
+    dl=0 either way, so both paths must return identical rows and
+    scores."""
     docs = spark.createDataFrame(
         [
             (1, "alpha beta beta gamma"),
             (2, "alpha gamma gamma delta epsilon"),
             (3, ""),              # wordless: counted in n_docs, dl 0
             (4, "   "),           # whitespace-only: same
+            (6, None),            # NULL text: same (not size(NULL) = -1)
             (5, "beta delta zeta eta theta iota"),
         ],
         "doc_id long, text string",
