@@ -12,6 +12,16 @@ size comes from a measured working set: one snapshot-mode
 ``prepare_corpus`` call with every stage on compiles 238 distinct
 classes, which Spark's 100-entry default evicted on every call. 500
 gives 2x headroom at ~21 KB of heap per cached class (~11 MB when full).
+
+For ``local`` masters the Python workers run from the daemon module
+:mod:`~audio_feature_extraction_spark.core.pyworker`. Stock workers
+re-read ``pyspark.zip``'s directory once per zip importer (16 of them)
+on every task, a fixed ~250 ms of worker CPU per task on Python 3.11;
+the module skips those re-reads while the archive is unchanged. Only
+local masters get it, because there the workers share the driver's
+filesystem: the session adds the package's parent directory to the
+executors' ``PYTHONPATH`` so the module imports from any working
+directory. Other masters keep Spark's stock daemon.
 """
 
 from __future__ import annotations
@@ -19,6 +29,32 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+DAEMON_MODULE = "audio_feature_extraction_spark.core.pyworker"
+_EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+# the directory the package is imported from (its parent)
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
+
+def _with_worker_conf(
+    master: str, extra_conf: dict[str, str] | None
+) -> dict[str, str]:
+    """``extra_conf`` plus, for ``local`` masters, the Python daemon
+    module of :mod:`~audio_feature_extraction_spark.core.pyworker` and an
+    executor ``PYTHONPATH`` that lets workers import it from any CWD
+    (the package's parent first, then any ``PYTHONPATH`` the caller
+    set). A daemon module the caller names wins. Other masters keep
+    Spark's stock daemon: their executors may see the package only
+    through ``--py-files``, which is not on the daemon's path."""
+    conf = dict(extra_conf or {})
+    if master == "local" or master.startswith("local["):
+        conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
+        conf[_EXECUTOR_PYTHONPATH] = os.pathsep.join(
+            filter(None, [_PACKAGE_PARENT, conf.get(_EXECUTOR_PYTHONPATH)])
+        )
+    return conf
 
 
 def get_spark(
@@ -79,9 +115,8 @@ def get_spark(
         # list ops for the oracle comparisons.
         .config("spark.sql.ansi.enabled", "false")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in _with_worker_conf(master, extra_conf).items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

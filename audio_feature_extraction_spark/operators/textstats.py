@@ -451,9 +451,11 @@ NB_MULT = 37
 NB_OFF = 11
 # train predicate: operators/split.py affine bucket < 80 (the 'train' split)
 _NB_SPLIT = "(({id} * 9973 + 12345) % 100) < 80"
+# NULL token elements are not distinct values (DuckDB's list_distinct
+# drops them; Spark's array_distinct would keep one)
 _NB_LABEL = {
-    True: "case when size(array_distinct(tokens)) * 2 >= n_tok "
-    "then 1 else 0 end",
+    True: "case when size(array_distinct(filter(tokens, t -> t is not null)))"
+    " * 2 >= n_tok then 1 else 0 end",
     False: "CASE WHEN len(list_distinct(tokens)) * 2 >= n_tok "
     "THEN 1 ELSE 0 END",
 }
@@ -555,15 +557,19 @@ def _nb_fit_literals_kernel(tokseq: DataFrame) -> tuple[list[int], int | None]:
     v, a, b = NB_BUCKETS, NB_MULT, NB_OFF
 
     def run(batches):
-        c1 = np.zeros(v, dtype=np.int64)
-        c0 = np.zeros(v, dtype=np.int64)
+        # slot v holds the NULL token elements: they count toward the
+        # split totals but in no bucket (the SQL trainer's NULL group)
+        c1 = np.zeros(v + 1, dtype=np.int64)
+        c0 = np.zeros(v + 1, dtype=np.int64)
         d1 = d0 = 0
         for pdf in batches:
             train = _train_mask_np(pdf["doc_id"].tolist())
             if not train.any():
                 continue
+            # Arrow hands an int list with NULL elements over as floats
+            # with NaN
             toks = [
-                np.asarray(() if t is None else t, dtype=np.int64)
+                np.asarray(() if t is None else t)
                 for t, m in zip(pdf["tokens"], train)
                 if m
             ]
@@ -571,11 +577,13 @@ def _nb_fit_literals_kernel(tokseq: DataFrame) -> tuple[list[int], int | None]:
             lens = np.fromiter(
                 (len(t) for t in toks), dtype=np.int64, count=len(toks)
             )
-            allv = (
-                np.concatenate(toks) if toks else np.empty(0, np.int64)
-            )
+            cat = np.concatenate(toks) if toks else np.empty(0, np.int64)
+            ok = ~pd.isna(cat)
+            allv = np.where(ok, cat, 0).astype(np.int64)
             doc_idx = np.repeat(np.arange(len(toks)), lens)
-            distinct = _distinct_counts_np(doc_idx, allv, len(toks))
+            distinct = _distinct_counts_np(
+                doc_idx[ok], allv[ok], len(toks)
+            )
             label = (distinct * 2 >= n_tok).astype(np.int64)
             d1 += int(label.sum())
             d0 += int(len(label) - label.sum())
@@ -584,10 +592,10 @@ def _nb_fit_literals_kernel(tokseq: DataFrame) -> tuple[list[int], int | None]:
             # is exactly floor-mod for the positive modulus
             with np.errstate(over="ignore"):
                 x = allv.astype(np.int32) * np.int32(a) + np.int32(b)
-            buckets = x.astype(np.int64) % np.int64(v)
+            buckets = np.where(ok, x.astype(np.int64) % np.int64(v), v)
             feat_label = np.repeat(label, lens)
-            c1 += np.bincount(buckets[feat_label == 1], minlength=v)
-            c0 += np.bincount(buckets[feat_label == 0], minlength=v)
+            c1 += np.bincount(buckets[feat_label == 1], minlength=v + 1)
+            c0 += np.bincount(buckets[feat_label == 0], minlength=v + 1)
         yield pd.DataFrame(
             {
                 "c1": [c1.tolist()],
@@ -601,8 +609,8 @@ def _nb_fit_literals_kernel(tokseq: DataFrame) -> tuple[list[int], int | None]:
         run,
         schema="c1 array<long>, c0 array<long>, d1 long, d0 long",
     ).collect()
-    c1 = [sum(p.c1[i] for p in parts) for i in range(v)]
-    c0 = [sum(p.c0[i] for p in parts) for i in range(v)]
+    c1 = [sum(p.c1[i] for p in parts) for i in range(v + 1)]
+    c0 = [sum(p.c0[i] for p in parts) for i in range(v + 1)]
     d1 = sum(p.d1 for p in parts)
     d0 = sum(p.d0 for p in parts)
     n1, n0 = sum(c1), sum(c0)
@@ -714,11 +722,16 @@ def nb_quality(tokseq: DataFrame) -> DataFrame:
     compiles into one integer fold per doc (the :func:`nb_expr_score`
     serving shape) — bit-identical to :func:`nb_score`'s explode →
     broadcast-join → groupBy plan (integer sums are order-free; the
-    ``coalesce`` reproduces the join's null-bucket drop; the size
-    filter reproduces explode semantics for empty docs), but the
-    scoring side ships zero rows through any exchange. Only the tiny
-    fit still shuffles. Use :func:`nb_train` + :func:`nb_score` to
+    ``coalesce`` reproduces the join's null-bucket drop; the non-null
+    filter reproduces the join dropping docs with no bucketed token,
+    empty ones included), but the scoring side ships zero rows through
+    any exchange. Only the tiny fit still shuffles. Use :func:`nb_train` + :func:`nb_score` to
     score with a *stored* model table instead.
+
+    NULL token elements land in no bucket, so the join drops them: they
+    add nothing to a score, a doc with no non-null element drops out
+    like an empty one, and the label counts only non-null distinct
+    values (DuckDB's ``list_distinct``).
     """
     weights, prior = _nb_fit_literals_kernel(tokseq)
     v, a, b = NB_BUCKETS, NB_MULT, NB_OFF
@@ -731,7 +744,7 @@ def nb_quality(tokseq: DataFrame) -> DataFrame:
         f"(acc, t) -> acc + coalesce(element_at({arr}, "
         f"((t * {a} + {b}) % {v} + {v}) % {v} + 1), cast(0 as bigint)))"
     )
-    return tokseq.where(F.expr("size(tokens) > 0")).select(
+    return tokseq.where(F.expr("exists(tokens, t -> t is not null)")).select(
         "doc_id",
         F.expr(_NB_LABEL[True]).alias("weak_label"),
         F.expr(score).cast("long").alias("nb_score_micro"),

@@ -39,7 +39,11 @@ from audio_feature_extraction_spark.core.config import DEFAULT_FRAME, FrameSpec
 
 CHUNK_SCHEMA = "doc_id string, chunk_id int, chunk_tokens array<int>"
 FRAME_OUT_SCHEMA = "doc_id string, frame_id int, frame_tokens array<int>"
-STATE_SCHEMA = "pos long, tail array<int>, next_frame long"
+# The carried tail is stored as little-endian int32 bytes, not as
+# array<int>: Spark builds the state encoder afresh each micro-batch, and
+# an array field's MapObjects lambda variable gets a new id every time,
+# so each trigger missed the codegen cache and compiled one class.
+STATE_SCHEMA = "pos long, tail binary, next_frame long"
 
 
 def _emit_frames(
@@ -87,6 +91,11 @@ def stateful_frames(
     dropped — without it, a stream that never ends pins every doc's tail
     in the state store forever. Timeouts fire on the next micro-batch
     after expiry (ProcessingTimeTimeout semantics).
+
+    State layout: ``STATE_SCHEMA`` keeps the tail as int32 bytes, so a
+    trigger compiles no new state encoder. Checkpoints written while the
+    tail was ``array<int>`` are incompatible: Spark refuses to resume
+    them with a state schema error.
     """
     from audio_feature_extraction_spark.operators.framing import require_causal
 
@@ -102,7 +111,7 @@ def stateful_frames(
         kspec = FrameSpec(frame_len=l, hop=h)
         if state.exists:
             pos, tail, next_frame = state.get
-            tail = list(tail)
+            tail = np.frombuffer(tail, "<i4").tolist()
         else:
             pos, tail, next_frame = 0, [], 0
         rows = []
@@ -125,7 +134,7 @@ def stateful_frames(
         frames, pos, tail, next_frame = _emit_frames(
             tail, pos, next_frame, kspec, flush=False
         )
-        state.update((pos, tail, next_frame))
+        state.update((pos, np.asarray(tail, "<i4").tobytes(), next_frame))
         if timeout_ms is not None:
             state.setTimeoutDuration(timeout_ms)
         for fid, ft in frames:
@@ -194,7 +203,8 @@ def stream_feature_extract(
     design.md:1811-1846): stateful frame assembly -> per-micro-batch
     featurization -> append sink, with exactly-once progress via the
     checkpoint (restart resumes where the last trigger committed —
-    T10 NFR-4.1 on the streaming side).
+    T10 NFR-4.1 on the streaming side). Checkpoints from before the
+    binary tail state (see :func:`stateful_frames`) do not resume.
     """
     from audio_feature_extraction_spark.operators.framing import (
         featurize_frames_sql,

@@ -11,7 +11,10 @@ Janino compiled during that rep (the ``CodegenMetrics`` compilation
 count delta). A warm rep should compile 0; a nonzero warm count means
 the rep generated code it could not reuse, either because the cache
 evicted the query's classes or because the query generates new code
-on every call.
+on every call. ``python_worker_cpu_s`` is each rep's CPU time in the
+Python workers: user+system time, reaped children's included, of every
+descendant of the Spark JVM (the pyspark daemon and its forked
+workers), read from ``/proc``.
 """
 
 from __future__ import annotations
@@ -30,6 +33,32 @@ AMPLIFY = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "20"))
 
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _descendant_cpu_s(root: int) -> float:
+    """utime+stime+cutime+cstime of ``root``'s live descendants (not
+    ``root`` itself), in seconds; a finished worker's time sits in the
+    counters of the daemon that reaped it."""
+    stats = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                raw = f.read()
+        except OSError:  # the process ended between listing and reading
+            continue
+        # comm may hold spaces; the fields after the last ')' are fixed
+        stats[int(name)] = raw[raw.rindex(")") + 2 :].split()
+    children: dict[int, list[int]] = {}
+    for pid, fields in stats.items():
+        children.setdefault(int(fields[1]), []).append(pid)
+    ticks, todo = 0, list(children.get(root, ()))
+    while todo:
+        pid = todo.pop()
+        ticks += sum(int(x) for x in stats[pid][11:15])
+        todo.extend(children.get(pid, ()))
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def main() -> None:
@@ -102,24 +131,28 @@ def main() -> None:
     )
     _noop(ev)
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jvm_pid = spark.sparkContext._gateway.proc.pid
     timings = {}
     for name in args or list(queries):
         thunk = queries[name]
         best = float("inf")
-        samples, compiles = [], []
+        samples, compiles, worker_cpu = [], [], []
         for _ in range(reps):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+            w0 = _descendant_cpu_s(jvm_pid)
             t0 = time.perf_counter()
             _noop(thunk())
             dt = time.perf_counter() - t0
             samples.append(round(dt, 3))
             compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - c0)
+            worker_cpu.append(round(_descendant_cpu_s(jvm_pid) - w0, 3))
             best = min(best, dt)
         timings[name] = {
             "best": round(best, 3),
             "samples": samples,
             "codegen_compiles": compiles,
+            "python_worker_cpu_s": worker_cpu,
         }
     print(json.dumps({"queries": timings, "load": os.getloadavg()[0]}))
     spark.stop()

@@ -222,6 +222,60 @@ def test_dsir_null_token_elements_match_duckdb(spark):
     assert kl == [sl[b] for b in range(mixing.DSIR_BUCKETS)]
 
 
+@pytest.mark.parametrize("op", ["nb_quality", "lm_perplexity"])
+def test_null_token_elements_match_duckdb(spark, op):
+    """nb_quality and lm_perplexity agree with their DuckDB twins row for
+    row when tokens arrays hold NULL elements: NB drops NULL tokens from
+    the label's distinct count and from every bucket (a doc with no
+    non-null token drops out), LM counts a bigram touching NULL with the
+    unseen-bucket weight. NB's kernel fit agrees with its SQL trainer."""
+    import duckdb
+    import pandas as pd
+
+    from audio_feature_extraction_spark.operators import textstats
+
+    rows = []
+    for i in range(30):
+        toks = [(i * 13 + j * 7) % 50 for j in range(8)]
+        if i % 3 == 0:
+            toks[i % 8] = None          # one null element, varying place
+        rows.append((f"doc_{i}", toks, len(toks), "web"))
+    # digit-bearing ids: the NB twin CASTs the id's digits, which
+    # DuckDB refuses for an id without any
+    rows.append(("doc_90", [None, None, None], 3, "web"))
+    rows.append(("doc_91", [None, 5], 2, "web"))
+    # NULL is no distinct value: 2 distinct of 5 is not label-1
+    rows += [(f"doc_{40 + i}", [1, 2, None, None, None], 5, "web")
+             for i in range(6)]
+    tokseq = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+    got = getattr(textstats, op)(tokseq).orderBy("doc_id").toPandas()
+    con = duckdb.connect()
+    con.register(
+        "tokseq_t",
+        pd.DataFrame(rows, columns=["doc_id", "tokens", "n_tok", "source"]),
+    )
+    want = con.execute(
+        "WITH tokseq AS (SELECT doc_id, CAST(tokens AS BIGINT[]) AS tokens, "
+        "n_tok, source FROM tokseq_t), "
+        f"{getattr(textstats, op + '_oracle_sql')('tokseq')} ORDER BY doc_id"
+    ).df()
+    assert list(got["doc_id"]) == list(want["doc_id"])
+    assert list(got.columns) == list(want.columns)
+    for c in got.columns[1:]:
+        assert got[c].notna().all(), c
+        assert (got[c].values == want[c].values).all(), c
+    if op == "nb_quality":
+        assert "doc_90" not in set(got["doc_id"])  # no non-null token
+        mostly_null = got["doc_id"].isin([f"doc_{40 + i}" for i in range(6)])
+        assert set(got.loc[mostly_null, "weak_label"]) == {0}
+        wtab, pri = textstats.nb_train(tokseq)
+        assert textstats._nb_fit_literals_kernel(
+            tokseq
+        ) == textstats.nb_model_literals(wtab, pri)
+
+
 def test_lm_perplexity_separates_quality(spark, quality_corpus):
     from audio_feature_extraction_spark.operators import textstats
 

@@ -155,6 +155,43 @@ def test_stream_extract_with_restart(spark, tmp_path):
     assert len(got) > 2  # frames from both sides of the restart
 
 
+def test_stream_trigger_compiles_nothing_when_warm(spark, tmp_path):
+    """A warm trigger of the stateful stream generates no new classes:
+    the state encoder, the frame kernel's plan and the sink all hit the
+    codegen cache. A state schema with an array field makes Spark
+    generate a fresh state encoder, and so compile, on every trigger."""
+    spec = FrameSpec(frame_len=4, hop=2)
+    src = tmp_path / "in"
+    src.mkdir()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    chunks = (
+        spark.readStream.schema(stream.CHUNK_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src / "*"))
+    )
+    q = stream.stream_feature_extract(
+        chunks, str(tmp_path / "out"), str(tmp_path / "ck"), spec
+    )
+    per_trigger = []
+    try:
+        for i in range(5):
+            # docs carried from the previous trigger and one new doc
+            rows = [(f"d{j}", i, list(range(10 * i, 10 * i + 5)))
+                    for j in range(i + 1)]
+            spark.createDataFrame(rows, stream.CHUNK_SCHEMA).coalesce(
+                1
+            ).write.parquet(str(src / f"b{i}"))
+            before = codegen.METRIC_COMPILATION_TIME().getCount()
+            q.processAllAvailable()
+            per_trigger.append(
+                codegen.METRIC_COMPILATION_TIME().getCount() - before
+            )
+    finally:
+        q.stop()
+    # the first two triggers warm up (the second is the first to read state)
+    assert per_trigger[2:] == [0, 0, 0], per_trigger
+
+
 @pytest.mark.slow
 def test_stream_latency_listener(spark, tmp_path):
     """≙ LatencyMonitor (design.md:2005-2061): per-micro-batch trigger
