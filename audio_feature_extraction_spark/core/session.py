@@ -27,6 +27,7 @@ directory. Other masters keep Spark's stock daemon.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -57,6 +58,15 @@ def _with_worker_conf(
     return conf
 
 
+def master_cores(master: str, default: int) -> int:
+    """Parallelism of a master URL, to size the shuffle width: N for
+    ``local[N]`` and ``local[N,F]`` (F = task retries), ``default`` for
+    anything else (``local``, ``local[*]``, ``local-cluster[...]``,
+    cluster URLs)."""
+    m = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", master)
+    return int(m.group(1)) if m else default
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "audio_feature_extraction_spark",
@@ -70,10 +80,8 @@ def get_spark(
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
-    # parse N from local[N] so shuffle width tracks parallelism
     if shuffle_partitions is None:
-        inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-        shuffle_partitions = cpus if inner in ("", "*") else int(inner)
+        shuffle_partitions = master_cores(master, cpus)
 
     builder = (
         SparkSession.builder.master(master)

@@ -722,8 +722,6 @@ def duplicate_gram_spans(
     tokseq: DataFrame,
     k: int = 16,
     min_count: int = 2,
-    prefilter: bool = True,
-    gather: bool | None = None,
 ) -> DataFrame:
     """Substring-level duplicate spans (the ExactSubstr analog of Lee
     et al., "Deduplicating Training Data Makes Language Models Better"):
@@ -734,138 +732,30 @@ def duplicate_gram_spans(
     and adjacent duplicated grams merge into one span (parallel-prefix:
     running-max-end flag + cumulative sum, one window per doc).
 
-    Scale path (``prefilter=True``, the default): pass 1 explodes ONLY
-    ``(doc_id, pos, xxhash64(gram))`` — never the k-token arrays — and
-    counts on the 8-byte hash (map-side partial agg, narrow key). The
-    hash counts are checkpointed once and reused by every consumer, so
-    the widest narrow pass runs a single time. Pass 2 then picks one of
-    two physical shapes for materializing the full grams the exact
-    verification needs (hash collisions can only ADD false candidates,
-    never drop a true duplicate — all occurrences of a gram share its
-    hash, so a hot hash admits every occurrence and the candidate-local
-    exact count equals the corpus count):
-
-    * ``gather`` (VERDICT r04 #6, the sparse-duplicate scale shape):
-      semi-join the hash-only position stream against the hot set,
-      collect each doc's candidate positions (one small list per doc),
-      and re-slice grams from ``tokens`` at ONLY those positions — a
-      doc-level join that ships a candidate doc's tokens once instead
-      of k tokens per candidate gram. Wins when duplicates are rare
-      (the realistic corpus regime): measured 1.20x wall at a 2% dup
-      rate and 1.22x on the natural sf0.1 corpus on local[16/32]
-      (``scripts/span_shape_demo.py``) — local shuffles are
-      memory-speed, so the k-fold shuffle-byte cut is worth far more
-      on a network-shuffling cluster than the local wall-clock shows.
-    * ``direct`` (the saturated shape): explode full grams once and
-      filter on the hot-hash set. Wins when most positions are hot
-      (e.g. the x20-amplified bench input, where the gather join would
-      re-slice nearly every gram AND pay the position shuffle).
-
-    ``gather=None`` (default) probes the true hot-position fraction
-    from the already-checkpointed hash counts (two scalar aggregates,
-    no extra heavy job) and picks gather iff < 35% of positions are
-    hot. Pass an explicit bool at cluster scale to skip the probe and
-    keep the hash pass fully lazy. A suffix-array pass is the
-    single-node exact-maximal-match refinement; the k-gram grid is the
-    bounded-memory distributed analog.
+    One lazy pass: a single gram posexplode feeds a window count over
+    the gram partition (one exchange, one sort), whose hits feed the
+    per-doc span window. Calling it starts no Spark job. A suffix-array
+    pass is the single-node exact-maximal-match refinement; the k-gram
+    grid is the bounded-memory distributed analog.
     """
-    if prefilter:
-        # pass 1: hash-only position stream (xxhash64 evaluated inside
-        # the lambda — bit-identical to hashing the materialized slice)
-        pos_h = tokseq.where(F.col("n_tok") >= F.lit(k)).select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, n_tok - {k}), "
-                    f"i -> xxhash64(slice(tokens, cast(i + 1 as int), {k})))"
-                )
-            ).alias("pos", "gh"),
-        )
-        hc = pos_h.groupBy("gh").agg(F.count("*").alias("_hc"))
-        saturated = False
-        if gather is None:
-            # materialize the counts once; the probe and both shape
-            # branches read the checkpointed blocks (reclaimed by the
-            # ContextCleaner with the result's lineage)
-            hc = hc.localCheckpoint(eager=True)
-            tot, hot_n = hc.agg(
-                F.sum("_hc"),
-                F.sum(F.when(F.col("_hc") >= min_count, F.col("_hc"))),
-            ).first()
-            gather = (hot_n or 0) < 0.35 * max(tot or 0, 1)
-            # r06: when (almost) every position is hot the broadcast
-            # prune would drop (almost) nothing — the exact window
-            # count below is the real filter either way, so skip
-            # building and probing a multi-million-key hash relation
-            # that admits ~everything
-            saturated = (hot_n or 0) >= 0.95 * max(tot or 0, 1)
-        hot = hc.where(F.col("_hc") >= min_count).select("gh")
-        if gather:
-            cand_pos = pos_h.join(hot, "gh").select("doc_id", "pos")
-            per_doc = cand_pos.groupBy("doc_id").agg(
-                F.collect_list("pos").alias("_pp")
+    grams = tokseq.where(F.col("n_tok") >= F.lit(k)).select(
+        "doc_id",
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(0, n_tok - {k}), "
+                f"i -> slice(tokens, cast(i + 1 as int), {k}))"
             )
-            cand = (
-                tokseq.join(per_doc, "doc_id")
-                .select(
-                    "doc_id",
-                    F.explode(
-                        F.expr(
-                            f"transform(_pp, p -> struct(p AS pos, "
-                            f"slice(tokens, cast(p + 1 AS int), {k}) AS gram))"
-                        )
-                    ).alias("_pg"),
-                )
-                .select(
-                    "doc_id",
-                    F.col("_pg.pos").alias("pos"),
-                    F.col("_pg.gram").alias("gram"),
-                )
-            )
-        else:
-            g = tokseq.where(F.col("n_tok") >= F.lit(k)).select(
-                "doc_id",
-                F.posexplode(
-                    F.expr(
-                        f"transform(sequence(0, n_tok - {k}), "
-                        f"i -> slice(tokens, cast(i + 1 as int), {k}))"
-                    )
-                ).alias("pos", "gram"),
-            )
-            # keep gh: the exact-count window below leads its partition
-            # key with the 8-byte hash so the sort comparator almost
-            # never touches the k-int arrays
-            cand = g.withColumn("gh", F.xxhash64("gram"))
-            if not saturated:
-                cand = cand.join(hot, "gh")
-    else:
-        cand = (
-            tokseq.where(F.col("n_tok") >= F.lit(k))
-            .select(
-                "doc_id",
-                F.posexplode(
-                    F.expr(
-                        f"transform(sequence(0, n_tok - {k}), "
-                        f"i -> slice(tokens, cast(i + 1 as int), {k}))"
-                    )
-                ).alias("pos", "gram"),
-            )
-        )
-    # Exact verification in ONE gram exchange (r06): every occurrence of
-    # a gram shares its hash, so the candidate stream holds ALL of a
-    # candidate gram's occurrences and a window count over the gram
-    # partition IS the corpus count. The former groupBy(gram) + join
-    # shape executed the full-gram explode twice and sort-merge-joined
-    # two gram-keyed exchanges; this is the same filter with one
-    # explode, one exchange, one sort. The partition key leads with the
-    # 8-byte hash (gram determines gh, so (gh, gram) groups == gram
-    # groups) to keep the sort off the arrays. (isNotNull mirrors the
-    # old inner join's null-key drop.)
-    if "gh" not in cand.columns:
-        cand = cand.withColumn("gh", F.xxhash64("gram"))
+        ).alias("pos", "gram"),
+    )
+    # the window count over a gram's partition IS its corpus count. The
+    # partition key leads with the 8-byte hash (gram determines gh, so
+    # (gh, gram) groups == gram groups) to keep the sort comparator off
+    # the k-int arrays. NULL grams (NULL tokens) are dropped, as the
+    # DuckDB twin's join on gram drops them
     w_cnt = Window.partitionBy("gh", "gram")
     hits = (
-        cand.where(F.col("gram").isNotNull())
+        grams.where(F.col("gram").isNotNull())
+        .withColumn("gh", F.xxhash64("gram"))
         .withColumn("_c", F.count("*").over(w_cnt))
         .where(F.col("_c") >= min_count)
         .select("doc_id", "pos")
@@ -903,8 +793,6 @@ def strip_duplicate_spans(
     spans: DataFrame | None = None,
     k: int = 16,
     min_count: int = 2,
-    prefilter: bool = True,
-    gather: bool | None = None,
 ) -> DataFrame:
     """Rewrite each doc with every duplicated span removed (the
     aggressive cut-all-copies policy: deterministic and join-free at
@@ -914,10 +802,7 @@ def strip_duplicate_spans(
     JVM-side higher-order ``filter`` with index — no Python in the
     rewrite."""
     if spans is None:
-        spans = duplicate_gram_spans(
-            tokseq, k=k, min_count=min_count, prefilter=prefilter,
-            gather=gather,
-        )
+        spans = duplicate_gram_spans(tokseq, k=k, min_count=min_count)
     per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )

@@ -309,15 +309,13 @@ def _dsir_fit_literals_kernel(tokseq: DataFrame) -> list[int]:
     buckets replace the train-split explode + bucket aggregation.
     Counts are exact int64 (the bigram hash promotes to BIGINT exactly
     like the SQL; the split predicate replicates Spark's non-ANSI
-    integer semantics) and the lam closed form uses ``math.log`` ==
-    glibc libm == the SQL ``ln``, so the literals are bit-identical to
-    :func:`dsir_lambda_table`'s (parity-tested)."""
-    import math
-
+    integer semantics) and Spark evaluates the lam closed form
+    (:func:`~.textstats._fit_literals`), so the literals are
+    bit-identical to :func:`dsir_lambda_table`'s (parity-tested)."""
     import numpy as np
     import pandas as pd
 
-    from .textstats import _distinct_counts_np, _train_mask_np
+    from .textstats import _distinct_counts_np, _fit_literals, _train_mask_np
 
     v, m1, m2, off = DSIR_BUCKETS, DSIR_M1, DSIR_M2, DSIR_OFF
 
@@ -370,19 +368,7 @@ def _dsir_fit_literals_kernel(tokseq: DataFrame) -> list[int]:
     ).collect()
     c1 = [sum(p.c1[i] for p in parts) for i in range(v + 1)]
     c0 = [sum(p.c0[i] for p in parts) for i in range(v + 1)]
-    n1, n0 = sum(c1), sum(c0)
-    return [
-        math.floor(
-            1000000.0
-            * (
-                math.log(c1[i] + 1)
-                - math.log(n1 + v)
-                - math.log(c0[i] + 1)
-                + math.log(n0 + v)
-            )
-        )
-        for i in range(v)
-    ]
+    return _fit_literals(tokseq.sparkSession, c1, c0, v)[0]
 
 
 def dsir_weights(tokseq: DataFrame) -> DataFrame:

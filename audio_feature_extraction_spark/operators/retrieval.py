@@ -179,8 +179,8 @@ def retrieval_topk(
     workload, the document frequencies AND the scoring join — as one
     lazy plan the corpus explode + aggregation executed once per
     consumer (four scans in the physical plan). Materializing it once
-    (eager ``localCheckpoint``, the ``duplicate_gram_spans`` hash-count
-    precedent) makes every consumer read the same computed blocks.
+    (eager ``localCheckpoint``, as ``lsh_candidate_pairs`` does for its
+    band table) makes every consumer read the same computed blocks.
     This is the in-session analog of :func:`write_postings_index` —
     at cluster scale a repeated workload reads the persistent index
     instead; pass ``materialize=False`` to keep the fully lazy plan.

@@ -482,6 +482,34 @@ def _nb_prior_sql(d1: str, d0: str) -> str:
     )
 
 
+def _fit_literals(
+    spark, c1: list[int], c0: list[int], v: int,
+    docs: tuple[int, int] | None = None,
+) -> tuple[list[int], int | None]:
+    """A kernel fit's literals from its exact integer counts: per-bucket
+    :func:`_nb_weight_sql` over ``c1``/``c0`` (``v`` buckets, then one
+    slot of NULL-element counts that only feed the totals) and, given
+    per-class doc counts ``docs``, the :func:`_nb_prior_sql` prior.
+
+    Spark evaluates the SQL trainers' own expressions, so kernel and
+    trainer share one ``ln``. The query reads an inline one-row VALUES
+    table, which Spark answers as a local relation without a job."""
+
+    def arr(xs):
+        return f"array({', '.join(f'{int(x)}L' for x in xs)})"
+
+    w = _nb_weight_sql("c1[i]", "c0[i]", f"{sum(c1)}L", f"{sum(c0)}L", v)
+    prior = (
+        "CAST(NULL AS BIGINT)" if docs is None
+        else _nb_prior_sql(f"{docs[0]}L", f"{docs[1]}L")
+    )
+    row = spark.sql(
+        f"SELECT transform(sequence(0, {v - 1}), i -> {w}) AS w, "
+        f"{prior} AS prior FROM VALUES ({arr(c1)}, {arr(c0)}) AS _fit(c1, c0)"
+    ).collect()[0]
+    return list(row.w), row.prior
+
+
 def _num_id_np(doc_ids) -> "tuple":
     """numpy twin of ``CAST(regexp_replace(doc_id,'[^0-9]','') AS
     BIGINT)``: digits-only id as int64, with Spark's non-ANSI
@@ -544,13 +572,10 @@ def _nb_fit_literals_kernel(tokseq: DataFrame) -> tuple[list[int], int | None]:
     split (r06): per-task numpy bincounts replace the corpus explode +
     bucket aggregation. Counts are exact int64 (int32 bucket wrap and
     the split predicate replicate Spark's non-ANSI integer semantics),
-    and the weight/prior closed forms use ``math.log`` — glibc libm,
-    the same binary the SQL ``ln`` resolves to (the repo's witness
-    equivalence) — so the literals are bit-identical to
-    :func:`nb_train`'s. Returns ``(weights, prior)``; prior is None
-    when the train split is empty (the SQL path's NULL prior)."""
-    import math
-
+    and :func:`_fit_literals` evaluates the weight/prior closed forms
+    in Spark, so the literals are bit-identical to :func:`nb_train`'s.
+    Returns ``(weights, prior)``; prior is None when the train split is
+    empty (the SQL path's NULL prior)."""
     import numpy as np
     import pandas as pd
 
@@ -613,25 +638,10 @@ def _nb_fit_literals_kernel(tokseq: DataFrame) -> tuple[list[int], int | None]:
     c0 = [sum(p.c0[i] for p in parts) for i in range(v + 1)]
     d1 = sum(p.d1 for p in parts)
     d0 = sum(p.d0 for p in parts)
-    n1, n0 = sum(c1), sum(c0)
-    weights = [
-        math.floor(
-            1000000.0
-            * (
-                math.log(c1[i] + 1)
-                - math.log(n1 + v)
-                - math.log(c0[i] + 1)
-                + math.log(n0 + v)
-            )
-        )
-        for i in range(v)
-    ]
-    if d1 == 0 and d0 == 0:
-        # empty train split: the SQL dtot aggregates over zero rows to
-        # NULL and the prior (hence every score) is NULL
-        return weights, None
-    prior = math.floor(1000000.0 * (math.log(d1 + 1) - math.log(d0 + 1)))
-    return weights, prior
+    # empty train split: the SQL dtot aggregates over zero rows to NULL
+    # and the prior (hence every score) is NULL
+    docs = None if d1 == 0 and d0 == 0 else (d1, d0)
+    return _fit_literals(tokseq.sparkSession, c1, c0, v, docs)
 
 
 def nb_train(tokseq: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -122,6 +122,11 @@ class CorpusConfig:
     resume_dir: str | None = None
 
 
+def _built(out) -> tuple[DataFrame, dict]:
+    """A stage builder's result as ``(DataFrame, report fields)``."""
+    return out if isinstance(out, tuple) else (out, {})
+
+
 def prepare_corpus(
     spark: SparkSession,
     sf_dir: str,
@@ -145,27 +150,38 @@ def prepare_corpus(
     _prev: list[DataFrame] = []
     resumed: list[str] = []
 
-    def stage(df: DataFrame, name: str) -> DataFrame:
+    def stage(name: str, build) -> DataFrame:
+        """Run one stage. ``build()`` returns the stage's DataFrame, or
+        ``(DataFrame, fields)`` where ``fields`` is a dict of small
+        report values the stage computes on the way."""
         if cfg.resume_dir is not None:
-            # stage-level resume: one atomic snapshot per stage. The df
-            # argument is a lazy plan over the committed bytes of its
-            # inputs — skipped entirely (never executed) when this
-            # stage's snapshot already committed, so a resumed run
+            # stage-level resume: one atomic snapshot per stage. build()
+            # runs only when this stage's snapshot is missing: it is a
+            # lazy plan over the committed bytes of its inputs plus
+            # whatever eager work its operators do (model fits, probes),
+            # so a resumed stage starts no job, and a resumed run
             # recomputes only the missing suffix and lands on the same
-            # bytes an uninterrupted run produces.
+            # bytes an uninterrupted one produces. Report fields ride in
+            # the snapshot's properties.
             from audio_feature_extraction_spark.sinks import snapshots as sn
 
             table = os.path.join(cfg.resume_dir, f"stage={name}")
             if sn.current_version(table) is None:
+                df, fields = _built(build())
                 sn.write_snapshot(
-                    df, table, mode="overwrite", properties={"stage": name}
+                    df, table, mode="overwrite",
+                    properties={"stage": name, "report": fields},
                 )
             else:
                 resumed.append(name)
+                fields = sn.snapshot_properties(table).get("report", {})
+            report.update(fields)
             df = sn.read_snapshot(spark, table)
             if cfg.accounting:
                 report[name] = df.count()
             return df
+        df, fields = _built(build())
+        report.update(fields)
         if not cfg.accounting:
             return df
         df = df.persist()
@@ -179,154 +195,181 @@ def prepare_corpus(
         report["input_docs"] = docs.count()
 
     # 1. exact dedup (text hash) — survivors keep the min doc_id
-    kept = dedup.exact_dedup(docs).select(
-        F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias("doc_id")
-    )
-    ts = stage(
-        tokseq.join(kept, "doc_id"),  # id-set join; AQE picks the strategy
-        "after_exact_dedup",
-    )
+    def exact():
+        kept = dedup.exact_dedup(docs).select(
+            F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias(
+                "doc_id"
+            )
+        )
+        return tokseq.join(kept, "doc_id")  # id-set join; AQE picks
+
+    ts = stage("after_exact_dedup", exact)
 
     # 2. near-dup removal: LSH candidates -> exact Jaccard -> greedy drop
-    pairs = dedup.lsh_candidate_pairs(ts, max_bucket_size=cfg.lsh_max_bucket)
-    confirmed = dedup.jaccard_on_pairs(pairs, ts).where(
-        F.col("jaccard") >= cfg.jaccard_threshold
-    )
-    if cfg.exact_components:
-        ts = dedup.dedup_survivors_by_component(
-            ts, confirmed.select("doc_a", "doc_b"),
-            checkpoint_dir=cfg.components_checkpoint_dir,
+    def near():
+        pairs = dedup.lsh_candidate_pairs(
+            ts, max_bucket_size=cfg.lsh_max_bucket
         )
-    else:
+        confirmed = dedup.jaccard_on_pairs(pairs, ts).where(
+            F.col("jaccard") >= cfg.jaccard_threshold
+        )
+        if cfg.exact_components:
+            return dedup.dedup_survivors_by_component(
+                ts, confirmed.select("doc_a", "doc_b"),
+                checkpoint_dir=cfg.components_checkpoint_dir,
+            )
         drop = confirmed.select(F.col("doc_b").alias("doc_id")).distinct()
-        ts = ts.join(drop, "doc_id", "left_anti")
-    ts = stage(ts, "after_near_dedup")
+        return ts.join(drop, "doc_id", "left_anti")
+
+    ts = stage("after_near_dedup", near)
 
     # 2b. substring dedup (optional): rewrite survivors with duplicated
     # k-gram spans cut; n_tok tracks the rewritten length so packing
     # downstream stays consistent
     if cfg.substring_k is not None:
-        rest = [
-            c for c in ts.columns if c not in ("doc_id", "tokens", "n_tok")
-        ]
-        stripped = dedup.strip_duplicate_spans(
-            ts, k=cfg.substring_k, min_count=cfg.substring_min_count
-        )
-        ts = stage(
-            stripped.select(
+
+        def substring():
+            rest = [
+                c for c in ts.columns if c not in ("doc_id", "tokens", "n_tok")
+            ]
+            stripped = dedup.strip_duplicate_spans(
+                ts, k=cfg.substring_k, min_count=cfg.substring_min_count
+            )
+            return stripped.select(
                 "doc_id",
                 F.col("tokens_clean").alias("tokens"),
                 F.col("n_kept").cast("int").alias("n_tok"),
                 *rest,
-            ).where(F.col("n_tok") > 0),
-            "after_substring_dedup",
-        )
+            ).where(F.col("n_tok") > 0)
+
+        ts = stage("after_substring_dedup", substring)
 
     # 2c. semantic dedup (optional, SemDeDup): drop docs whose
     # embedding is dominated by a same-cluster lower-id near-duplicate
     if cfg.semdedup_threshold is not None:
-        from audio_feature_extraction_spark.operators import similarity
 
-        if emb is None:
-            emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        sem_drop = similarity.semdedup_pairs(
-            emb,
-            threshold=cfg.semdedup_threshold,
-            n_clusters=cfg.semdedup_clusters,
+        def semantic():
+            from audio_feature_extraction_spark.operators import similarity
+
+            vecs = emb
+            if vecs is None:
+                vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            sem_drop = similarity.semdedup_pairs(
+                vecs,
+                threshold=cfg.semdedup_threshold,
+                n_clusters=cfg.semdedup_clusters,
+            ).select(
+                F.concat(F.lit("doc_"), F.col("id_b").cast("string")).alias(
+                    "doc_id"
+                )
+            )
+            return ts.join(sem_drop, "doc_id", "left_anti")
+
+        ts = stage("after_semantic_dedup", semantic)
+
+    # 3. quality filter: repetition + minimum length
+    def quality():
+        rep = textstats.repetition_stats(docs)
+        bad_quality = rep.where(
+            (F.col("dup_line_frac") > cfg.max_dup_line_frac)
+            | (F.col("top_word_frac") > cfg.max_top_word_frac)
+            | (F.col("n_words") < cfg.min_words)
         ).select(
-            F.concat(F.lit("doc_"), F.col("id_b").cast("string")).alias(
+            F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias(
                 "doc_id"
             )
         )
-        ts = stage(
-            ts.join(sem_drop, "doc_id", "left_anti"), "after_semantic_dedup"
-        )
+        return ts.join(bad_quality, "doc_id", "left_anti")
 
-    # 3. quality filter: repetition + minimum length
-    rep = textstats.repetition_stats(docs)
-    bad_quality = rep.where(
-        (F.col("dup_line_frac") > cfg.max_dup_line_frac)
-        | (F.col("top_word_frac") > cfg.max_top_word_frac)
-        | (F.col("n_words") < cfg.min_words)
-    ).select(
-        F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias("doc_id")
-    )
-    ts = stage(ts.join(bad_quality, "doc_id", "left_anti"), "after_quality")
+    ts = stage("after_quality", quality)
 
     # 3b. learned quality filter (optional): Naive-Bayes score over
     # hashed token buckets, trained on this corpus's own deterministic
     # 'train' split; drops docs scoring below the bound
     if cfg.nb_min_score is not None:
-        nb_drop = textstats.nb_quality(ts).where(
-            F.col("nb_score_micro") < cfg.nb_min_score
-        ).select("doc_id")
-        ts = stage(
-            ts.join(nb_drop, "doc_id", "left_anti"), "after_nb_quality"
-        )
+
+        def nb():
+            nb_drop = textstats.nb_quality(ts).where(
+                F.col("nb_score_micro") < cfg.nb_min_score
+            ).select("doc_id")
+            return ts.join(nb_drop, "doc_id", "left_anti")
+
+        ts = stage("after_nb_quality", nb)
 
     # 4. decontamination: drop TRAIN docs sharing shingles with TEST
-    tagged = split.assign_split(ts, "doc_id")
-    train = tagged.where("split = 'train'")
-    heldout = tagged.where("split != 'train'")
-    contaminated = dedup.contamination(
-        train, heldout, n=cfg.contamination_n
-    ).where(F.col("n_matched") > 0).select("doc_id")
-    ts = stage(
-        tagged.join(contaminated, "doc_id", "left_anti").drop("split"),
-        "after_decontamination",
-    )
+    def decontaminate():
+        tagged = split.assign_split(ts, "doc_id")
+        train = tagged.where("split = 'train'")
+        heldout = tagged.where("split != 'train'")
+        contaminated = dedup.contamination(
+            train, heldout, n=cfg.contamination_n
+        ).where(F.col("n_matched") > 0).select("doc_id")
+        return tagged.join(contaminated, "doc_id", "left_anti").drop("split")
+
+    ts = stage("after_decontamination", decontaminate)
 
     # 4b. DSIR selection (optional): content-based importance
     # resampling to a fixed doc budget — the k survivors' ids are tiny
     # by construction, so the keep-filter is a broadcast semi join
     if cfg.dsir_k is not None:
-        keep = mixing.dsir_sample(ts, cfg.dsir_k).select("doc_id")
-        ts = stage(
-            ts.join(F.broadcast(keep), "doc_id", "left_semi"),
-            "after_dsir",
-        )
+
+        def dsir():
+            keep = mixing.dsir_sample(ts, cfg.dsir_k).select("doc_id")
+            return ts.join(F.broadcast(keep), "doc_id", "left_semi")
+
+        ts = stage("after_dsir", dsir)
 
     # 4c. subword retokenization (optional): BPE trains on the
     # surviving docs' text, then the token axis becomes bpe ids — the
     # last content transform before mixing/packing
     if cfg.bpe_merges is not None:
-        surviving = docs.join(
-            ts.selectExpr(
-                "cast(substring(doc_id, 5) as long) as doc_id"
-            ).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-        model = bpe.train_bpe(
-            surviving, n_merges=cfg.bpe_merges, max_words=cfg.bpe_max_words
-        )
-        enc = bpe.bpe_encode(surviving, model).selectExpr(
-            "concat('doc_', doc_id) as doc_id",
-            "bpe_ids as tokens",
-            "n_bpe as n_tok",
-        )
-        ts = stage(
-            ts.drop("tokens", "n_tok").join(enc, "doc_id"),
-            "after_bpe",
-        )
-        report["bpe_vocab_size"] = len(model.vocab) + 1
-        report["bpe_dropped_words"] = model.dropped_words
+
+        def retokenize():
+            surviving = docs.join(
+                ts.selectExpr(
+                    "cast(substring(doc_id, 5) as long) as doc_id"
+                ).distinct(),
+                "doc_id",
+                "left_semi",
+            )
+            model = bpe.train_bpe(
+                surviving, n_merges=cfg.bpe_merges,
+                max_words=cfg.bpe_max_words,
+            )
+            enc = bpe.bpe_encode(surviving, model).selectExpr(
+                "concat('doc_', doc_id) as doc_id",
+                "bpe_ids as tokens",
+                "n_bpe as n_tok",
+            )
+            return ts.drop("tokens", "n_tok").join(enc, "doc_id"), {
+                "bpe_vocab_size": len(model.vocab) + 1,
+                "bpe_dropped_words": model.dropped_words,
+            }
+
+        ts = stage("after_bpe", retokenize)
 
     # 5. corpus mixing: per-source rates, deterministic epochs
     mixed = stage(
-        mixing.sample_by_rates(ts, cfg.rates, default=cfg.default_rate),
         "after_mixing",
+        lambda: mixing.sample_by_rates(
+            ts, cfg.rates, default=cfg.default_rate
+        ),
     )
 
     # 6. pack into fixed training blocks (epoch copies get distinct ids
     # so the packer's (source, doc_id) order stays total)
-    packable = mixed.withColumn(
-        "doc_id", F.concat_ws("#e", "doc_id", F.col("epoch").cast("string"))
-    )
-    blocks = mixing.pack_blocks(packable, cfg.block_len)
+    def pack():
+        packable = mixed.withColumn(
+            "doc_id",
+            F.concat_ws("#e", "doc_id", F.col("epoch").cast("string")),
+        )
+        return mixing.pack_blocks(packable, cfg.block_len)
+
     if cfg.resume_dir is not None:
-        blocks = stage(blocks, "packed")
+        blocks = stage("packed", pack)
         report["resumed_stages"] = resumed
+    else:
+        blocks = pack()
     if cfg.accounting:
         report["packed_slices"] = blocks.count()
         report["n_blocks"] = (

@@ -1,7 +1,7 @@
 """Per-query noop-sink isolation bench (guide §1.4) — NOT the driver
 contract; bench.py stays the frozen measurement. Usage:
 
-    python bench_extra.py dup_spans asof_join_range [--reps 3]
+    python bench_extra.py dup_spans dup_spans_sparse [--reps 3]
 
 Builds the same amplified inputs as bench.py (reuses the /tmp parquet
 cache), warms the page cache the same way, and times each named query
@@ -77,6 +77,9 @@ def main() -> None:
         asof, bpe, dedup, framing, inverse, mixing, retrieval,
         sessionize, similarity, temporal, textstats,
     )
+    from audio_feature_extraction_spark.sources.tokens import (
+        load_token_sequences,
+    )
 
     spark = get_spark(f"local[{CPUS}]", app_name="bench_extra")
     spec = FrameSpec(frame_len=16, hop=8)
@@ -113,6 +116,11 @@ def main() -> None:
         ),
         "minhash_lsh_pairs": lambda: dedup.lsh_candidate_pairs(amplified),
         "dup_spans": lambda: dedup.duplicate_gram_spans(amplified),
+        # the natural (unamplified) corpus: ~9 % of its 16-gram positions
+        # are duplicated, against 100 % in the x20 input above
+        "dup_spans_sparse": lambda: dedup.duplicate_gram_spans(
+            load_token_sequences(spark, SF_DIR), k=16
+        ),
         "ann_lsh": lambda: similarity.lsh_topk(
             emb, emb.where(F.expr("vec_id % 20 = 0")), k=5
         ),

@@ -42,7 +42,7 @@ def main() -> None:
             ev.where(F.col("event_type").isin("click", "purchase")),
         ),
         "sessionize": sessionize.session_summary(ev),
-        "duplicate_gram_spans (hash-prefiltered)": dedup.duplicate_gram_spans(ts),
+        "duplicate_gram_spans (one explode, hash-led window count)": dedup.duplicate_gram_spans(ts),
         "text_scrub (zero-exchange narrow map)": textclean.scrub_text(
             spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
         ),

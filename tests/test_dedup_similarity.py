@@ -559,25 +559,77 @@ def test_duplicate_gram_spans_within_doc_repetition(spark):
     assert out == [(0, 4), (5, 9)]
 
 
-def test_duplicate_gram_spans_prefilter_parity(spark):
-    """The hash-prefilter scale path returns exactly the unfiltered
-    exact result (collisions only ever ADD candidates; the exact pass
-    removes them)."""
-    rows = [
-        ("a", list(range(30)) + [1, 2, 3, 4] * 3),
-        ("b", list(range(10, 40))),
-        ("c", [1, 2, 3, 4] + list(range(100, 120))),
-    ]
-    df = _tokseq_df(spark, rows)
-    fast = {
-        (r.doc_id, r.span_id, r.span_start, r.span_end, r.n_grams)
-        for r in dedup.duplicate_gram_spans(df, k=4, prefilter=True).collect()
-    }
-    slow = {
-        (r.doc_id, r.span_id, r.span_start, r.span_end, r.n_grams)
-        for r in dedup.duplicate_gram_spans(df, k=4, prefilter=False).collect()
-    }
-    assert fast == slow and fast
+# cross-doc full and partial duplicates, self-repetition, a unique doc
+_MIXED_SPAN_DOCS = [
+    ("a", list(range(100, 140))),
+    ("b", list(range(100, 140))),                          # full dup of a
+    ("c", list(range(0, 8)) * 6),                          # self-repetition
+    ("d", list(range(500, 560))),                          # unique
+    ("e", list(range(110, 130)) + list(range(900, 930))),  # partial dup
+]
+# every 8-gram occurs 3 times corpus-wide: every position is duplicated
+_SATURATED_SPAN_DOCS = [
+    (f"doc_{rep}_{i}", list(range(i, i + 12)))
+    for rep in range(3)
+    for i in range(4)
+]
+
+
+@pytest.mark.parametrize(
+    "rows", [_MIXED_SPAN_DOCS, _SATURATED_SPAN_DOCS], ids=["mixed", "saturated"]
+)
+def test_duplicate_spans_match_duckdb_twin(spark, rows):
+    """Spans and the stripped rewrite equal their DuckDB twins row for
+    row (``duplicate_spans_oracle_sql`` / ``strip_spans_oracle_sql``)."""
+    import duckdb
+    import pandas as pd
+
+    tok = _tokseq_df(spark, rows)
+    spans = dedup.duplicate_gram_spans(tok, k=8, min_count=2)
+    got = sorted(tuple(r) for r in spans.collect())
+    got_strip = sorted(
+        (r.doc_id, r.tokens_clean, r.n_kept, r.n_removed)
+        for r in dedup.strip_duplicate_spans(tok, spans=spans).collect()
+    )
+    con = duckdb.connect()
+    con.register(
+        "tok_t",
+        pd.DataFrame(
+            [(d, t, len(t)) for d, t in rows],
+            columns=["doc_id", "tokens", "n_tok"],
+        ),
+    )
+    ctes = (
+        "WITH tokseq AS (SELECT doc_id, CAST(tokens AS INTEGER[]) AS tokens, "
+        "n_tok FROM tok_t), "
+        + dedup.duplicate_spans_oracle_sql(k=8, min_count=2)
+        + ", "
+        + dedup.strip_spans_oracle_sql()
+    )
+    want = sorted(con.execute(f"{ctes} SELECT * FROM spans_agg").fetchall())
+    want_strip = sorted(
+        con.execute(
+            f"{ctes} SELECT doc_id, tokens_clean, n_kept, n_removed "
+            "FROM stripped"
+        ).fetchall()
+    )
+    assert got == want and len(got) > 0
+    assert got_strip == want_strip
+    if rows is _MIXED_SPAN_DOCS:
+        # the partial dup's span covers exactly the shared 20 tokens
+        assert [(s, e) for d, _i, s, e, _n in got if d == "e"] == [(0, 20)]
+
+
+def test_span_dedup_calls_start_no_job(spark, jobs_started):
+    """Both span operators only build a plan: calling them starts no
+    Spark job (their work runs when the result is consumed)."""
+    tok = _tokseq_df(spark, _MIXED_SPAN_DOCS)
+    assert jobs_started(
+        "guard-dup-spans", lambda: dedup.duplicate_gram_spans(tok, k=8)
+    ) == 0
+    assert jobs_started(
+        "guard-strip-spans", lambda: dedup.strip_duplicate_spans(tok, k=8)
+    ) == 0
 
 
 def test_strip_duplicate_spans_rewrites_tokens(spark):
@@ -741,41 +793,6 @@ def test_pq_kernel_query_cap_fails_fast(spark):
     assert out.count() == 9
 
 
-@pytest.mark.parametrize("gather", [False, True, None])
-def test_span_shapes_agree(spark, gather):
-    """The two pass-2 physical shapes (direct full-gram explode vs
-    hash-prefiltered position gather) and the adaptive default produce
-    identical spans on a mixed input with cross-doc dups, within-doc
-    repetition, and unique docs."""
-    from audio_feature_extraction_spark.operators import dedup
-
-    rows = [
-        ("a", list(range(100, 140))),
-        ("b", list(range(100, 140))),                  # full dup of a
-        ("c", list(range(0, 8)) * 6),                  # self-repetition
-        ("d", list(range(500, 560))),                  # unique
-        ("e", list(range(110, 130)) + list(range(900, 930))),  # partial
-    ]
-    tok = spark.createDataFrame(
-        [(d, t, len(t)) for d, t in rows],
-        "doc_id string, tokens array<int>, n_tok int",
-    )
-    got = {
-        (r.doc_id, r.span_id, r.span_start, r.span_end, r.n_grams)
-        for r in dedup.duplicate_gram_spans(
-            tok, k=8, min_count=2, gather=gather
-        ).collect()
-    }
-    want = {
-        (r.doc_id, r.span_id, r.span_start, r.span_end, r.n_grams)
-        for r in dedup.duplicate_gram_spans(
-            tok, k=8, min_count=2, prefilter=False
-        ).collect()
-    }
-    assert got == want and len(want) > 0
-    # the partial-dup doc's span covers exactly the shared 20 tokens
-    e_spans = [(s, e) for d, _i, s, e, _n in want if d == "e"]
-    assert e_spans == [(0, 20)]
 
 
 @pytest.mark.parametrize("pf", [None, "semi", "bloom"])

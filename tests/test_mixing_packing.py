@@ -667,16 +667,9 @@ def test_prepare_corpus_bpe_stage(spark):
     assert blocks.agg(F.sum("slice_len")).collect()[0][0] == total
 
 
-def test_prepare_corpus_warm_call_compiles_nothing(spark, tmp_path):
-    """Regression guard for the per-call fixed cost of snapshot mode.
-    A second call over the same inputs finds every generated class in
-    the codegen cache (0 Janino compilations; the session's cache holds
-    a whole call's working set), and reading a committed stage back
-    takes its schema from the manifest, so it starts no Spark job."""
-    import os
-
-    from audio_feature_extraction_spark.plans import corpus
-    from audio_feature_extraction_spark.sinks import snapshots as sn
+def _snapshot_inputs(spark):
+    """(docs, tokseq, emb) for the snapshot-mode guards: 24 docs over
+    two sources plus one exact duplicate, and 24 small embeddings."""
     from audio_feature_extraction_spark.sources.tokens import tokenize_expr
 
     def words(seed, n):
@@ -704,8 +697,24 @@ def test_prepare_corpus_warm_call_compiles_nothing(spark, tmp_path):
         [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(24)],
         "vec_id long, embedding array<double>",
     )
+    return docs, tokseq, emb
+
+
+def test_prepare_corpus_warm_call_compiles_nothing(
+    spark, tmp_path, jobs_started
+):
+    """Regression guard for the per-call fixed cost of snapshot mode.
+    A second call over the same inputs finds every generated class in
+    the codegen cache (0 Janino compilations; the session's cache holds
+    a whole call's working set), and reading a committed stage back
+    takes its schema from the manifest, so it starts no Spark job."""
+    import os
+
+    from audio_feature_extraction_spark.plans import corpus
+    from audio_feature_extraction_spark.sinks import snapshots as sn
+
+    docs, tokseq, emb = _snapshot_inputs(spark)
     compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    sc = spark.sparkContext
 
     def run(resume):
         cfg = corpus.CorpusConfig(
@@ -726,15 +735,6 @@ def test_prepare_corpus_warm_call_compiles_nothing(spark, tmp_path):
     assert run(str(tmp_path / "r2")) == first
     assert compiles() - before == 0
 
-    def jobs_started(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     table = str(tmp_path / "r2" / "stage=after_quality")
     assert jobs_started(
         "guard-read-snapshot", lambda: sn.read_snapshot(spark, table)
@@ -745,3 +745,45 @@ def test_prepare_corpus_warm_call_compiles_nothing(spark, tmp_path):
     assert jobs_started(
         "guard-inferred-read", lambda: spark.read.parquet(*paths)
     ) >= 1
+
+
+def test_prepare_corpus_resumed_call_starts_no_job(
+    spark, tmp_path, jobs_started
+):
+    """A stage whose snapshot is committed is never built: a second
+    call on the same resume dir starts no Spark job before its outputs
+    are read (the model fits and probes inside the operators included),
+    returns the same rows and the same report, and keeps the BPE fields
+    from the snapshot's properties."""
+    from audio_feature_extraction_spark.plans import corpus
+
+    docs, tokseq, emb = _snapshot_inputs(spark)
+    cfg = corpus.CorpusConfig(
+        block_len=64, accounting=False, resume_dir=str(tmp_path / "r"),
+        substring_k=8, semdedup_threshold=0.9, semdedup_clusters=4,
+        nb_min_score=0, dsir_k=12, bpe_merges=20,
+    )
+
+    def call():
+        return corpus.prepare_corpus(
+            spark, "", cfg=cfg, docs=docs, tokseq=tokseq, emb=emb
+        )
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    mixed, blocks, report = call()
+    first = [rows(mixed), rows(blocks)]
+    out = []
+    assert jobs_started("guard-resumed-call", lambda: out.extend(call())) == 0
+    mixed2, blocks2, report2 = out
+    assert [rows(mixed2), rows(blocks2)] == first
+    assert report["resumed_stages"] == []
+    assert report2.pop("resumed_stages") == [
+        "after_exact_dedup", "after_near_dedup", "after_substring_dedup",
+        "after_semantic_dedup", "after_quality", "after_nb_quality",
+        "after_decontamination", "after_dsir", "after_bpe", "after_mixing",
+        "packed",
+    ]
+    report.pop("resumed_stages")
+    assert report2 == report and report["bpe_vocab_size"] > 1

@@ -93,6 +93,19 @@ def test_worker_conf_is_local_only():
     )["spark.python.daemon.module"] == "pyspark.daemon"
 
 
+def test_master_cores_reads_local_n_and_falls_back_otherwise():
+    """Shuffle width follows N of local[N] / local[N,F]; every other
+    master (local-cluster[...] included, whose numbers are not a core
+    count) gets the fallback. Strings only: no session starts."""
+    for master, want in (
+        ("local[4]", 4), ("local[4,2]", 4), ("local[16]", 16),
+        ("local", 7), ("local[*]", 7), ("local[*,3]", 7),
+        ("local-cluster[2,1,1024]", 7), ("spark://host:7077", 7),
+        ("yarn", 7),
+    ):
+        assert session.master_cores(master, 7) == want, master
+
+
 @pytest.mark.slow
 def test_python_udf_runs_from_another_cwd_without_pythonpath(tmp_path):
     """The daemon module must import in workers started from a CWD that

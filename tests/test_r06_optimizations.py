@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators import (
-    dedup, mixing, retrieval, textstats,
+    mixing, retrieval, textstats,
 )
 
 
@@ -22,32 +22,9 @@ def _tokseq(spark, rows):
     )
 
 
-def test_span_dedup_saturated_skip_matches_unfiltered(spark):
-    """A fully-duplicated corpus drives the hot-fraction probe to 1.0,
-    which takes the r06 skip-the-broadcast-prune branch; its spans must
-    equal the prefilter=False direct computation (and stay non-empty)."""
-    base = [list(range(i, i + 12)) for i in range(4)]
-    rows = []
-    for rep in range(3):  # every 8-gram occurs >= 3 times corpus-wide
-        for i, t in enumerate(base):
-            rows.append((f"doc_{rep}_{i}", t, len(t), "web"))
-    ts = _tokseq(spark, rows)
-    got = sorted(
-        tuple(r)
-        for r in dedup.duplicate_gram_spans(ts, k=8).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in dedup.duplicate_gram_spans(
-            ts, k=8, prefilter=False
-        ).collect()
-    )
-    assert got == want and len(got) > 0
-
-
 def test_nb_fit_kernel_matches_sql_trainer(spark):
     """The numpy fit's literals equal the SQL trainer's collected model
-    bit-for-bit (counts exact, shared libm for the closed forms)."""
+    bit-for-bit (counts exact; Spark evaluates both closed forms)."""
     rows = [
         (f"doc_{i}", [j % 7 - 3 for j in range(i)] + [i * 31], i + 1, "web")
         for i in range(40)
