@@ -344,8 +344,9 @@ def minhash_signatures_kernel(
     the SQL dialect relies on.
     """
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
+
+    from audio_feature_extraction_spark.core.arrow_lists import list_array, read_list
 
     num_perm, prime = spec.num_perm, spec.prime
     a0, astep, b0, bstep = spec.a0, spec.astep, spec.b0, spec.bstep
@@ -353,46 +354,33 @@ def minhash_signatures_kernel(
     def run(batches):
         A = np.array([a0 + j * astep for j in range(num_perm)], dtype=np.int64)
         B = np.array([b0 + j * bstep for j in range(num_perm)], dtype=np.int64)
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy(dtype=object)
-            # NULL token arrays act as empty (sentinel signature) rather
-            # than crashing the batch — same drop-don't-die policy as
-            # similarity._stack_fixed
-            toks = [
-                np.asarray(() if t is None else t, dtype=np.int64)
-                for t in pdf["tokens"]
-            ]
-            lens = np.fromiter(
-                (max(len(t) - 1, 0) for t in toks), dtype=np.int64, count=len(toks)
-            )
+        for batch in batches:
+            # a NULL token array acts as empty (sentinel signature)
+            tok = read_list(batch, "tokens", np.int64)
+            # a shingle touching a NULL element is NULL, and the SQL twins
+            # skip it
+            keep = tok.pairs() & tok.valid[:-1] & tok.valid[1:]
+            codes = (tok.values[:-1] * 32768 + tok.values[1:])[keep]
+            # ck[p]: kept shingles before flat position p (p <= len(values));
+            # doc d's shingles start at position offsets[d]
+            ck = np.concatenate([[0], np.cumsum(np.append(keep, False))])
+            starts = ck[tok.offsets[:-1]]
+            lens = ck[np.maximum(tok.offsets[1:] - 1, tok.offsets[:-1])] - starts
+            # empty shingle sets (docs shorter than 2 tokens, or all
+            # shingles NULL) keep the sentinel `prime`, matching the SQL
+            # coalesce
+            sig = np.full((batch.num_rows, num_perm), prime, dtype=np.int64)
             nonempty = np.nonzero(lens > 0)[0]
-            parts = [toks[i][:-1] * 32768 + toks[i][1:] for i in nonempty]
-            codes = (
-                np.concatenate(parts) if parts else np.empty(0, np.int64)
-            )
-            offs = np.concatenate([[0], np.cumsum(lens)])
-            # empty shingle sets (docs shorter than 2 tokens) keep the
-            # sentinel `prime`, matching the SQL coalesce
-            sig = np.full((len(toks), num_perm), prime, dtype=np.int64)
             if len(nonempty):
-                starts = offs[nonempty]
                 for j in range(num_perm):
                     v = (A[j] * codes + B[j]) % prime
-                    sig[nonempty, j] = np.minimum.reduceat(v, starts)
-            sig_offs = np.arange(
-                0, num_perm * (len(toks) + 1), num_perm, dtype=np.int32
-            )
-            sig_list = pa.ListArray.from_arrays(
-                pa.array(sig_offs), pa.array(sig.ravel())
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "signature": pd.arrays.ArrowExtensionArray(sig_list),
-                }
+                    sig[nonempty, j] = np.minimum.reduceat(v, starts[nonempty])
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), list_array(sig)],
+                names=["doc_id", "signature"],
             )
 
-    return tokseq.select("doc_id", "tokens").mapInPandas(
+    return tokseq.select("doc_id", "tokens").mapInArrow(
         run, schema="doc_id string, signature array<bigint>"
     )
 

@@ -12,9 +12,10 @@ channels are per-frame token stats (mean/std/min/max/distinct_ratio).
 Two implementations with *bit-identical* output (tested):
 
 * ``frame_features`` / ``frame_features_flat`` — the scale path: one
-  whole-batch Arrow kernel per partition (``mapInPandas``): strided
-  bincount histograms, integer prefix sums, a single int16 sort, and
-  zero-copy Arrow list outputs.
+  whole-batch Arrow kernel per partition (``mapInArrow``): the token
+  lists are read as flat values + offsets, then strided bincount
+  histograms, integer prefix sums, a single int16 sort, and zero-copy
+  Arrow list outputs.
   This is the UDTF shape (1 row in → n_frames rows out, SURVEY §2.10 X3).
   Narrow — no shuffle; parallelism = input splits.
 * ``frame_features_sql`` / ``*_oracle_sql`` — pure-SQL formulations
@@ -33,12 +34,16 @@ import math
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from audio_feature_extraction_spark.core.arrow_lists import (
+    list_array,
+    read_list,
+    slice_bounds,
+)
 from audio_feature_extraction_spark.core.config import DEFAULT_FRAME, FrameSpec
 from audio_feature_extraction_spark.core.schemas import FRAME_FEATURES
 
@@ -239,13 +244,15 @@ def _db_table(spec: FrameSpec, max_count: int) -> np.ndarray:
 
 
 def featurize_batch(
-    doc_ids: np.ndarray,
-    tok_arrays: list[np.ndarray],
+    doc_ids: pa.Array,
+    values: np.ndarray,
+    offsets: np.ndarray,
     spec: FrameSpec,
     compact: bool = False,
-) -> pd.DataFrame:
-    """Whole-batch vectorized kernel: ALL documents of an Arrow batch are
-    concatenated and processed in one numpy pass (no per-doc Python loop).
+) -> pa.RecordBatch:
+    """Whole-batch vectorized kernel: doc ``i`` of ``doc_ids`` holds the
+    int32 tokens ``values[offsets[i]:offsets[i + 1]]``, and ALL documents
+    are processed in one numpy pass (no per-doc Python loop).
 
     Correctness of the concatenation trick: frame [s, e) of a doc only
     touches bigrams (i, i+1) for i in [s, e-1), and e never exceeds the
@@ -254,38 +261,35 @@ def featurize_batch(
     only ever difference within-doc ranges.
     """
     h, l, nb = spec.hop, spec.frame_len, spec.n_buckets
-    lens = np.fromiter((len(a) for a in tok_arrays), dtype=np.int64, count=len(tok_arrays))
+    t32 = np.asarray(values[offsets[0] : offsets[-1]], dtype=np.int32)
+    lens = np.diff(offsets)
     keep = lens > 0
-    if not keep.any():
-        return pd.DataFrame()
-    doc_ids = np.asarray(doc_ids, dtype=object)[keep]
-    tok_arrays = [a for a, k in zip(tok_arrays, keep) if k]
+    doc_ids = doc_ids.filter(pa.array(keep))
     lens = lens[keep]
 
     if spec.center:
         # centered grid = reflect-pad each doc (left l//2, right l-l//2),
-        # then run the STANDARD grid over the padded arrays: frame f of
+        # then run the STANDARD grid over the padded docs: frame f of
         # the padded doc covers exactly [f*h - l//2, ...) of the original.
         # Same clamped reflection as the SQL fragments; n_frames = n//h+1.
         p = l // 2
-        orig_lens = lens
-        padded = []
-        for a in tok_arrays:
-            a = np.asarray(a, dtype=np.int32)
-            n_ = len(a)
-            idx = np.arange(-p, n_ + (l - p))
-            # branches EXCLUSIVE on the original index, exactly like the
-            # SQL CASE in _centered_rc (a sequential flip-then-reflect
-            # would diverge for docs shorter than the pad)
-            r = np.where(idx < 0, -idx, np.where(idx >= n_, 2 * n_ - 2 - idx, idx))
-            padded.append(a[np.clip(r, 0, n_ - 1)])
-        tok_arrays = padded
-        lens = lens + l  # padded lengths drive the offsets below
-        nf_doc = orig_lens // h + 1
+        padded = lens + l
+        n_rep = np.repeat(lens, padded)
+        idx = (
+            np.arange(padded.sum(), dtype=np.int64)
+            - np.repeat(np.cumsum(padded) - padded, padded)
+            - p
+        )
+        # branches EXCLUSIVE on the original index, exactly like the
+        # SQL CASE in _centered_rc (a sequential flip-then-reflect
+        # would diverge for docs shorter than the pad)
+        r = np.where(idx < 0, -idx, np.where(idx >= n_rep, 2 * n_rep - 2 - idx, idx))
+        t32 = t32[np.repeat(np.cumsum(lens) - lens, padded) + np.clip(r, 0, n_rep - 1)]
+        nf_doc = lens // h + 1
+        lens = padded  # padded lengths drive the offsets below
     else:
         nf_doc = (lens - 1) // h + 1
 
-    t32 = np.concatenate([np.asarray(a, dtype=np.int32) for a in tok_arrays])
     n = len(t32)
     # narrowest dtype for the sort-heavy path (vocab 32768 fits int16)
     tnarrow = t32.astype(np.int16) if t32.max(initial=0) < 32768 else t32
@@ -320,21 +324,19 @@ def featurize_batch(
     floor = dbt[counts.max(axis=1)] - spec.top_db
     db = np.maximum(db, floor[:, None])
 
+    # zero-copy Arrow list columns: building 2×total per-row Python
+    # objects (token slices + feature rows) dominates otherwise
+    head = [
+        doc_ids.take(pa.array(frame_doc)),
+        pa.array(fid.astype(np.int32)),
+    ]
     if compact:
         # training-export shape: float32 features only (cast parity with
         # Spark/DuckDB FLOAT verified), no tokens/stats — ~4x fewer
         # output bytes, and the sort/stat passes are skipped entirely
-        f32 = db.astype(np.float32)
-        feat_offs = np.arange(0, nb * (total + 1), nb, dtype=np.int32)
-        feat_list = pa.ListArray.from_arrays(
-            pa.array(feat_offs), pa.array(f32.ravel())
-        )
-        return pd.DataFrame(
-            {
-                "doc_id": np.repeat(doc_ids, nf_doc),
-                "frame_id": fid.astype(np.int32),
-                "features": pd.arrays.ArrowExtensionArray(feat_list),
-            }
+        return pa.RecordBatch.from_arrays(
+            head + [list_array(db.astype(np.float32))],
+            names=FRAME_FEATURES_COMPACT.names,
         )
 
     t64 = t32.astype(np.int64)
@@ -361,8 +363,6 @@ def featurize_batch(
         mn[f] = seg.min()
         mx[f] = seg.max()
         nd[f] = len(np.unique(seg))
-    # zero-copy Arrow list columns: building 2×total per-row Python
-    # objects (token slices + feature rows) dominates otherwise
     flens_i = (ends - starts).astype(np.int64)
     offs = np.concatenate([[0], np.cumsum(flens_i)])
     intra = np.arange(offs[-1], dtype=np.int64) - np.repeat(offs[:-1], flens_i)
@@ -370,20 +370,18 @@ def featurize_batch(
     tok_list = pa.ListArray.from_arrays(
         pa.array(offs, type=pa.int32()), pa.array(t32[gather])
     )
-    feat_offs = np.arange(0, nb * (total + 1), nb, dtype=np.int32)
-    feat_list = pa.ListArray.from_arrays(pa.array(feat_offs), pa.array(db.ravel()))
-    return pd.DataFrame(
-        {
-            "doc_id": np.repeat(doc_ids, nf_doc),
-            "frame_id": fid.astype(np.int32),
-            "frame_tokens": pd.arrays.ArrowExtensionArray(tok_list),
-            "features": pd.arrays.ArrowExtensionArray(feat_list),
-            "stat_mean": mean,
-            "stat_std": std,
-            "stat_min": mn.astype(np.int32),
-            "stat_max": mx.astype(np.int32),
-            "stat_distinct_ratio": nd / flens,
-        }
+    return pa.RecordBatch.from_arrays(
+        head
+        + [
+            tok_list,
+            list_array(db),
+            pa.array(mean),
+            pa.array(std),
+            pa.array(mn.astype(np.int32)),
+            pa.array(mx.astype(np.int32)),
+            pa.array(nd / flens),
+        ],
+        names=FRAME_FEATURES_FLAT.names,
     )
 
 
@@ -401,12 +399,6 @@ FRAME_FEATURES_FLAT = T.StructType(
     ]
 )
 
-# cap the concatenated token count per kernel invocation — keeps each
-# slice's working set near L2/L3-resident so concurrent workers don't
-# saturate DRAM bandwidth (measured optimum ~64k tokens across 1/4/16/32
-# worker configurations)
-_MAX_TOKENS_PER_SLICE = 64_000
-
 FRAME_FEATURES_COMPACT = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -416,32 +408,46 @@ FRAME_FEATURES_COMPACT = T.StructType(
 )
 
 
+def _frame_kernel(df: DataFrame, spec: FrameSpec, compact: bool) -> DataFrame:
+    """One narrow ``mapInArrow`` stage running :func:`featurize_batch`
+    over each Arrow batch, in slices of about ``MAX_TOKENS_PER_SLICE``
+    tokens so the histogram working set stays bounded.
+
+    A NULL ``tokens`` row yields no frames, like an empty one. A NULL
+    token element raises ``ValueError`` naming the doc: the SQL twins do
+    not agree on it (Spark's ``aggregate`` gives a NULL mean, DuckDB's
+    ``list_sum`` skips the NULL), so the kernel invents no third answer.
+    """
+    l, h, c = spec.frame_len, spec.hop, spec.center  # close over plain values
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        kspec = FrameSpec(frame_len=l, hop=h, center=c)
+        for batch in batches:
+            tok = read_list(batch, "tokens", np.int32)
+            if not tok.valid.all():
+                row = np.searchsorted(tok.offsets, np.argmin(tok.valid), side="right") - 1
+                raise ValueError(
+                    f"frame features: doc_id {batch.column('doc_id')[row]} "
+                    f"has a NULL token element"
+                )
+            ids = batch.column("doc_id")
+            for lo, hi in slice_bounds(tok.offsets):
+                out = featurize_batch(
+                    ids[lo:hi], tok.values, tok.offsets[lo : hi + 1], kspec, compact
+                )
+                if out.num_rows:
+                    yield out
+
+    schema = FRAME_FEATURES_COMPACT if compact else FRAME_FEATURES_FLAT
+    return df.select("doc_id", "tokens").mapInArrow(run, schema=schema)
+
+
 def frame_features_compact(df: DataFrame, spec: FrameSpec = DEFAULT_FRAME) -> DataFrame:
     """Compact float32 feature export (no tokens/stats) — the shape a
     training pipeline ships to a feature store at 100 TB: ~4x fewer
     output bytes than the full table, bit-exact vs the oracle after the
     double->float cast (IEEE round-to-nearest in all engines)."""
-    l, h, c = spec.frame_len, spec.hop, spec.center
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kspec = FrameSpec(frame_len=l, hop=h, center=c)
-        for pdf in batches:
-            toks = [np.asarray(a) for a in pdf["tokens"]]
-            ids = pdf["doc_id"].to_numpy(dtype=object)
-            lo = 0
-            while lo < len(toks):
-                hi, acc = lo, 0
-                while hi < len(toks) and (acc == 0 or acc < _MAX_TOKENS_PER_SLICE):
-                    acc += len(toks[hi])
-                    hi += 1
-                out = featurize_batch(ids[lo:hi], toks[lo:hi], kspec, compact=True)
-                if len(out):
-                    yield out
-                lo = hi
-
-    return df.select("doc_id", "tokens").mapInPandas(
-        run, schema=FRAME_FEATURES_COMPACT
-    )
+    return _frame_kernel(df, spec, compact=True)
 
 
 def frame_features_flat(df: DataFrame, spec: FrameSpec = DEFAULT_FRAME) -> DataFrame:
@@ -449,28 +455,10 @@ def frame_features_flat(df: DataFrame, spec: FrameSpec = DEFAULT_FRAME) -> DataF
 
     ≙ SpectrogramExtractor.extract batched on GPU (design.md:557-592,
     2255-2256) — the "batch kernel" is one numpy pass per Arrow batch.
-    Narrow mapInPandas stage: no shuffle, parallelism = input splits.
+    Narrow ``mapInArrow`` stage: no shuffle, parallelism = input splits;
+    NULL handling as in :func:`_frame_kernel`.
     """
-    l, h, c = spec.frame_len, spec.hop, spec.center  # close over plain values
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kspec = FrameSpec(frame_len=l, hop=h, center=c)
-        for pdf in batches:
-            toks = [np.asarray(a) for a in pdf["tokens"]]
-            ids = pdf["doc_id"].to_numpy(dtype=object)
-            # slice the batch so the histogram working set stays bounded
-            lo = 0
-            while lo < len(toks):
-                hi, acc = lo, 0
-                while hi < len(toks) and (acc == 0 or acc < _MAX_TOKENS_PER_SLICE):
-                    acc += len(toks[hi])
-                    hi += 1
-                out = featurize_batch(ids[lo:hi], toks[lo:hi], kspec)
-                if len(out):
-                    yield out
-                lo = hi
-
-    return df.select("doc_id", "tokens").mapInPandas(run, schema=FRAME_FEATURES_FLAT)
+    return _frame_kernel(df, spec, compact=False)
 
 
 def frame_features(df: DataFrame, spec: FrameSpec = DEFAULT_FRAME) -> DataFrame:

@@ -303,72 +303,25 @@ def dsir_lambda_table(tokseq: DataFrame) -> DataFrame:
     )
 
 
-def _dsir_fit_literals_kernel(tokseq: DataFrame) -> list[int]:
-    """Exact-integer DSIR fit in ONE Arrow kernel pass over the train
-    split (r06): per-task numpy bincounts over the hashed-bigram
-    buckets replace the train-split explode + bucket aggregation.
-    Counts are exact int64 (the bigram hash promotes to BIGINT exactly
-    like the SQL; the split predicate replicates Spark's non-ANSI
-    integer semantics) and Spark evaluates the lam closed form
-    (:func:`~.textstats._fit_literals`), so the literals are
-    bit-identical to :func:`dsir_lambda_table`'s (parity-tested)."""
+def _dsir_buckets(tok):
+    """DSIR features: one hashed-bigram bucket per adjacent token pair;
+    the hash promotes to BIGINT exactly like the SQL."""
     import numpy as np
-    import pandas as pd
-
-    from .textstats import _distinct_counts_np, _fit_literals, _train_mask_np
 
     v, m1, m2, off = DSIR_BUCKETS, DSIR_M1, DSIR_M2, DSIR_OFF
+    t, inside = tok.values, tok.pairs()
+    x = (t[:-1] * np.int64(m1) + t[1:] * np.int64(m2))[inside] + np.int64(off)
+    ok = (tok.valid[:-1] & tok.valid[1:])[inside]
+    per_doc = np.maximum(np.diff(tok.offsets) - 1, 0)
+    return np.where(ok, x % np.int64(v), v), per_doc  # pmod
 
-    def cell(t):
-        # (int64 values, non-null mask): Arrow hands an int list with
-        # NULL elements over as floats with NaN
-        a = np.asarray(() if t is None else t)
-        ok = ~pd.isna(a)
-        return np.where(ok, a, 0).astype(np.int64), ok
 
-    def cat(parts, dtype):
-        return np.concatenate(parts) if parts else np.empty(0, dtype)
+def _dsir_fit_literals_kernel(tokseq: DataFrame) -> list[int]:
+    """The DSIR fit: :func:`dsir_lambda_table`'s ``lam`` literals
+    (parity-tested)."""
+    from .textstats import _fit_literals_kernel
 
-    def run(batches):
-        # slot v holds the features that touch a NULL element: they count
-        # toward the split totals but in no bucket (the SQL trainer's
-        # NULL group)
-        c1 = np.zeros(v + 1, dtype=np.int64)
-        c0 = np.zeros(v + 1, dtype=np.int64)
-        for pdf in batches:
-            train = _train_mask_np(pdf["doc_id"].tolist())
-            if not train.any():
-                continue
-            cells = [cell(t) for t, m in zip(pdf["tokens"], train) if m]
-            toks = [t for t, _ in cells]
-            oks = [ok for _, ok in cells]
-            n_tok = pdf["n_tok"].to_numpy()[train]
-            lens = np.fromiter(
-                (len(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            allv, allok = cat(toks, np.int64), cat(oks, bool)
-            doc_idx = np.repeat(np.arange(len(toks)), lens)
-            distinct = _distinct_counts_np(
-                doc_idx[allok], allv[allok], len(toks)
-            )
-            is_t = (distinct * 2 >= n_tok).astype(np.int64)
-            blens = np.maximum(lens - 1, 0)
-            x = cat([t[:-1] * np.int64(m1) + t[1:] * np.int64(m2)
-                     for t in toks if len(t) > 1], np.int64) + np.int64(off)
-            pair_ok = cat([ok[:-1] & ok[1:] for ok in oks if len(ok) > 1],
-                          bool)
-            buckets = np.where(pair_ok, x % np.int64(v), v)  # pmod
-            feat_t = np.repeat(is_t, blens)
-            c1 += np.bincount(buckets[feat_t == 1], minlength=v + 1)
-            c0 += np.bincount(buckets[feat_t == 0], minlength=v + 1)
-        yield pd.DataFrame({"c1": [c1.tolist()], "c0": [c0.tolist()]})
-
-    parts = tokseq.select("doc_id", "tokens", "n_tok").mapInPandas(
-        run, schema="c1 array<long>, c0 array<long>"
-    ).collect()
-    c1 = [sum(p.c1[i] for p in parts) for i in range(v + 1)]
-    c0 = [sum(p.c0[i] for p in parts) for i in range(v + 1)]
-    return _fit_literals(tokseq.sparkSession, c1, c0, v)[0]
+    return _fit_literals_kernel(tokseq, DSIR_BUCKETS, _dsir_buckets)[0]
 
 
 def dsir_weights(tokseq: DataFrame) -> DataFrame:

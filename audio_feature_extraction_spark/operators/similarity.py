@@ -13,8 +13,12 @@ hyperplanes are deterministic affine constructions, not RNG.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from audio_feature_extraction_spark.core.arrow_lists import list_array, read_fixed
 
 
 def _dot_expr(a: str, b: str, spark: bool) -> str:
@@ -148,33 +152,42 @@ def _tables_union_sql(
     )
 
 
-def _stack_fixed(values, dim: int):
-    """Stack per-row vectors into an (n, dim) float64 matrix; returns
-    (matrix, valid_mask).
+# The vector kernels read their fixed-width columns through
+# ``arrow_lists.read_fixed`` and DROP a row that is NULL, shorter than
+# ``dim`` or NULL in one of its first ``dim`` elements (``on_error='skip'``
+# semantics, like the media decode path) instead of letting one malformed
+# row kill the whole job (ADVICE r02). The SQL twins differ on such input:
+# ``element_at`` past the end yields NULL, which propagates to a NULL dot
+# (bucket 0 / NULL cosine) — neither output is meaningful, so the kernels
+# prefer the explicit drop. Elements beyond ``dim`` are ignored in both
+# formulations. Passthrough columns stay Arrow buffers (filter/take).
 
-    A row that is NULL or shorter than ``dim`` is marked invalid — the
-    kernels DROP such rows (``on_error='skip'`` semantics, like the media
-    decode path) instead of letting one malformed row kill the whole job
-    via ``np.stack`` (ADVICE r02). Note the SQL twins differ on malformed
-    input: ``element_at`` past the end yields NULL, which propagates to a
-    NULL dot (bucket 0 / NULL cosine) — neither output is meaningful, so
-    the kernels prefer the explicit drop. Elements beyond ``dim`` are
-    ignored in both formulations.
-    """
-    import numpy as np
 
-    n = len(values)
-    M = np.zeros((n, dim), dtype=np.float64)
-    valid = np.zeros(n, dtype=bool)
-    for j, v in enumerate(values):
-        if v is None:
-            continue
-        a = np.asarray(v, dtype=np.float64)
-        if a.ndim != 1 or a.shape[0] < dim:
-            continue
-        M[j] = a[:dim]
-        valid[j] = True
-    return M, valid
+def _pair_score_kernel(
+    df: DataFrame, a_col: str, b_col: str, dim: int, dtype, score,
+    out_col: str, out_type: str,
+) -> DataFrame:
+    """``mapInArrow`` that drops the two vector columns of ``df`` and
+    appends ``out_col = score(A, B)`` over their ``(rows, dim)``
+    matrices; rows malformed in either column are dropped."""
+    keep = [c for c in df.columns if c not in (a_col, b_col)]
+    keep_t = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+
+    def run(batches):
+        for batch in batches:
+            A, va = read_fixed(batch, a_col, dim, dtype)
+            B, vb = read_fixed(batch, b_col, dim, dtype)
+            ok = va & vb
+            if not ok.any():
+                continue
+            kept = batch.filter(pa.array(ok)).select(keep)
+            yield pa.RecordBatch.from_arrays(
+                kept.columns + [score(A[vb[va]], B[va[vb]])],
+                names=keep + [out_col],
+            )
+
+    schema = ", ".join([f"{c} {keep_t[c]}" for c in keep] + [f"{out_col} {out_type}"])
+    return df.mapInArrow(run, schema=schema)
 
 
 def lsh_buckets_kernel(
@@ -195,9 +208,6 @@ def lsh_buckets_kernel(
     interpreted SQL lambdas re-evaluate n_tables*n_planes transforms per
     row and dominate the ANN bench, like MinHash before its kernel.
     """
-    import numpy as np
-    import pandas as pd
-
     out_id = out_id or id_col
     n_hp = n_tables * n_planes
 
@@ -206,41 +216,33 @@ def lsh_buckets_kernel(
         P = np.arange(n_hp, dtype=np.int64)[:, None]
         I = np.arange(dim, dtype=np.int64)[None, :]
         coef = ((P * 1009 + I * 9176 + 13) % 2001 - 1000).astype(np.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V, valid = _stack_fixed(pdf[vec_col], dim)
-            if not valid.all():
-                pdf = pdf[valid].reset_index(drop=True)
-                V = V[valid]
-            n = len(pdf)
+        weights = 1 << (np.arange(n_hp, dtype=np.int64) % n_planes)
+        tbl = np.arange(n_tables, dtype=np.int32)
+        for batch in batches:
+            V, ok = read_fixed(batch, vec_col, dim)
+            n = len(V)
             if not n:
                 continue
             # sequential left fold over dims — matches SQL aggregate()
             dots = np.zeros((n, n_hp), dtype=np.float64)
             for i in range(dim):
                 dots += V[:, i : i + 1] * coef[:, i][None, :]
-            bits = (dots > 0).astype(np.int64)
-            weights = 1 << (np.arange(n_hp, dtype=np.int64) % n_planes)
-            weighted = bits * weights[None, :]
+            weighted = (dots > 0) * weights[None, :]
             buckets = weighted.reshape(n, n_tables, n_planes).sum(axis=2)
-            out = pd.DataFrame(
-                {
-                    out_id: np.repeat(pdf[id_col].to_numpy(), n_tables),
-                    vec_col: [
-                        v for v in pdf[vec_col] for _ in range(n_tables)
-                    ],
-                    "tbl": np.tile(
-                        np.arange(n_tables, dtype=np.int32), n
-                    ),
-                    "bucket": buckets.ravel().astype(np.int32),
-                }
+            rows = pa.array(np.repeat(np.nonzero(ok)[0], n_tables))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(id_col).take(rows),
+                    batch.column(vec_col).take(rows),
+                    pa.array(np.tile(tbl, n)),
+                    pa.array(buckets.ravel().astype(np.int32)),
+                ],
+                names=[out_id, vec_col, "tbl", "bucket"],
             )
-            yield out
 
     id_type = dict(df.dtypes)[id_col]
     vec_type = dict(df.dtypes)[vec_col]
-    return df.select(id_col, vec_col).mapInPandas(
+    return df.select(id_col, vec_col).mapInArrow(
         run,
         schema=f"{out_id} {id_type}, {vec_col} {vec_type}, tbl int, bucket int",
     )
@@ -256,39 +258,21 @@ def cosine_scores_kernel(
     like the SQL aggregate()), vectorized across rows. Drops the two
     vector columns and appends ``out_col``.
     """
-    import numpy as np
-    import pandas as pd
+    def score(A, B):
+        dot = np.zeros(len(A))
+        na = np.zeros(len(A))
+        nb = np.zeros(len(A))
+        for i in range(dim):
+            x, y = A[:, i], B[:, i]
+            dot += x * y
+            na += x * x
+            nb += y * y
+        # a zero-norm vector's 0/0 reads NULL, as Spark's division by 0
+        return pa.array(dot / (np.sqrt(na) * np.sqrt(nb)), from_pandas=True)
 
-    keep = [c for c in df.columns if c not in (a_col, b_col)]
-    keep_t = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A, va = _stack_fixed(pdf[a_col], dim)
-            B, vb = _stack_fixed(pdf[b_col], dim)
-            valid = va & vb
-            if not valid.all():
-                pdf = pdf[valid].reset_index(drop=True)
-                A, B = A[valid], B[valid]
-            if not len(pdf):
-                continue
-            n = len(pdf)
-            dot = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for i in range(dim):
-                x, y = A[:, i], B[:, i]
-                dot += x * y
-                na += x * x
-                nb += y * y
-            out = pdf[keep].copy()
-            out[out_col] = dot / (np.sqrt(na) * np.sqrt(nb))
-            yield out
-
-    schema = ", ".join([f"{c} {keep_t[c]}" for c in keep] + [f"{out_col} double"])
-    return df.mapInPandas(run, schema=schema)
+    return _pair_score_kernel(
+        df, a_col, b_col, dim, np.float64, score, out_col, "double"
+    )
 
 
 def lsh_topk(
@@ -424,23 +408,15 @@ def quantize_kernel(
     """Arrow-kernel twin of ``quantized_vec_sql`` — the norm is the same
     sequential left fold the SQL ``aggregate()`` computes, so the floor
     inputs (hence the integer codes) match exactly."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
     out_id = out_id or id_col
     id_type = dict(df.dtypes)[id_col]
 
     def run(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            M, ok = read_fixed(batch, vec_col, dim)
+            if not len(M):
                 continue
-            M, valid = _stack_fixed(pdf[vec_col], dim)
-            pdf = pdf[valid].reset_index(drop=True)
-            M = M[valid]
-            if not len(pdf):
-                continue
-            nsq = np.zeros(len(pdf))
+            nsq = np.zeros(len(M))
             for i in range(dim):
                 nsq += M[:, i] * M[:, i]
             n = np.sqrt(nsq)
@@ -449,15 +425,12 @@ def quantize_kernel(
                 np.int64
             )
             Q[n == 0.0] = 0
-            out = pd.DataFrame({out_id: pdf[id_col]})
-            out[out_col] = pd.arrays.ArrowExtensionArray(
-                pa.FixedSizeListArray.from_arrays(
-                    pa.array(Q.reshape(-1), type=pa.int64()), dim
-                ).cast(pa.list_(pa.int64()))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col).filter(pa.array(ok)), list_array(Q)],
+                names=[out_id, out_col],
             )
-            yield out
 
-    return df.select(id_col, vec_col).mapInPandas(
+    return df.select(id_col, vec_col).mapInArrow(
         run, schema=f"{out_id} {id_type}, {out_col} array<bigint>"
     )
 
@@ -468,24 +441,12 @@ def int_dot_scores_kernel(
     """Exact integer dot of two quantized-code arrays (order-independent
     — integer addition is associative, so any engine agrees). Drops the
     two code columns and appends ``out_col``."""
-    import numpy as np
-    import pandas as pd
+    def score(A, B):
+        return pa.array((A * B).sum(axis=1))
 
-    keep = [c for c in df.columns if c not in (a_col, b_col)]
-    keep_t = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.stack([np.asarray(v, dtype=np.int64) for v in pdf[a_col]])
-            B = np.stack([np.asarray(v, dtype=np.int64) for v in pdf[b_col]])
-            out = pdf[keep].copy()
-            out[out_col] = (A * B).sum(axis=1)
-            yield out
-
-    schema = ", ".join([f"{c} {keep_t[c]}" for c in keep] + [f"{out_col} bigint"])
-    return df.mapInPandas(run, schema=schema)
+    return _pair_score_kernel(
+        df, a_col, b_col, dim, np.int64, score, out_col, "bigint"
+    )
 
 
 def lsh_rerank_topk(
@@ -957,9 +918,6 @@ def semdedup_assign_kernel(
     rows by construction, the same contract as the PQ codebook.
     ``dim`` must equal the vector length (the expression twin folds the
     whole array; the kernel folds exactly ``dim``)."""
-    import numpy as np
-    import pandas as pd
-
     cents = sorted(
         emb.where(F.col(id_col) < n_clusters)
         .select(
@@ -982,27 +940,24 @@ def semdedup_assign_kernel(
     def run(batches):
         C, ls = bc.value
         k = C.shape[0]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V, valid = _stack_fixed(pdf[vec_col], dim)
-            if not valid.all():
-                pdf = pdf[valid].reset_index(drop=True)
-                V = V[valid]
-            if not len(pdf):
+        for batch in batches:
+            V, ok = read_fixed(batch, vec_col, dim)
+            if not len(V):
                 continue
             D = np.zeros((len(V), k), dtype=np.float64)
             for i in range(dim):
                 diff = V[:, i : i + 1] - C[:, i][None, :]
                 D += diff * diff
             idx = np.argmin(D, axis=1)       # first min -> lowest l
-            out = pdf[[id_col, vec_col]].copy()
-            out["_cl"] = ls[idx]
-            yield out
+            kept = batch.filter(pa.array(ok))
+            yield pa.RecordBatch.from_arrays(
+                [kept.column(id_col), kept.column(vec_col), pa.array(ls[idx])],
+                names=[id_col, vec_col, "_cl"],
+            )
 
     id_type = dict(emb.dtypes)[id_col]
     vec_type = dict(emb.dtypes)[vec_col]
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select(id_col, vec_col).mapInArrow(
         run, schema=f"{id_col} {id_type}, {vec_col} {vec_type}, _cl int"
     )
 
@@ -1246,8 +1201,6 @@ def train_codebook(
       quantization/encoding of the corpus stays a per-row JVM
       expression (or the LUT kernel) over the broadcast result.
     """
-    import numpy as np
-
     if dim % m != 0:
         raise ValueError(f"m={m} must divide dim={dim}")
     dsub = dim // m
@@ -1372,8 +1325,6 @@ def pq_topk(
     if use_kernel:
         # the scale scoring path: per-query (m x codes) integer LUT,
         # O(m) lookups per vector, batch-local shortlists only
-        import numpy as np
-
         # The kernel is a SERVING path: queries are collected to the
         # driver and broadcast into the LUT. Fail fast with guidance
         # instead of letting an unbounded query frame OOM the driver
@@ -1503,9 +1454,6 @@ def pq_adc_scores_kernel(
     assumption as every query side here. ``cb_matrix``: (codes x dim)
     int64 numpy array of quantized pivot vectors, row i = pivot i.
     """
-    import numpy as np
-    import pandas as pd
-
     qids = [q for q, _ in query_rows]
     Q = np.stack([np.asarray(v, dtype=np.int64) for _, v in query_rows])
     codes_n = cb_matrix.shape[0]
@@ -1518,19 +1466,18 @@ def pq_adc_scores_kernel(
     id_type = dict(encoded.dtypes)[id_col]
 
     def run(batches):
-        for pdf in batches:
-            if not len(pdf):
+        j_idx = np.arange(m)[None, :]
+        for batch in batches:
+            C, ok = read_fixed(batch, "codes", m, np.int64)   # (n, m)
+            if not len(C):
                 continue
-            ids = pdf[id_col].to_numpy()
-            C = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )                                          # (n, m)
-            j_idx = np.arange(m)[None, :]
-            outs = []
+            id_arr = batch.column(id_col).filter(pa.array(ok))
+            ids = id_arr.to_numpy(zero_copy_only=False)
+            q_pos, n_pos, adcs = [], [], []
             for qi, qid in enumerate(qids):
                 adc = lut[qi][j_idx, C].sum(axis=1)    # (n,)
-                keep = ~(ids == qid)
-                a, i = adc[keep], ids[keep]
+                pos = np.nonzero(ids != qid)[0]
+                a = adc[pos]
                 if len(a) > shortlist:
                     # Tie-safe partial select: keep EVERYTHING at or below
                     # the shortlist-th smallest adc (argpartition on adc
@@ -1539,18 +1486,22 @@ def pq_adc_scores_kernel(
                     part = np.argpartition(a, shortlist - 1)
                     thresh = a[part[shortlist - 1]]
                     tied = a <= thresh
-                    a, i = a[tied], i[tied]
-                order = np.lexsort((i, a))             # (adc, id) stable
-                a, i = a[order][:shortlist], i[order][:shortlist]
-                outs.append(
-                    pd.DataFrame(
-                        {"query_id": qid, "neighbor_id": i, "adc": a}
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+                    a, pos = a[tied], pos[tied]
+                order = np.lexsort((ids[pos], a))[:shortlist]  # (adc, id)
+                q_pos.append(np.full(len(order), qi))
+                n_pos.append(pos[order])
+                adcs.append(a[order])
+            q_arr = pa.array(qids, type=id_arr.type)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    q_arr.take(pa.array(np.concatenate(q_pos))),
+                    id_arr.take(pa.array(np.concatenate(n_pos))),
+                    pa.array(np.concatenate(adcs)),
+                ],
+                names=["query_id", "neighbor_id", "adc"],
+            )
 
-    return encoded.select(id_col, "codes").mapInPandas(
+    return encoded.select(id_col, "codes").mapInArrow(
         run,
         schema=f"query_id {id_type}, neighbor_id {id_type}, adc bigint",
     )

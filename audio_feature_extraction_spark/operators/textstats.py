@@ -9,8 +9,12 @@ narrow maps over the documents scan — zero shuffle, column-pruned to
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from audio_feature_extraction_spark.core.arrow_lists import list_array, read_list
 
 # tiny per-language stopword marker sets (heuristic lang-id)
 LANG_MARKERS = {
@@ -515,8 +519,6 @@ def _num_id_np(doc_ids) -> "tuple":
     BIGINT)``: digits-only id as int64, with Spark's non-ANSI
     CAST-overflow -> NULL semantics. Returns (num int64 array, ok bool
     array)."""
-    import numpy as np
-
     n = len(doc_ids)
     num = np.zeros(n, dtype=np.int64)
     ok = np.zeros(n, dtype=bool)
@@ -533,8 +535,6 @@ def _num_id_np(doc_ids) -> "tuple":
 def _trunc_rem(x, m: int):
     """Java/Spark ``%`` (truncated remainder, sign of dividend) on
     int64 — numpy's ``%`` is floor-mod and differs for negatives."""
-    import numpy as np
-
     neg = x < 0
     return np.where(neg, -((-x) % np.int64(m)), x % np.int64(m))
 
@@ -542,8 +542,6 @@ def _trunc_rem(x, m: int):
 def _train_mask_np(doc_ids):
     """numpy twin of the ``(id * 9973 + 12345) % 100 < 80`` train
     predicate (int64 wrap-around + truncated %, NULL ids excluded)."""
-    import numpy as np
-
     num, ok = _num_id_np(doc_ids)
     with np.errstate(over="ignore"):
         x = num * np.int64(9973) + np.int64(12345)
@@ -553,8 +551,6 @@ def _train_mask_np(doc_ids):
 def _distinct_counts_np(doc_idx, values, n_docs):
     """Distinct-value count per doc over concatenated (doc_idx, value)
     pairs — one lexsort, no per-doc loop."""
-    import numpy as np
-
     if not len(values):
         return np.zeros(n_docs, dtype=np.int64)
     order = np.lexsort((values, doc_idx))
@@ -567,81 +563,90 @@ def _distinct_counts_np(doc_idx, values, n_docs):
     ).astype(np.int64)
 
 
-def _nb_fit_literals_kernel(tokseq: DataFrame) -> tuple[list[int], int | None]:
-    """Exact-integer NB fit in ONE Arrow kernel pass over the train
-    split (r06): per-task numpy bincounts replace the corpus explode +
-    bucket aggregation. Counts are exact int64 (int32 bucket wrap and
-    the split predicate replicate Spark's non-ANSI integer semantics),
-    and :func:`_fit_literals` evaluates the weight/prior closed forms
-    in Spark, so the literals are bit-identical to :func:`nb_train`'s.
-    Returns ``(weights, prior)``; prior is None when the train split is
-    empty (the SQL path's NULL prior)."""
-    import numpy as np
-    import pandas as pd
+def _fit_counts(tokseq: DataFrame, v: int, buckets) -> DataFrame:
+    """Exact integer counts of a weakly labelled bucket model over the
+    train split: ONE ``mapInArrow`` pass whose per-task numpy bincounts
+    replace the corpus explode + bucket aggregation of the SQL trainers
+    (r06). One row per task: ``c1``/``c0`` per-bucket feature counts by
+    label (``v`` buckets, then one NULL slot) and ``d1``/``d0`` docs.
 
-    v, a, b = NB_BUCKETS, NB_MULT, NB_OFF
-
+    ``buckets(tok)`` maps the train docs' token lists (an
+    :class:`~..core.arrow_lists.ListColumn`) to ``(bucket per feature,
+    features per doc)``; a feature that touches a NULL token element
+    takes bucket ``v``, so it counts toward the split totals but in no
+    bucket (the SQL trainers' NULL group). The split predicate
+    replicates Spark's non-ANSI integer semantics."""
     def run(batches):
-        # slot v holds the NULL token elements: they count toward the
-        # split totals but in no bucket (the SQL trainer's NULL group)
         c1 = np.zeros(v + 1, dtype=np.int64)
         c0 = np.zeros(v + 1, dtype=np.int64)
         d1 = d0 = 0
-        for pdf in batches:
-            train = _train_mask_np(pdf["doc_id"].tolist())
+        for batch in batches:
+            train = _train_mask_np(batch.column("doc_id").to_pylist())
             if not train.any():
                 continue
-            # Arrow hands an int list with NULL elements over as floats
-            # with NaN
-            toks = [
-                np.asarray(() if t is None else t)
-                for t, m in zip(pdf["tokens"], train)
-                if m
-            ]
-            n_tok = pdf["n_tok"].to_numpy()[train]
-            lens = np.fromiter(
-                (len(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            cat = np.concatenate(toks) if toks else np.empty(0, np.int64)
-            ok = ~pd.isna(cat)
-            allv = np.where(ok, cat, 0).astype(np.int64)
-            doc_idx = np.repeat(np.arange(len(toks)), lens)
+            batch = batch.filter(pa.array(train))
+            tok = read_list(batch, "tokens", np.int64)
+            doc_idx = np.repeat(np.arange(batch.num_rows), np.diff(tok.offsets))
             distinct = _distinct_counts_np(
-                doc_idx[ok], allv[ok], len(toks)
+                doc_idx[tok.valid], tok.values[tok.valid], batch.num_rows
             )
-            label = (distinct * 2 >= n_tok).astype(np.int64)
+            # a NULL n_tok reads NaN, which no count reaches: label 0, as
+            # the SQL CASE gives
+            n_tok = batch.column("n_tok").to_numpy(zero_copy_only=False)
+            label = distinct * 2 >= n_tok
             d1 += int(label.sum())
-            d0 += int(len(label) - label.sum())
-            # bucket arithmetic wraps in INT (tokens are array<int>):
-            # int32 multiply-add, then pmod — the double-% in the SQL
-            # is exactly floor-mod for the positive modulus
-            with np.errstate(over="ignore"):
-                x = allv.astype(np.int32) * np.int32(a) + np.int32(b)
-            buckets = np.where(ok, x.astype(np.int64) % np.int64(v), v)
-            feat_label = np.repeat(label, lens)
-            c1 += np.bincount(buckets[feat_label == 1], minlength=v + 1)
-            c0 += np.bincount(buckets[feat_label == 0], minlength=v + 1)
-        yield pd.DataFrame(
-            {
-                "c1": [c1.tolist()],
-                "c0": [c0.tolist()],
-                "d1": [d1],
-                "d0": [d0],
-            }
+            d0 += int((~label).sum())
+            b, per_doc = buckets(tok)
+            feat_label = np.repeat(label, per_doc)
+            c1 += np.bincount(b[feat_label], minlength=v + 1)
+            c0 += np.bincount(b[~feat_label], minlength=v + 1)
+        yield pa.RecordBatch.from_arrays(
+            [
+                list_array(c1[None, :]),
+                list_array(c0[None, :]),
+                pa.array([d1], type=pa.int64()),
+                pa.array([d0], type=pa.int64()),
+            ],
+            names=["c1", "c0", "d1", "d0"],
         )
 
-    parts = tokseq.select("doc_id", "tokens", "n_tok").mapInPandas(
-        run,
-        schema="c1 array<long>, c0 array<long>, d1 long, d0 long",
-    ).collect()
-    c1 = [sum(p.c1[i] for p in parts) for i in range(v + 1)]
-    c0 = [sum(p.c0[i] for p in parts) for i in range(v + 1)]
-    d1 = sum(p.d1 for p in parts)
-    d0 = sum(p.d0 for p in parts)
+    return tokseq.select("doc_id", "tokens", "n_tok").mapInArrow(
+        run, schema="c1 array<long>, c0 array<long>, d1 long, d0 long"
+    )
+
+
+def _fit_literals_kernel(
+    tokseq: DataFrame, v: int, buckets
+) -> tuple[list[int], int | None]:
+    """A kernel fit's ``(weights, prior)`` from :func:`_fit_counts`:
+    :func:`_fit_literals` evaluates the closed forms in Spark, so the
+    literals are bit-identical to the SQL trainers'. prior is None when
+    the train split is empty (the SQL path's NULL prior)."""
+    c = np.zeros((2, v + 1), dtype=np.int64)
+    d1 = d0 = 0
+    for p in _fit_counts(tokseq, v, buckets).collect():  # one row per task
+        c += (p.c1, p.c0)
+        d1, d0 = d1 + p.d1, d0 + p.d0
     # empty train split: the SQL dtot aggregates over zero rows to NULL
     # and the prior (hence every score) is NULL
     docs = None if d1 == 0 and d0 == 0 else (d1, d0)
-    return _fit_literals(tokseq.sparkSession, c1, c0, v, docs)
+    return _fit_literals(tokseq.sparkSession, c[0].tolist(), c[1].tolist(), v, docs)
+
+
+def _nb_buckets(tok):
+    """NB features: one unigram bucket per token element."""
+    v, a, b = NB_BUCKETS, NB_MULT, NB_OFF
+    # bucket arithmetic wraps in INT (tokens are array<int>): int32
+    # multiply-add, then pmod — the double-% in the SQL is exactly
+    # floor-mod for the positive modulus
+    with np.errstate(over="ignore"):
+        x = tok.values.astype(np.int32) * np.int32(a) + np.int32(b)
+    return np.where(tok.valid, x.astype(np.int64) % v, v), np.diff(tok.offsets)
+
+
+def _nb_fit_literals_kernel(tokseq: DataFrame) -> tuple[list[int], int | None]:
+    """The NB fit: :func:`nb_train`'s weight and prior literals."""
+    return _fit_literals_kernel(tokseq, NB_BUCKETS, _nb_buckets)
 
 
 def nb_train(tokseq: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -36,9 +36,11 @@ def _noop(df) -> None:
 
 
 def _descendant_cpu_s(root: int) -> float:
-    """utime+stime+cutime+cstime of ``root``'s live descendants (not
-    ``root`` itself), in seconds; a finished worker's time sits in the
-    counters of the daemon that reaped it."""
+    """CPU seconds of ``root``'s descendants: utime+stime+cutime+cstime
+    of each live one, plus ``root``'s own cutime+cstime (not its
+    utime/stime). A finished worker's time sits in the counters of the
+    process that reaped it, so a worker reaped by ``root`` still counts
+    and the reading never drops between two calls."""
     stats = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
@@ -53,7 +55,8 @@ def _descendant_cpu_s(root: int) -> float:
     children: dict[int, list[int]] = {}
     for pid, fields in stats.items():
         children.setdefault(int(fields[1]), []).append(pid)
-    ticks, todo = 0, list(children.get(root, ()))
+    ticks = sum(int(x) for x in stats[root][13:15]) if root in stats else 0
+    todo = list(children.get(root, ()))
     while todo:
         pid = todo.pop()
         ticks += sum(int(x) for x in stats[pid][11:15])

@@ -398,11 +398,39 @@ def test_kernels_tolerate_ragged_and_null_vectors(spark):
     ).collect()
     assert len(scored) == 20 and not {90001, 90002} & {r.vec_id for r in scored}
 
+    # the integer-code kernels drop the same rows (they used to raise
+    # from np.stack)
+    import numpy as np
+
+    codes = spark.createDataFrame(
+        [(1, [1, 2], [3, 4]), (2, [5], [1, 1]), (3, None, [1, 1]),
+         (4, [1, None], [1, 1])],
+        schema="vec_id bigint, qv array<bigint>, qqv array<bigint>",
+    )
+    qdot = similarity.int_dot_scores_kernel(codes, "qv", "qqv", 2).collect()
+    assert [(r.vec_id, r.qdot) for r in qdot] == [(1, 11)]
+    enc = spark.createDataFrame(
+        [(1, [0]), (2, []), (3, None)], schema="vec_id bigint, codes array<int>"
+    )
+    adc = similarity.pq_adc_scores_kernel(
+        enc, [(99, [1, 1])], np.zeros((1, 2), dtype=np.int64),
+        m=1, dsub=2, shortlist=5,
+    ).collect()
+    assert [(r.query_id, r.neighbor_id, r.adc) for r in adc] == [(99, 1, 2)]
+
 
 def test_minhash_kernel_tolerates_null_tokens(spark):
     # the canonical TOKEN_SEQUENCES schema forbids null tokens, but the
     # kernel is also used over ad-hoc frames where the column is nullable
-    rows = [("d0", list(range(30)), 30, "web"), ("d1", None, 0, "web")]
+    import duckdb
+    import pandas as pd
+
+    rows = [
+        ("d0", list(range(30)), 30, "web"),
+        ("d1", None, 0, "web"),
+        ("d2", [1, 2, None, 4, 5, 6, 7, 8, 9], 9, "web"),
+        ("d3", [3, None], 2, "web"),  # every shingle touches the NULL
+    ]
     ts = spark.createDataFrame(
         rows, schema="doc_id string, tokens array<int>, n_tok int, source string"
     )
@@ -411,6 +439,24 @@ def test_minhash_kernel_tolerates_null_tokens(spark):
     assert len(sigs["d0"]) == len(sigs["d1"])
     # null tokens -> empty shingle set -> all-sentinel signature
     assert len(set(sigs["d1"])) == 1
+    # a shingle touching a NULL element is NULL, and both SQL twins skip
+    # it (Spark's `filter(s -> s >= 0)`, DuckDB's list_min)
+    listed = ts.where("tokens is not null")
+    sql = {r.doc_id: list(r.signature) for r in
+           dedup.minhash_signatures(listed).collect()}
+    con = duckdb.connect()
+    con.register(
+        "tokseq_t",
+        pd.DataFrame([r for r in rows if r[1] is not None],
+                     columns=["doc_id", "tokens", "n_tok", "source"]),
+    )
+    duck = con.execute(
+        "WITH tokseq AS (SELECT doc_id, CAST(tokens AS BIGINT[]) AS tokens "
+        f"FROM tokseq_t) {dedup.minhash_signatures_oracle_sql()}"
+    ).fetchall()
+    assert {d: [int(x) for x in s] for d, s in duck} == sql
+    assert {d: s for d, s in sigs.items() if d != "d1"} == sql
+    assert sql["d3"] == [dedup.DEFAULT_MINHASH.prime] * 16
 
 
 def test_repetition_stats_planted(spark):

@@ -184,6 +184,35 @@ def test_centered_kernel_equals_sql_features(spark, edge_seqs):
         assert list(a.features) == list(b.features)
 
 
+def test_kernels_null_tokens_row_yields_no_frames(spark, edge_seqs):
+    """A NULL ``tokens`` row yields no frames, as in the SQL twin, and
+    the other docs' frames are unchanged (it used to raise TypeError)."""
+    rows = [(f"doc_{i}", t, len(t), "web") for i, t in enumerate(edge_seqs)]
+    df = spark.createDataFrame(
+        rows + [("doc_null", None, 0, "web")],
+        schema="doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    key = lambda r: (r.doc_id, r.frame_id)  # noqa: E731
+    kern = sorted(framing.frame_features_flat(df, SPEC).collect(), key=key)
+    sql = sorted(framing.frame_features_sql(df, SPEC).collect(), key=key)
+    assert [key(r) for r in kern] == [key(r) for r in sql]
+    assert [list(r.features) for r in kern] == [list(r.features) for r in sql]
+    assert framing.frame_features_compact(df, SPEC).count() == len(kern)
+
+
+def test_kernels_null_token_element_raises_naming_doc(spark):
+    """The SQL twins disagree on a NULL token element (Spark's
+    ``aggregate`` gives a NULL mean, DuckDB's ``list_sum`` skips it), so
+    the kernels raise instead of inventing a third answer."""
+    df = spark.createDataFrame(
+        [("doc_ok", [1, 2, 3], 3, "web"), ("doc_bad", [1, None, 3], 3, "web")],
+        schema="doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    for kernel in (framing.frame_features_flat, framing.frame_features_compact):
+        with pytest.raises(Exception, match="ValueError.*doc_id doc_bad"):
+            kernel(df, SPEC).collect()
+
+
 def test_centered_refused_by_pit_paths(spark, edge_seqs):
     from audio_feature_extraction_spark.operators import inverse
     from audio_feature_extraction_spark.streaming import stream

@@ -205,7 +205,7 @@ def test_round2_ops_plan_shapes(spark):
     assert _n_exchanges(framing.frame_features_flat(ts, cspec)) == 0
     # corpus mixing: generator + filter — no shuffle
     assert _n_exchanges(mixing.sample_by_rates(ts, {"web": 1.5})) == 0
-    # minhash kernel: narrow mapInPandas — no shuffle
+    # minhash kernel: narrow mapInArrow — no shuffle
     assert _n_exchanges(dedup.minhash_signatures_kernel(ts)) == 0
     # sequence packing: exactly the one prefix-sum exchange
     assert _n_exchanges(mixing.pack_blocks(ts, 4096)) == 1
@@ -344,14 +344,14 @@ def test_round5_ops_plan_shapes(spark):
     assert "BatchEvalPython" not in plan        # pure JVM
 
     # SemDeDup kernel path (the default): assignment is ONE Arrow
-    # mapInPandas over the scan — no per-row Python, no cartesian.
+    # mapInArrow over the scan — no per-row Python, no cartesian.
     # r06: the assignment materializes once (localCheckpoint) before
     # the self-join, so the kernel shape is asserted on the assignment
     # operator itself and the pair plan reads the checkpointed blocks.
     aplan = _plan(
         similarity.semdedup_assign_kernel(emb, 16, 64, "vec_id", "embedding")
     )
-    assert "MapInPandas" in aplan
+    assert "MapInArrow" in aplan
     assert "BatchEvalPython" not in aplan
     sdk = similarity.semdedup_pairs(emb, threshold=0.2, n_clusters=16)
     kplan = _plan(sdk)
@@ -369,3 +369,57 @@ def test_round5_ops_plan_shapes(spark):
     assert _n_exchanges(nb) == 0                # fold, not join+agg
     assert "CartesianProduct" not in nplan
     assert "BatchEvalPython" not in nplan
+
+
+def test_list_kernels_cross_the_boundary_as_map_in_arrow(spark, jobs_started):
+    """Every list-input kernel reads its lists through ONE ``MapInArrow``
+    node — no ``MapInPandas`` — and building the plans starts no job."""
+    import numpy as np
+
+    from audio_feature_extraction_spark.operators import (
+        dedup, mixing, similarity, textstats,
+    )
+
+    toks = spark.createDataFrame(
+        [("d1", [1, 2, 3], 3, "web")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    # a VALUES relation: SemDeDup collects its pivots from a local scan
+    vecs = spark.sql(
+        "SELECT * FROM VALUES (0L, array(1.0D, 0.0D)), (1L, array(0.0D, 1.0D)) "
+        "AS t(vec_id, embedding)"
+    )
+    codes = spark.createDataFrame(
+        [(0, [1, 2], [3, 4])], "vec_id bigint, qv array<bigint>, qqv array<bigint>"
+    )
+    enc = spark.createDataFrame([(0, [0])], "vec_id bigint, codes array<int>")
+    kernels = {
+        "frame_features_flat": lambda: framing.frame_features_flat(toks, SPEC),
+        "frame_features_compact": lambda: framing.frame_features_compact(toks, SPEC),
+        "minhash": lambda: dedup.minhash_signatures_kernel(toks),
+        "nb_fit": lambda: textstats._fit_counts(
+            toks, textstats.NB_BUCKETS, textstats._nb_buckets
+        ),
+        "dsir_fit": lambda: textstats._fit_counts(
+            toks, mixing.DSIR_BUCKETS, mixing._dsir_buckets
+        ),
+        "lsh_buckets": lambda: similarity.lsh_buckets_kernel(vecs, 2, 2, 2),
+        "cosine": lambda: similarity.cosine_scores_kernel(
+            vecs.withColumn("qvec", F.col("embedding")), "embedding", "qvec", 2
+        ),
+        "quantize": lambda: similarity.quantize_kernel(vecs, 2),
+        "int_dot": lambda: similarity.int_dot_scores_kernel(codes, "qv", "qqv", 2),
+        "semdedup_assign": lambda: similarity.semdedup_assign_kernel(vecs, 2, 2),
+        "pq_adc": lambda: similarity.pq_adc_scores_kernel(
+            enc, [(9, [0, 0])], np.zeros((1, 2), dtype=np.int64), 1, 2, 1
+        ),
+    }
+    plans = {}
+
+    def build():
+        for name, kernel in kernels.items():
+            plans[name] = kernel()._jdf.queryExecution().analyzed().toString()
+
+    assert jobs_started("list_kernel_plans", build) == 0
+    for name, plan in plans.items():
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, name

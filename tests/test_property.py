@@ -7,6 +7,7 @@ Kernel-level (no Spark session): hundreds of examples per run.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import example, given, settings, strategies as st
 
 from audio_feature_extraction_spark.core.config import FrameSpec
@@ -30,8 +31,9 @@ token_arrays = st.lists(
 @given(docs=token_arrays, spec=specs)
 def test_kernel_matches_naive_oracle(docs, spec):
     ids = np.array([f"d{i}" for i in range(len(docs))], dtype=object)
-    arrays = [np.asarray(d, dtype=np.int32) for d in docs]
-    out = featurize_batch(ids, arrays, spec)
+    values = np.asarray([t for d in docs for t in d], dtype=np.int32)
+    offsets = np.concatenate([[0], np.cumsum([len(d) for d in docs])])
+    out = featurize_batch(pa.array(ids), values, offsets, spec).to_pandas()
     got = {}
     for _, row in out.iterrows():
         got.setdefault(row["doc_id"], []).append(row)
