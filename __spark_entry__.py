@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.core.config import FrameSpec
+from audio_feature_extraction_spark.core.materialize import reliable_checkpoint_dir
 from audio_feature_extraction_spark.operators import (
     asof,
     augment,
@@ -1193,6 +1194,10 @@ def q_asof_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = ev.where(F.expr(_PROBE_FILTER))
     st = ev.where(F.expr(_STATE_FILTER))
     sel = ["user_id", "event_id", "ts", "asof_value", "asof_ts"]
+    # range_durable: the same shape with the run materialized as a
+    # reliable checkpoint (the session policy core.materialize follows)
+    with reliable_checkpoint_dir(spark, tempfile.mkdtemp(prefix="asof_dur_")):
+        durable = asof.asof_join_range(pr, st, num_partitions=8)
     return _variant_union(
         [
             ("window", q_asof_join(spark, sf_dir)),
@@ -1201,13 +1206,7 @@ def q_asof_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "range",
                 asof.asof_join_range(pr, st, num_partitions=8).select(*sel),
             ),
-            (
-                "range_durable",
-                asof.asof_join_range(
-                    pr, st, num_partitions=8,
-                    checkpoint_dir=tempfile.mkdtemp(prefix="asof_dur_"),
-                ).select(*sel),
-            ),
+            ("range_durable", durable.select(*sel)),
         ]
     )
 

@@ -107,6 +107,10 @@ def get_spark(
         # long-lived session — same value at cluster scale, where
         # sessions live far past 30 minutes anyway.
         .config("spark.cleaner.periodicGC.interval", "1min")
+        # ... and deletes a dropped reliable checkpoint's files, which it
+        # leaves on disk by default (core/materialize writes them when
+        # the session has a checkpoint dir)
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # Janino-compiled classes are cached per JVM in an LRU sized by
         # this static conf (default 100). One snapshot-mode
         # prepare_corpus call (every optional stage on) needs 238

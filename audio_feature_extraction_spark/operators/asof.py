@@ -27,10 +27,10 @@ with max-seq in both engines so tie-breaks agree).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from audio_feature_extraction_spark.core.materialize import materialize
 
 
 def asof_join(
@@ -534,8 +534,6 @@ def asof_join_range(
     strict: bool = False,
     max_staleness_seconds: float | None = None,
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """As-of join as a sort-merge over ``repartitionByRange``'d,
     timestamp-ordered partitions — the north star's literal physical
@@ -552,7 +550,7 @@ def asof_join_range(
     1. pass A summarizes each sorted partition (its LAST entity's latest
        and latest-strictly-earlier non-null states) — one tiny row per
        partition, combined on the driver in O(P);
-    2. pass B re-walks the same persisted partitions with the combined
+    2. pass B re-walks the same materialized partitions with the combined
        carry-in broadcast, serving every probe locally.
 
     Only the partition's last entity can continue into the next
@@ -561,28 +559,13 @@ def asof_join_range(
     handled by (ts, seq) max-merging, and strict mode by carrying the
     latest STRICTLY-EARLIER state alongside.
 
-    Run durability — two modes, same results (tested equal):
-
-    * default (``checkpoint_dir=None``): the sorted run is cached for
-      exactly the call's lifetime — pass A fills the cache while
-      summarizing (one job, partition identity pinned), pass B serves
-      from it into an eagerly ``localCheckpoint``'ed result, and the
-      cache is released before returning (no session-lifetime
-      cache-manager leak, ADVICE r04; the result's blocks are
-      reclaimed by the ContextCleaner when the caller drops it).
-      Right for local / single-job use; cached blocks do not survive
-      an executor loss — that is what the durable mode is for.
-    * ``checkpoint_dir`` (HDFS/S3/NFS path at cluster scale — the
-      :func:`connected_components` durable pattern): the sorted run is
-      written ONCE to parquet scratch under ``<dir>/asof-run``; both
-      passes re-read the durable bytes, so an executor loss between
-      pass A and pass B costs one task retry, never a silent
-      recomputation of partitions whose identity pass A's summaries
-      captured. Read-back cannot pin one-file-per-task, so rows are
-      re-grouped by the recorded partition id (``repartitionByRange``
-      on ``_pid`` keeps each pid whole) and the scan kernels are
-      pid-segment aware. The scratch is left for the lazy result's
-      read and overwritten by the next run on the same dir.
+    The call materializes the sorted run once (``core.materialize``),
+    runs pass A over it and returns pass B as a lazy serve over it, so
+    the run's partition identity is pinned between the passes. Executor
+    loss after the call: on a session with a checkpoint dir the run is
+    a reliable checkpoint and the serve reads it back; without one it
+    is a local checkpoint and the serve fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` (tested both ways).
     """
     spark = probes.sparkSession
     state_tag, probe_tag = (0, 1) if not strict else (1, 0)
@@ -609,356 +592,294 @@ def asof_join_range(
         *[F.col(c) for c in carry_cols],
     )
     P = num_partitions or spark.sparkContext.defaultParallelism
-    sorted_run = (
+    # Materializing the sorted run pins its partition identity: pass A
+    # summarizes and pass B serves the same partitions (a recompute could
+    # re-sample different range bounds).
+    part = materialize(
         st_tagged.unionByName(pr_tagged)
         .repartitionByRange(P, "_e", "_tsu")
         .sortWithinPartitions("_e", "_tsu", "_tag", "_seq")
         .withColumn("_pid", F.spark_partition_id())
     )
-    if checkpoint_dir is not None:
-        run_path = os.path.join(checkpoint_dir, "asof-run")
-        sorted_run.write.mode("overwrite").parquet(run_path)
-        # Read-back cannot guarantee one-file-per-task (the scan packs
-        # files by size), so re-group each recorded pid whole (equal
-        # range-partition keys share a partition) and re-sort; the
-        # kernels below handle several pids per task.
-        part = (
-            spark.read.parquet(run_path)
-            .repartitionByRange(P, "_pid")
-            .sortWithinPartitions("_pid", "_e", "_tsu", "_tag", "_seq")
-        )
-    else:
-        # Cache the sorted run so pass A's job both computes and pins
-        # it (partition identity must not be re-derived between the
-        # passes — a fresh recompute could re-sample different range
-        # bounds). The cache is released before returning: the RESULT
-        # is eagerly localCheckpoint'ed (blocks reclaimed by the
-        # ContextCleaner when the caller drops it) and the run
-        # unpersisted — persist() alone leaked one cached dataset per
-        # call for the session lifetime (ADVICE r04).
-        part = sorted_run.persist()
-    try:
-        # itertuples mangles column names that start with "_", so the
-        # serve kernel walks positional tuples via a column-index map
-        cols = part.columns
-        I = {c: i for i, c in enumerate(cols)}
-        ie, itsu, itag, iseq, iv, ipid = (
-            I["_e"], I["_tsu"], I["_tag"], I["_seq"], I["_v"], I["_pid"],
-        )
-        icarry = [I[c] for c in carry_cols]
+    # itertuples mangles column names that start with "_", so the
+    # serve kernel walks positional tuples via a column-index map
+    cols = part.columns
+    I = {c: i for i, c in enumerate(cols)}
+    ie, itsu, itag, iseq, iv, ipid = (
+        I["_e"], I["_tsu"], I["_tag"], I["_seq"], I["_v"], I["_pid"],
+    )
+    icarry = [I[c] for c in carry_cols]
 
-        def _merge_carry(cands):
-            """(last, prev) from candidate (v, tsu, seq) states: last =
-            max by (tsu, seq); prev = max among strictly-earlier-ts."""
-            cands = [c for c in cands if c is not None]
-            if not cands:
-                return None, None
-            new_last = max(cands, key=lambda c: (c[1], c[2]))
-            earlier = [c for c in cands if c[1] < new_last[1]]
-            new_prev = (
-                max(earlier, key=lambda c: (c[1], c[2])) if earlier else None
+    def _merge_carry(cands):
+        """(last, prev) from candidate (v, tsu, seq) states: last =
+        max by (tsu, seq); prev = max among strictly-earlier-ts."""
+        cands = [c for c in cands if c is not None]
+        if not cands:
+            return None, None
+        new_last = max(cands, key=lambda c: (c[1], c[2]))
+        earlier = [c for c in cands if c[1] < new_last[1]]
+        new_prev = (
+            max(earlier, key=lambda c: (c[1], c[2])) if earlier else None
+        )
+        return new_last, new_prev
+
+    def _tail_update(run, e, tsu, seq, v, seg_start, is_state):
+        """Fold a batch's FINAL entity segment into the running
+        (entity, last, prev) carry chain."""
+        import numpy as np
+
+        last_e = e[-1]
+        if run is not None and run[0] != last_e:
+            run = None
+        cands = [run[1], run[2]] if run is not None else []
+        st_idx = np.where(is_state & (seg_start == seg_start[-1]))[0]
+        if len(st_idx):
+            li = int(st_idx[-1])
+            cands.append((float(v[li]), int(tsu[li]), int(seq[li])))
+            earlier = st_idx[tsu[st_idx] < tsu[li]]
+            if len(earlier):
+                pi = int(earlier[-1])
+                cands.append((float(v[pi]), int(tsu[pi]), int(seq[pi])))
+        new_last, new_prev = _merge_carry(cands)
+        return (last_e, new_last, new_prev)
+
+    # ---- pass A: per-pid summary of the LAST entity's carry — all
+    # JVM (r06; was a mapInPandas walk that shipped the whole run
+    # through Arrow/pandas a third time). The run is sorted by
+    # (_e, _tsu), so the pid's last entity is max(_e), and
+    # max(when(is_state, struct(_e, _tsu, _seq, _v))) orders by
+    # entity first: the global max state belongs to the last entity
+    # iff its e equals max(_e) — one scan of the materialized run, a 1-row-
+    # per-partition partial agg, and a P-row collect. ``prev`` (the
+    # latest strictly-earlier state) is only consumed by strict
+    # mode, where a second tiny job derives it from the collected
+    # per-pid last timestamps.
+    e_type = part.schema["_e"].dataType.simpleString()
+    state_ok = (
+        (F.col("_tag") == F.lit(state_tag))
+        & F.col("_v").isNotNull()
+        & ~F.isnan(F.col("_v"))
+    )
+    arows = (
+        part.groupBy("_pid")
+        .agg(
+            F.max("_e").alias("e"),
+            F.max(
+                F.when(
+                    state_ok,
+                    F.struct(
+                        F.col("_e").alias("se"),
+                        F.col("_tsu").alias("t"),
+                        F.col("_seq").alias("s"),
+                        F.col("_v").alias("v"),
+                    ),
+                )
+            ).alias("ls"),
+        )
+        .collect()
+    )
+    lastd = {
+        r["_pid"]: (float(r.ls.v), int(r.ls.t), int(r.ls.s))
+        for r in arows
+        if r.ls is not None and r.ls.se == r.e
+    }
+    prevd: dict[int, tuple] = {}
+    if strict and lastd:
+        ed = {r["_pid"]: r.e for r in arows}
+        lt_rows = [
+            (int(p), ed[p], lv[1]) for p, lv in lastd.items()
+        ]
+        lt_tab = spark.createDataFrame(
+            lt_rows, f"lpid int, le {e_type}, lt long"
+        )
+        prows = (
+            part.where(state_ok)
+            .join(
+                F.broadcast(lt_tab),
+                (F.col("_pid") == F.col("lpid"))
+                & (F.col("_e") == F.col("le"))
+                & (F.col("_tsu") < F.col("lt")),
             )
-            return new_last, new_prev
-
-        def _tail_update(run, e, tsu, seq, v, seg_start, is_state):
-            """Fold a batch's FINAL entity segment into the running
-            (entity, last, prev) carry chain."""
-            import numpy as np
-
-            last_e = e[-1]
-            if run is not None and run[0] != last_e:
-                run = None
-            cands = [run[1], run[2]] if run is not None else []
-            st_idx = np.where(is_state & (seg_start == seg_start[-1]))[0]
-            if len(st_idx):
-                li = int(st_idx[-1])
-                cands.append((float(v[li]), int(tsu[li]), int(seq[li])))
-                earlier = st_idx[tsu[st_idx] < tsu[li]]
-                if len(earlier):
-                    pi = int(earlier[-1])
-                    cands.append((float(v[pi]), int(tsu[pi]), int(seq[pi])))
-            new_last, new_prev = _merge_carry(cands)
-            return (last_e, new_last, new_prev)
-
-        # ---- pass A: per-pid summary of the LAST entity's carry — all
-        # JVM (r06; was a mapInPandas walk that shipped the whole run
-        # through Arrow/pandas a third time). The run is sorted by
-        # (_e, _tsu), so the pid's last entity is max(_e), and
-        # max(when(is_state, struct(_e, _tsu, _seq, _v))) orders by
-        # entity first: the global max state belongs to the last entity
-        # iff its e equals max(_e) — one cached columnar scan, a 1-row-
-        # per-partition partial agg, and a P-row collect. ``prev`` (the
-        # latest strictly-earlier state) is only consumed by strict
-        # mode, where a second tiny job derives it from the collected
-        # per-pid last timestamps.
-        e_type = part.schema["_e"].dataType.simpleString()
-        state_ok = (
-            (F.col("_tag") == F.lit(state_tag))
-            & F.col("_v").isNotNull()
-            & ~F.isnan(F.col("_v"))
-        )
-        arows = (
-            part.groupBy("_pid")
+            .groupBy("_pid")
             .agg(
-                F.max("_e").alias("e"),
                 F.max(
-                    F.when(
-                        state_ok,
-                        F.struct(
-                            F.col("_e").alias("se"),
-                            F.col("_tsu").alias("t"),
-                            F.col("_seq").alias("s"),
-                            F.col("_v").alias("v"),
-                        ),
+                    F.struct(
+                        F.col("_tsu").alias("t"),
+                        F.col("_seq").alias("s"),
+                        F.col("_v").alias("v"),
                     )
-                ).alias("ls"),
+                ).alias("ps")
             )
             .collect()
         )
-        lastd = {
-            r["_pid"]: (float(r.ls.v), int(r.ls.t), int(r.ls.s))
-            for r in arows
-            if r.ls is not None and r.ls.se == r.e
+        prevd = {
+            r["_pid"]: (float(r.ps.v), int(r.ps.t), int(r.ps.s))
+            for r in prows
+            if r.ps is not None
         }
-        prevd: dict[int, tuple] = {}
-        if strict and lastd:
-            ed = {r["_pid"]: r.e for r in arows}
-            lt_rows = [
-                (int(p), ed[p], lv[1]) for p, lv in lastd.items()
-            ]
-            lt_tab = spark.createDataFrame(
-                lt_rows, f"lpid int, le {e_type}, lt long"
+
+    class _Summary:
+        __slots__ = ("pid", "e", "last", "prev")
+
+        def __init__(self, pid, e, last, prev):
+            self.pid, self.e, self.last, self.prev = pid, e, last, prev
+
+    summaries = sorted(
+        (
+            _Summary(
+                int(r["_pid"]),
+                r.e,
+                lastd.get(r["_pid"]),
+                prevd.get(r["_pid"]),
             )
-            prows = (
-                part.where(state_ok)
-                .join(
-                    F.broadcast(lt_tab),
-                    (F.col("_pid") == F.col("lpid"))
-                    & (F.col("_e") == F.col("le"))
-                    & (F.col("_tsu") < F.col("lt")),
-                )
-                .groupBy("_pid")
-                .agg(
-                    F.max(
-                        F.struct(
-                            F.col("_tsu").alias("t"),
-                            F.col("_seq").alias("s"),
-                            F.col("_v").alias("v"),
-                        )
-                    ).alias("ps")
-                )
-                .collect()
+            for r in arows
+        ),
+        key=lambda s: s.pid,
+    )
+
+    # ---- driver combine: O(P) chain of (entity, last, prev)
+    carry_in: dict[int, tuple] = {}
+    run_e, run_last, run_prev = None, None, None
+    for s in summaries:
+        if run_e is not None:
+            carry_in[s.pid] = (run_e, run_last, run_prev)
+        s_last = s.last
+        s_prev = s.prev
+        if s.e == run_e:
+            run_last, run_prev = _merge_carry(
+                [run_last, run_prev, s_last, s_prev]
             )
-            prevd = {
-                r["_pid"]: (float(r.ps.v), int(r.ps.t), int(r.ps.s))
-                for r in prows
-                if r.ps is not None
-            }
+        else:
+            run_e, run_last, run_prev = s.e, s_last, s_prev
 
-        class _Summary:
-            __slots__ = ("pid", "e", "last", "prev")
+    bc = spark.sparkContext.broadcast(carry_in)
+    ttl_us = (
+        int(max_staleness_seconds * 1_000_000)
+        if max_staleness_seconds is not None
+        else None
+    )
 
-            def __init__(self, pid, e, last, prev):
-                self.pid, self.e, self.last, self.prev = pid, e, last, prev
+    # ---- pass B: serve probes with the carry-in applied
+    carry_types = {c: pr_schema[c].dataType.simpleString() for c in carry_cols}
+    out_schema = ", ".join(
+        [f"{entity} {e_type}", f"{seq_col} long", f"{ts_col} timestamp"]
+        + [f"{c} {carry_types[c]}" for c in carry_cols]
+        + ["asof_value double", "asof_ts timestamp"]
+    )
 
-        summaries = sorted(
-            (
-                _Summary(
-                    int(r["_pid"]),
-                    r.e,
-                    lastd.get(r["_pid"]),
-                    prevd.get(r["_pid"]),
+    # ---- pass B: vectorized carry scan per batch. The in-batch carry
+    # index is a segmented forward-fill (maximum.accumulate of state
+    # row indices, invalidated before each entity's segment start);
+    # the tag ordering already encodes the inclusive/strict boundary
+    # for in-batch serves, so only the cross-batch/-partition carry
+    # needs the scalar tie handling on each batch's LEADING entity
+    # segment. r06: the kernel is mapInArrow (was mapInPandas) — the
+    # six core columns convert straight to numpy and the probe carry
+    # payload (strings/maps) is never converted to Python objects at
+    # all: it passes through as Arrow buffers re-sliced by one
+    # filter per batch (guide §4.2).
+    def serve(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        pid = run = None
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
+                continue
+            if pid is None:
+                # the serve is a narrow map over the materialized run, so
+                # one call reads one run partition and its rows share one
+                # _pid (not the task's index, which a union shifts)
+                pid = rb.column(ipid)[0].as_py()
+                run = bc.value.get(pid)
+            e = rb.column(ie).to_numpy(zero_copy_only=False)
+            tsu = (
+                rb.column(itsu)
+                .to_numpy(zero_copy_only=False)
+                .astype(np.int64)
+            )
+            tag = rb.column(itag).to_numpy(zero_copy_only=False)
+            seq = (
+                rb.column(iseq)
+                .to_numpy(zero_copy_only=False)
+                .astype(np.int64)
+            )
+            v = (
+                rb.column(iv)
+                .to_numpy(zero_copy_only=False)
+                .astype(np.float64)
+            )
+            arange = np.arange(n)
+            new_seg = np.empty(n, dtype=bool)
+            new_seg[0] = True
+            new_seg[1:] = e[1:] != e[:-1]
+            seg_start = np.maximum.accumulate(np.where(new_seg, arange, 0))
+            is_state = (tag == state_tag) & ~np.isnan(v)
+            idx = np.where(is_state, arange, -1)
+            ff = np.maximum.accumulate(idx)
+            has = ff >= seg_start
+            ffs = np.where(has, ff, 0)
+            out_v = np.where(has, v[ffs], np.nan)
+            out_t = np.where(has, tsu[ffs], np.int64(0))
+            # Served-state mask is an explicit boolean, NOT a sign test
+            # on the timestamp — pre-epoch states (negative unix_micros)
+            # are real data, not "absent" (ADVICE r04).
+            out_has = has.copy()
+
+            # cross-batch carry: the leading segment only
+            if run is not None and run[0] == e[0] and run[1] is not None:
+                lv, lt, ls = run[1]
+                lead = seg_start == 0
+                no_state = lead & ~has
+                out_v = np.where(no_state, lv, out_v)
+                out_t = np.where(no_state, lt, out_t)
+                out_has = out_has | no_state
+                # boundary tie: equal-ts state split across batches,
+                # the carried one has the higher seq
+                tie = lead & has & (out_t == lt) & (seq[ffs] < ls)
+                out_v = np.where(tie, lv, out_v)
+
+            probes_mask = tag == probe_tag
+            if strict:
+                # in-batch serves are strictly earlier by tag order;
+                # only a carried equal-ts state violates
+                viol = probes_mask & out_has & (out_t >= tsu)
+                if run is not None and run[0] == e[0] and run[2] is not None:
+                    pv_, pt_, _ps = run[2]
+                    usable = viol & (seg_start == 0) & (pt_ < tsu)
+                    out_v = np.where(usable, pv_, out_v)
+                    out_t = np.where(usable, pt_, out_t)
+                    viol &= ~usable
+                out_v = np.where(viol, np.nan, out_v)
+                out_has = out_has & ~viol
+            if ttl_us is not None:
+                stale = out_has & (tsu - out_t > ttl_us)
+                out_v = np.where(stale, np.nan, out_v)
+                out_has = out_has & ~stale
+            run = _tail_update(run, e, tsu, seq, v, seg_start, is_state)
+
+            if probes_mask.any():
+                mask = pa.array(probes_mask)
+                arrays = [
+                    rb.column(ie).filter(mask),
+                    pa.array(seq[probes_mask]),
+                    pa.array(tsu[probes_mask]).cast(pa.timestamp("us")),
+                    *[rb.column(ci).filter(mask) for ci in icarry],
+                    # NaN -> null, matching the pandas-path coercion
+                    pa.array(out_v[probes_mask], from_pandas=True),
+                    pa.array(
+                        out_t[probes_mask], mask=~out_has[probes_mask]
+                    ).cast(pa.timestamp("us")),
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    arrays,
+                    names=[
+                        entity, seq_col, ts_col, *carry_cols,
+                        "asof_value", "asof_ts",
+                    ],
                 )
-                for r in arows
-            ),
-            key=lambda s: s.pid,
-        )
 
-        # ---- driver combine: O(P) chain of (entity, last, prev)
-        carry_in: dict[int, tuple] = {}
-        run_e, run_last, run_prev = None, None, None
-        for s in summaries:
-            if run_e is not None:
-                carry_in[s.pid] = (run_e, run_last, run_prev)
-            s_last = s.last
-            s_prev = s.prev
-            if s.e == run_e:
-                run_last, run_prev = _merge_carry(
-                    [run_last, run_prev, s_last, s_prev]
-                )
-            else:
-                run_e, run_last, run_prev = s.e, s_last, s_prev
-
-        bc = spark.sparkContext.broadcast(carry_in)
-        ttl_us = (
-            int(max_staleness_seconds * 1_000_000)
-            if max_staleness_seconds is not None
-            else None
-        )
-
-        # ---- pass B: serve probes with the carry-in applied
-        carry_types = {c: pr_schema[c].dataType.simpleString() for c in carry_cols}
-        out_schema = ", ".join(
-            [f"{entity} {e_type}", f"{seq_col} long", f"{ts_col} timestamp"]
-            + [f"{c} {carry_types[c]}" for c in carry_cols]
-            + ["asof_value double", "asof_ts timestamp"]
-        )
-
-        # ---- pass B: vectorized carry scan per batch. The in-batch carry
-        # index is a segmented forward-fill (maximum.accumulate of state
-        # row indices, invalidated before each entity's segment start);
-        # the tag ordering already encodes the inclusive/strict boundary
-        # for in-batch serves, so only the cross-batch/-partition carry
-        # needs the scalar tie handling on each batch's LEADING pid
-        # segment. r06: the kernel is mapInArrow (was mapInPandas) — the
-        # six core columns convert straight to numpy and the probe carry
-        # payload (strings/maps) is never converted to Python objects at
-        # all: it passes through as Arrow buffers re-sliced by one
-        # filter per batch (guide §4.2).
-        def serve(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            cur, run = None, None
-            for rb in batches:
-                n = rb.num_rows
-                if not n:
-                    continue
-                pids = rb.column(ipid).to_numpy(zero_copy_only=False)
-                e_all = rb.column(ie).to_numpy(zero_copy_only=False)
-                tsu_all = (
-                    rb.column(itsu)
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                tag_all = rb.column(itag).to_numpy(zero_copy_only=False)
-                seq_all = (
-                    rb.column(iseq)
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                v_all = (
-                    rb.column(iv)
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.float64)
-                )
-                out_v_all = np.full(n, np.nan)
-                out_t_all = np.zeros(n, dtype=np.int64)
-                has_all = np.zeros(n, dtype=bool)
-                pm_all = np.zeros(n, dtype=bool)
-                cuts = np.where(pids[1:] != pids[:-1])[0] + 1
-                seg_bounds = zip(
-                    np.concatenate(([0], cuts)),
-                    np.concatenate((cuts, [n])),
-                )
-                for s, t in seg_bounds:
-                    pid = int(pids[s])
-                    if pid != cur:
-                        cur, run = pid, bc.value.get(pid)
-                    e, tsu, tag, seq, v = (
-                        e_all[s:t], tsu_all[s:t], tag_all[s:t],
-                        seq_all[s:t], v_all[s:t],
-                    )
-                    m = t - s
-                    arange = np.arange(m)
-                    new_seg = np.empty(m, dtype=bool)
-                    new_seg[0] = True
-                    new_seg[1:] = e[1:] != e[:-1]
-                    seg_start = np.maximum.accumulate(
-                        np.where(new_seg, arange, 0)
-                    )
-                    is_state = (tag == state_tag) & ~np.isnan(v)
-                    idx = np.where(is_state, arange, -1)
-                    ff = np.maximum.accumulate(idx)
-                    has = ff >= seg_start
-                    ffs = np.where(has, ff, 0)
-                    out_v = np.where(has, v[ffs], np.nan)
-                    out_t = np.where(has, tsu[ffs], np.int64(0))
-                    # Served-state mask is an explicit boolean, NOT a
-                    # sign test on the timestamp — pre-epoch states
-                    # (negative unix_micros) are real data, not
-                    # "absent" (ADVICE r04).
-                    out_has = has.copy()
-
-                    # cross-batch carry: the leading segment only
-                    if (
-                        run is not None
-                        and run[0] == e[0]
-                        and run[1] is not None
-                    ):
-                        lv, lt, ls = run[1]
-                        lead = seg_start == 0
-                        no_state = lead & ~has
-                        out_v = np.where(no_state, lv, out_v)
-                        out_t = np.where(no_state, lt, out_t)
-                        out_has = out_has | no_state
-                        # boundary tie: equal-ts state split across
-                        # batches, the carried one has the higher seq
-                        tie = lead & has & (out_t == lt) & (seq[ffs] < ls)
-                        out_v = np.where(tie, lv, out_v)
-
-                    probes_mask = tag == probe_tag
-                    if strict:
-                        # in-batch serves are strictly earlier by tag
-                        # order; only a carried equal-ts state violates
-                        viol = probes_mask & out_has & (out_t >= tsu)
-                        if (
-                            run is not None
-                            and run[0] == e[0]
-                            and run[2] is not None
-                        ):
-                            pv_, pt_, _ps = run[2]
-                            usable = viol & (seg_start == 0) & (pt_ < tsu)
-                            out_v = np.where(usable, pv_, out_v)
-                            out_t = np.where(usable, pt_, out_t)
-                            viol &= ~usable
-                        out_v = np.where(viol, np.nan, out_v)
-                        out_has = out_has & ~viol
-                    if ttl_us is not None:
-                        stale = out_has & (tsu - out_t > ttl_us)
-                        out_v = np.where(stale, np.nan, out_v)
-                        out_has = out_has & ~stale
-
-                    out_v_all[s:t] = out_v
-                    out_t_all[s:t] = out_t
-                    has_all[s:t] = out_has
-                    pm_all[s:t] = probes_mask
-                    run = _tail_update(
-                        run, e, tsu, seq, v, seg_start, is_state
-                    )
-
-                if pm_all.any():
-                    mask = pa.array(pm_all)
-                    served_has = has_all[pm_all]
-                    arrays = [
-                        rb.column(ie).filter(mask),
-                        pa.array(seq_all[pm_all]),
-                        pa.array(tsu_all[pm_all]).cast(pa.timestamp("us")),
-                        *[rb.column(ci).filter(mask) for ci in icarry],
-                        # NaN -> null, matching the pandas-path coercion
-                        pa.array(out_v_all[pm_all], from_pandas=True),
-                        pa.array(
-                            out_t_all[pm_all], mask=~served_has
-                        ).cast(pa.timestamp("us")),
-                    ]
-                    yield pa.RecordBatch.from_arrays(
-                        arrays,
-                        names=[
-                            entity, seq_col, ts_col, *carry_cols,
-                            "asof_value", "asof_ts",
-                        ],
-                    )
-
-        # serve is shuffle-free: a narrow mapInArrow over the pinned
-        # sorted run (cached blocks or durable parquet scratch)
-        result = part.mapInArrow(serve, schema=out_schema)
-        if checkpoint_dir is None and materialize:
-            # materialize the served result from the warm cache, then
-            # release the run — no session-lifetime cache entry remains
-            result = result.localCheckpoint(eager=True)
-            part.unpersist()
-        return result
-    except Exception:
-        if checkpoint_dir is None:
-            part.unpersist()
-        raise
+    # serve is shuffle-free and lazy: a narrow mapInArrow over the
+    # materialized run
+    return part.mapInArrow(serve, schema=out_schema)

@@ -22,13 +22,11 @@ plate docs) are the skew case: cap bucket width or salt (operators/skew).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.core.config import MinHashSpec
+from audio_feature_extraction_spark.core.materialize import materialize
 
 DEFAULT_MINHASH = MinHashSpec()
 
@@ -435,10 +433,8 @@ def lsh_candidate_pairs(
     # reference it, and as a lazy plan each side re-ran the full MinHash
     # kernel over the corpus — the band table is ~bands rows/doc of
     # (int, string, id), tiny next to the signature computation it caches
-    bands = (
-        lsh_band_keys(sigs, spec)
-        .select("band", "band_key", "doc_id")
-        .localCheckpoint(eager=True)
+    bands = materialize(
+        lsh_band_keys(sigs, spec).select("band", "band_key", "doc_id")
     )
     if max_bucket_size is not None:
         sizes = bands.groupBy("band", "band_key").agg(
@@ -621,7 +617,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(a, b) edges -> (doc_id, component) where component = the MIN
     doc_id reachable through the duplicate graph.
@@ -635,41 +630,27 @@ def connected_components(
     practice; ``max_iter`` is a safety bound and raises if exceeded
     rather than returning wrong labels). Each round is two
     hash-partitioned joins + a groupBy min — no driver-side graph, and
-    per-round checkpointing truncates the lineage so round N's plan does
+    materializing the edges and every round's labels
+    (``core.materialize``) truncates the lineage so round N's plan does
     not replay rounds 1..N-1. The classic large-star/small-star variant
     is the drop-in refinement if diameters ever grow adversarial.
 
-    Resilience (VERDICT r03 #1): the default ``localCheckpoint`` stores
-    truncated-lineage blocks on executors — losing one executor mid-job
-    on a real cluster makes the lineage unrecomputable and fails an
-    hours-long 100 TB dedup. Pass ``checkpoint_dir`` (HDFS/S3/NFS path
-    on a cluster) to round-trip edges and per-round labels through
-    parquet instead: every round restarts from durable storage, an
-    executor loss costs one task retry, and the returned DataFrame's
-    lineage reaches only the final scratch file (intermediate rounds are
-    deleted as they are superseded; the final one is left for the
-    caller's read and cleaned by the next run of the same dir).
+    Executor loss (VERDICT r03 #1): by default the rounds are local
+    checkpoints, so losing an executor after a round fails the job with
+    no lineage to recompute; an hours-long 100 TB dedup should run on a
+    session with a checkpoint dir (shared FS), where every round
+    restarts from reliable files and a loss costs one task retry.
     """
     F_ = F
-    seq = [0]
-
-    def _truncate(df: DataFrame) -> tuple[DataFrame, str | None]:
-        if checkpoint_dir is None:
-            return df.localCheckpoint(eager=True), None
-        path = os.path.join(checkpoint_dir, f"cc-{seq[0]:04d}")
-        seq[0] += 1
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path), path
-
     e = pairs.select(
         F_.col(a_col).alias("src"), F_.col(b_col).alias("dst")
     ).where(F_.col("src") != F_.col("dst"))
-    edges, _ = _truncate(
+    edges = materialize(
         e.unionByName(
             e.select(F_.col("dst").alias("src"), F_.col("src").alias("dst"))
         ).distinct()
     )
-    labels, labels_path = _truncate(
+    labels = materialize(
         edges.select(F_.col("src").alias("id"))
         .distinct()
         .withColumn("comp", F_.col("id"))
@@ -681,7 +662,7 @@ def connected_components(
             .agg(F_.min("comp").alias("nmin"))
             .withColumnRenamed("src", "id")
         )
-        new_labels, new_path = _truncate(
+        new_labels = materialize(
             labels.join(neigh_min, "id", "left")
             .select(
                 "id",
@@ -694,11 +675,7 @@ def connected_components(
             .where(F_.col("n.comp") != F_.col("o.comp"))
             .count()
         )
-        # the superseded round's labels are no longer referenced by any
-        # plan — reclaim the scratch now that `changed` has been computed
-        if labels_path is not None:
-            shutil.rmtree(labels_path, ignore_errors=True)
-        labels, labels_path = new_labels, new_path
+        labels = new_labels
         if changed == 0:
             return labels.select(F_.col("id").alias("doc_id"), "comp")
     raise RuntimeError(
@@ -867,7 +844,6 @@ def dedup_survivors_by_component(
     docs_ids: DataFrame,
     pairs: DataFrame | None = None,
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
     components: DataFrame | None = None,
 ) -> DataFrame:
     """Exact near-dup survivors: every doc keeps iff it is its
@@ -877,7 +853,7 @@ def dedup_survivors_by_component(
     if components is None:
         if pairs is None:
             raise ValueError("need pairs or components")
-        comp = connected_components(pairs, checkpoint_dir=checkpoint_dir)
+        comp = connected_components(pairs)
     else:
         comp = components
     return (

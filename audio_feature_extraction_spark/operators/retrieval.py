@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.materialize import materialize
 from ..functions.reproducible import ln_ratio_sql
 from .textstats import _words
 
@@ -168,62 +169,41 @@ def retrieval_topk(
     k1: float = BM25_K1,
     b: float = BM25_B,
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-k documents per query: (query_id, rank, doc_id, score).
 
     ``variant``: ``bm25`` (Okapi, k1/b as given) or ``tfidf``
     (tf * ln(N/df)).  Ties break to the lower doc_id.
 
-    ``materialize`` (r06): the postings relation feeds the query
-    workload, the document frequencies AND the scoring join — as one
-    lazy plan the corpus explode + aggregation executed once per
-    consumer (four scans in the physical plan). Materializing it once
-    (eager ``localCheckpoint``, as ``lsh_candidate_pairs`` does for its
-    band table) makes every consumer read the same computed blocks.
-    This is the in-session analog of :func:`write_postings_index` —
-    at cluster scale a repeated workload reads the persistent index
-    instead; pass ``materialize=False`` to keep the fully lazy plan.
-
-    ``materialize=True`` makes the CALL eager: ``docs.count()`` and the
-    postings ``localCheckpoint`` run Spark jobs before this function
-    returns. Both paths return the same rows; NULL and wordless text
-    count toward ``n_docs`` with document length 0.
+    The postings relation feeds the query workload, the document
+    frequencies, the corpus scalars AND the scoring join; as one lazy
+    plan the corpus explode + aggregation ran once per consumer, so the
+    call materializes it once (``core.materialize``, as
+    ``lsh_candidate_pairs`` does for its band table). That is the
+    call's only Spark work; the returned plan is lazy. This is the
+    in-session analog of :func:`write_postings_index`: at cluster scale
+    a repeated workload reads the persistent index instead. NULL and
+    wordless text count toward ``n_docs`` with document length 0.
     """
-    post = postings(docs, text_col=text_col)
-    if materialize:
-        post = post.localCheckpoint(eager=True)
+    post = materialize(postings(docs, text_col=text_col))
     q = corpus_queries(post, n_queries, terms_per_query)
-    # Corpus scalars: one row, broadcast through the cross join.  dl is
-    # per-document, so average it over distinct docs (postings repeat
-    # dl per term).
-    if materialize:
-        # r06: sum(dl) over the materialized postings' distinct docs is
-        # the same integer as summing per-doc word counts (wordless
-        # docs contribute 0 either way), and n_docs is a metadata-only
-        # count — so the scalars never re-split the corpus text.
-        n_docs = docs.count()
-        scalars = (
-            post.groupBy("doc_id")
-            .agg(F.first("dl").alias("dl"))
-            .agg(
-                F.lit(n_docs).cast("long").alias("n_docs"),
-                (
-                    F.coalesce(F.sum("dl"), F.lit(0)).cast("double")
-                    / F.lit(n_docs).cast("double")
-                ).alias("avgdl"),
-            )
-        )
-    else:
-        # NULL text has no words: dl 0 (as in the postings), not the -1
-        # that size(NULL) returns
-        words = _words(f"coalesce({text_col}, '')", True)
-        scalars = docs.selectExpr("doc_id", f"size({words}) as dl").agg(
-            F.count("*").alias("n_docs"),
+    # Corpus scalars: one row, broadcast through the cross join. dl is
+    # per-document, so sum it over the postings' distinct docs (wordless
+    # docs have no postings and add 0); n_docs is a one-row aggregate of
+    # docs, so no count job runs before the plan does.
+    n_docs = docs.agg(F.count("*").alias("n_docs"))
+    scalars = (
+        post.groupBy("doc_id")
+        .agg(F.first("dl").alias("dl"))
+        .agg(F.coalesce(F.sum("dl"), F.lit(0)).alias("dl_sum"))
+        .crossJoin(F.broadcast(n_docs))
+        .select(
+            "n_docs",
             (
-                F.sum("dl").cast("double") / F.count("*").cast("double")
+                F.col("dl_sum").cast("double") / F.col("n_docs").cast("double")
             ).alias("avgdl"),
         )
+    )
     # Broadcast prune: only postings whose term is in a query survive,
     # BEFORE the scoring shuffle.
     qpost = post.join(F.broadcast(q), "term")

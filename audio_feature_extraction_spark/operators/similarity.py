@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.core.arrow_lists import list_array, read_fixed
+from audio_feature_extraction_spark.core.materialize import materialize
 
 
 def _dot_expr(a: str, b: str, spark: bool) -> str:
@@ -1026,7 +1027,7 @@ def semdedup_pairs(
     # self-join reference it, and as a lazy plan each side re-ran the
     # full centroid-assignment pass (Arrow kernel or HOF expression)
     # over the corpus
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = materialize(assigned)
     a, b = assigned.alias("a"), assigned.alias("b")
     pairs = a.join(
         b,

@@ -70,10 +70,6 @@ class CorpusConfig:
     # pair-drop (fixes under-merged chains a~b~c at the cost of an
     # iterative label-propagation pass over the confirmed-pair graph)
     exact_components: bool = False
-    # durable scratch dir for the component rounds (HDFS/S3 on a real
-    # cluster) — None keeps local-mode localCheckpoint; see
-    # connected_components for the executor-loss rationale
-    components_checkpoint_dir: str | None = None
     # substring-level dedup (Lee et al. ExactSubstr analog): set a
     # k-gram width to cut every duplicated span from the near-dup
     # survivors; docs emptied by the cut are dropped. None = off.
@@ -215,8 +211,7 @@ def prepare_corpus(
         )
         if cfg.exact_components:
             return dedup.dedup_survivors_by_component(
-                ts, confirmed.select("doc_a", "doc_b"),
-                checkpoint_dir=cfg.components_checkpoint_dir,
+                ts, confirmed.select("doc_a", "doc_b")
             )
         drop = confirmed.select(F.col("doc_b").alias("doc_id")).distinct()
         return ts.join(drop, "doc_id", "left_anti")

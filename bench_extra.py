@@ -3,8 +3,9 @@ contract; bench.py stays the frozen measurement. Usage:
 
     python bench_extra.py dup_spans dup_spans_sparse [--reps 3]
 
-Builds the same amplified inputs as bench.py (reuses the /tmp parquet
-cache), warms the page cache the same way, and times each named query
+Reads the same amplified inputs as bench.py from the /tmp parquet
+cache, writing any that are missing with bench.py's recipe, warms the
+page cache the same way, and times each named query
 best-of-N with the noop sink, printing one JSON line. Next to each
 query's per-rep ``samples`` it prints ``codegen_compiles``: the classes
 Janino compiled during that rep (the ``CodegenMetrics`` compilation
@@ -64,6 +65,52 @@ def _descendant_cpu_s(root: int) -> float:
     return ticks / os.sysconf("SC_CLK_TCK")
 
 
+def _write_inputs(spark, amp_path: str, ev_path: str, ev_amp_n: int) -> None:
+    """Write the amplified token and event inputs that are missing, with
+    bench.py's recipe (``run_queries``), so both scripts share one cache
+    and either may run first: ``AMPLIFY`` token replicas with distinct
+    doc_ids, and ``ev_amp_n`` event replicas with distinct users and
+    event_ids and a hot user_id 0 holding ~1/16 of the rows."""
+    from pyspark.sql import functions as F
+
+    from audio_feature_extraction_spark.sources.tokens import (
+        load_token_sequences,
+    )
+
+    if not os.path.exists(os.path.join(amp_path, "_SUCCESS")):
+        (
+            load_token_sequences(spark, SF_DIR)
+            .withColumn(
+                "rep", F.explode(F.sequence(F.lit(0), F.lit(AMPLIFY - 1)))
+            )
+            .withColumn("doc_id", F.concat_ws("_r", "doc_id", "rep"))
+            .drop("rep")
+            .repartition(128)
+            .write.mode("overwrite")
+            .parquet(amp_path)
+        )
+    if not os.path.exists(os.path.join(ev_path, "_SUCCESS")):
+        (
+            spark.read.parquet(f"{SF_DIR}/events.parquet")
+            .withColumn(
+                "rep", F.explode(F.sequence(F.lit(0), F.lit(ev_amp_n - 1)))
+            )
+            .select(
+                (F.col("event_id") * ev_amp_n + F.col("rep")).alias("event_id"),
+                F.expr("timestampadd(SECOND, rep, ts)").alias("ts"),
+                F.when(F.col("rep") % 16 == 0, F.lit(0))
+                .otherwise(F.col("user_id") + F.col("rep") * 100)
+                .alias("user_id"),
+                "event_type",
+                "value",
+                "props",
+            )
+            .repartition(64)
+            .write.mode("overwrite")
+            .parquet(ev_path)
+        )
+
+
 def main() -> None:
     reps = 2
     argv = sys.argv[1:]
@@ -87,9 +134,12 @@ def main() -> None:
     spark = get_spark(f"local[{CPUS}]", app_name="bench_extra")
     spec = FrameSpec(frame_len=16, hop=8)
     sf_tag = SF_DIR.rstrip("/").rsplit("/", 1)[-1]
-    amplified = spark.read.parquet(f"/tmp/bench_tokens_{sf_tag}_x{AMPLIFY}")
     ev_amp_n = int(os.environ.get("SPARK_GRAFT_EV_AMPLIFY", "50"))
-    ev = spark.read.parquet(f"/tmp/bench_events_{sf_tag}_x{ev_amp_n}")
+    amp_path = f"/tmp/bench_tokens_{sf_tag}_x{AMPLIFY}"
+    ev_path = f"/tmp/bench_events_{sf_tag}_x{ev_amp_n}"
+    _write_inputs(spark, amp_path, ev_path, ev_amp_n)
+    amplified = spark.read.parquet(amp_path)
+    ev = spark.read.parquet(ev_path)
     probes = ev.where(F.col("event_type") == "view")
     states = ev.where(F.col("event_type").isin("click", "purchase"))
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")

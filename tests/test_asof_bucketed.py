@@ -8,6 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from audio_feature_extraction_spark.core.materialize import reliable_checkpoint_dir
 from audio_feature_extraction_spark.core.schemas import EVENTS
 from audio_feature_extraction_spark.operators import asof
 
@@ -221,11 +222,10 @@ def test_bucketed_strict_and_ttl_match_plain(spark, mode):
     ids=["inclusive", "strict", "ttl"],
 )
 def test_range_durable_checkpoint_equals_default(spark, tmp_path, kw):
-    """asof_join_range(checkpoint_dir=...) — the durable parquet-scratch
-    mode — serves exactly what the default persisted mode (and the
-    window join) serve. Few partitions so entity runs span partition
-    boundaries, exercising the pid-segment-aware kernels on read-back
-    partitions that hold several pids."""
+    """asof_join_range on a session with a checkpoint dir (the sorted
+    run a reliable checkpoint) serves exactly what the local-checkpoint
+    default (and the window join) serve. Few partitions so entity runs
+    span partition boundaries, exercising the cross-partition carry."""
     ev = _events(spark, n_hot=120, n_cold=12)
     probes = ev.where(F.col("event_type") == "view")
     states = ev.where(F.col("event_type") == "click")
@@ -237,15 +237,30 @@ def test_range_durable_checkpoint_equals_default(spark, tmp_path, kw):
     default = collect(
         asof.asof_join_range(probes, states, num_partitions=4, **kw)
     )
-    durable = collect(
-        asof.asof_join_range(
-            probes, states, num_partitions=4,
-            checkpoint_dir=str(tmp_path / "ck"), **kw,
-        )
-    )
+    with reliable_checkpoint_dir(spark, str(tmp_path / "ck")):
+        out = asof.asof_join_range(probes, states, num_partitions=4, **kw)
+    durable = collect(out)
     assert default == win and durable == win and len(win) > 0
-    # the sorted run was written to durable scratch
-    assert (tmp_path / "ck" / "asof-run").exists()
+    # the sorted run the serve reads is a reliable checkpoint
+    assert "ReliableCheckpointRDD" in out.rdd.toDebugString().decode()
+
+
+def test_range_serves_the_same_rows_inside_a_union(spark):
+    """Inside a union the serve's tasks take partition indices after the
+    union's earlier children, so the carry-in must be keyed by the run
+    partition the rows carry, not by the task's index."""
+    ev = _events(spark, n_hot=120, n_cold=12)
+    probes = ev.where(F.col("event_type") == "view")
+    states = ev.where(F.col("event_type") == "click")
+    win = asof.asof_join(probes, states)
+    rng = asof.asof_join_range(probes, states, num_partitions=4)
+    both = win.withColumn("v", F.lit("window")).unionByName(
+        rng.withColumn("v", F.lit("range"))
+    )
+    got = {}
+    for r in both.collect():
+        got.setdefault(r.v, {})[r.event_id] = (r.asof_value, r.asof_ts)
+    assert got["range"] == got["window"] and len(got["window"]) > 0
 
 
 def test_range_serves_pre_epoch_states(spark):

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.core.config import FrameSpec
+from audio_feature_extraction_spark.core.materialize import reliable_checkpoint_dir
 from audio_feature_extraction_spark.operators import (
     asof, framing, inverse, mixer, sessionize, temporal,
 )
@@ -278,25 +279,20 @@ def test_round4_ops_plan_shapes(spark):
 
 
 def test_asof_range_variant_uses_range_partitioning(spark, tmp_path):
-    """The north star's literal shape. Default mode: the sorted run is
-    checkpointed (range exchange paid inside the materialization), so
-    the SERVE pass must be a shuffle-free narrow scan of the pinned
-    run. Durable mode: the lazy result reads parquet scratch, and its
-    visible plan must carry the range exchange that re-groups pids."""
+    """The north star's literal shape. The sorted run is materialized
+    (range exchange paid inside the materialization), so the SERVE pass
+    must be a shuffle-free narrow scan of the pinned run, under the
+    local-checkpoint default and on a session with a checkpoint dir."""
     ev = spark.read.parquet(f"{SF}/events.parquet")
     probes = ev.where(F.col("event_type") == "view")
     states = ev.where(F.col("event_type").isin("click", "purchase"))
     out = asof.asof_join_range(probes, states, num_partitions=4)
-    plan = _plan(out)
-    assert "Exchange" not in plan          # serve = narrow over checkpoint
-    assert "CartesianProduct" not in plan
-    durable = asof.asof_join_range(
-        probes, states, num_partitions=4,
-        checkpoint_dir=str(tmp_path / "ck"),
-    )
-    dplan = _plan(durable)
-    assert "Exchange rangepartitioning" in dplan
-    assert "CartesianProduct" not in dplan
+    with reliable_checkpoint_dir(spark, str(tmp_path / "ck")):
+        durable = asof.asof_join_range(probes, states, num_partitions=4)
+    for df in (out, durable):
+        plan = _plan(df)
+        assert "Exchange" not in plan      # serve = narrow over checkpoint
+        assert "CartesianProduct" not in plan
 
 
 def test_contamination_semi_prefilter_is_broadcast_pushed(spark):

@@ -50,31 +50,36 @@ def test_dsir_fit_kernel_matches_sql_trainer(spark):
 
 
 def test_retrieval_scalars_from_postings_with_wordless_docs(spark):
-    """The materialized path derives n_docs/avgdl from the postings
-    relation + a metadata count; wordless and NULL-text docs contribute
-    dl=0 either way, so both paths must return identical rows and
-    scores."""
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta beta gamma"),
-            (2, "alpha gamma gamma delta epsilon"),
-            (3, ""),              # wordless: counted in n_docs, dl 0
-            (4, "   "),           # whitespace-only: same
-            (6, None),            # NULL text: same (not size(NULL) = -1)
-            (5, "beta delta zeta eta theta iota"),
-        ],
-        "doc_id long, text string",
-    )
-    a = sorted(
+    """retrieval_topk derives avgdl from the materialized postings and
+    n_docs from a one-row docs aggregate; wordless and NULL-text docs
+    count toward n_docs with dl=0, so rows and scores must equal the
+    DuckDB twin's, which averages per-doc word counts over all docs."""
+    import duckdb
+
+    rows = [
+        (1, "alpha beta beta gamma"),
+        (2, "alpha gamma gamma delta epsilon"),
+        (3, ""),              # wordless: counted in n_docs, dl 0
+        (4, "   "),           # whitespace-only: same
+        (6, None),            # NULL text: same (not size(NULL) = -1)
+        (5, "beta delta zeta eta theta iota"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
         tuple(r)
         for r in retrieval.retrieval_topk(
-            docs, k=3, n_queries=2, terms_per_query=2, materialize=True
+            docs, k=3, n_queries=2, terms_per_query=2
         ).collect()
     )
-    b = sorted(
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(
         tuple(r)
-        for r in retrieval.retrieval_topk(
-            docs, k=3, n_queries=2, terms_per_query=2, materialize=False
-        ).collect()
+        for r in con.execute(
+            retrieval.retrieval_oracle_sql(
+                k=3, n_queries=2, terms_per_query=2
+            )
+        ).fetchall()
     )
-    assert a == b and len(a) > 0
+    assert got == want and len(got) > 0

@@ -22,6 +22,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from audio_feature_extraction_spark.core.materialize import materialize
 from audio_feature_extraction_spark.functions.reproducible import ln_ratio_sql
 from audio_feature_extraction_spark.operators import retrieval
 
@@ -190,6 +191,20 @@ def test_postings_prune_is_broadcast(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = retrieval.retrieval_topk(docs)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+
+
+def test_retrieval_call_starts_only_the_postings_materialization(
+    spark, jobs_started
+):
+    """Calling retrieval_topk runs the postings materialization and
+    nothing else: n_docs comes from a broadcast one-row aggregate inside
+    the returned plan, not from a blocking count before it."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    want = jobs_started(
+        "postings", lambda: materialize(retrieval.postings(docs))
+    )
+    got = jobs_started("topk_call", lambda: retrieval.retrieval_topk(docs))
+    assert want > 0 and got == want
 
 
 # ---------------------------------------------------------------------------
