@@ -6,8 +6,7 @@ stream with 'strh'/'strf'): frame geometry, frame count, per-stream
 fourcc codec, video fps from dwRate/dwScale, audio sample rate /
 channels from the WAVEFORMATEX 'strf'. The video analog of the WAV
 RIFF walk (multimodal/probe._probe_wav shares the outer chunk
-grammar); SAMPLE decode stays behind the documented codec seam in
-multimodal/binary.py.
+grammar). Headers only: no frame is decoded.
 
 ≙ the reference's media-loader boundary (design.md:451-475): bytes in,
 typed metadata out, corrupt payloads raise for per-row skip recovery.
@@ -18,8 +17,10 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass, field
 
+from audio_feature_extraction_spark.core.errors import LoadError
 
-class AviError(ValueError):
+
+class AviError(LoadError):
     pass
 
 
@@ -167,62 +168,3 @@ def parse_avi(payload: bytes) -> AviInfo:
         streams=tuple(streams),
     )
 
-
-def iter_video_frames(payload: bytes):
-    """Yield (stream_idx, frame_bytes) for every compressed ('NNdc') or
-    uncompressed ('NNdb') video frame chunk in the 'movi' list —
-    the access path real video decode needs (MJPEG frames are baseline
-    JPEGs; multimodal/video.py composes this with multimodal/jpeg.py).
-    """
-    b = bytes(payload)
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-        raise AviError("not an AVI RIFF form")
-    riff_size = int.from_bytes(b[4:8], "little")
-    end = min(len(b), 8 + riff_size)
-    for cid, s, e, lt in _chunks(b, 12, end):
-        if cid == b"LIST" and lt == b"movi":
-            for cid2, s2, e2, _lt2 in _chunks(b, s, e):
-                if len(cid2) == 4 and cid2[2:4] in (b"dc", b"db"):
-                    try:
-                        idx = int(cid2[:2])
-                    except ValueError:
-                        continue
-                    yield idx, b[s2:e2]
-
-
-def build_mjpeg_avi(
-    frames: list[bytes], width: int, height: int, fps: int = 10
-) -> bytes:
-    """Deterministic MJPEG-AVI fixture writer: JPEG frame payloads ->
-    a minimal single-stream RIFF AVI ('MJPG' fourcc) that parse_avi and
-    iter_video_frames accept."""
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return cid + len(body).to_bytes(4, "little") + body + pad
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    us_per_frame = 1_000_000 // fps
-    avih = struct.pack(
-        "<10I", us_per_frame, 0, 0, 0, len(frames), 0, 1, 0, width, height
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIII4H",
-        b"vids", b"MJPG", 0, 0, 0, 0, 1, fps, 0, len(frames),
-        max(len(f) for f in frames), 0, 0, 0, 0, width, height,
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII",
-        40, width, height, 1, 24, b"MJPG",
-        width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + len(body).to_bytes(4, "little") + body

@@ -5,9 +5,8 @@ Matroska document structure: EBML header DocType ("matroska" /
 "webm"), Segment -> Info (TimestampScale, Duration) and Segment ->
 Tracks -> TrackEntry (TrackType, CodecID, Video PixelWidth/Height,
 Audio SamplingFrequency/Channels). Completes the video-container set
-next to MP4/ISO-BMFF (multimodal/mp4.py) and AVI (multimodal/avi.py);
-SAMPLE decode (VP9/AV1/Opus et al.) stays behind the documented codec
-seam in multimodal/binary.py.
+next to MP4/ISO-BMFF (multimodal/mp4.py) and AVI (multimodal/avi.py).
+Headers only: no sample is decoded.
 
 ≙ the reference's media-loader boundary (design.md:451-475): bytes in,
 typed metadata out, corrupt payloads raise for per-row skip recovery.
@@ -18,8 +17,10 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass, field
 
+from audio_feature_extraction_spark.core.errors import LoadError
 
-class MkvError(ValueError):
+
+class MkvError(LoadError):
     pass
 
 

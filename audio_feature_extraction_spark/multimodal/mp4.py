@@ -6,9 +6,8 @@ movie header (mvhd timescale/duration, both versions), every track's
 tkhd/mdhd/hdlr/stsd (track kind, per-track timescale/duration/language,
 sample-entry codec fourcc, visual width/height, sample counts from
 stsz/stco presence), and reports a container summary. This is the
-metadata half of video support — the video analog of the MP3/Ogg walks
-(multimodal/mpeg.py, ogg.py); SAMPLE decode (H.264/AAC et al.) stays
-behind the documented codec seam in multimodal/binary.py.
+video analog of the MP3/Ogg walks (multimodal/mpeg.py, ogg.py).
+Headers only: no sample is decoded.
 
 ≙ the reference's media-loader boundary (design.md:451-475): bytes in,
 typed metadata out, corrupt payloads raise for per-row skip recovery.
@@ -18,8 +17,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from audio_feature_extraction_spark.core.errors import LoadError
 
-class Mp4Error(ValueError):
+
+class Mp4Error(LoadError):
     pass
 
 

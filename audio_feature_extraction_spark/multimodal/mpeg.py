@@ -4,11 +4,8 @@ Real frame-header walk over MPEG-1/2/2.5 Layer I/II/III streams
 (ISO/IEC 11172-3 §2.4.1.3 header layout, the public frame-length
 formulae, and the de-facto Xing/Info VBR tag): skips ID3v2/ID3v1 tags,
 validates every frame header, resyncs across junk, and reports sample
-rate, channel mode, frame count, duration and average bitrate. This is
-the metadata half of MPEG audio support; Layer I/II SAMPLE decode lives
-in multimodal/mpeg_decode.py (wired through the ``_decode_real`` seam
-in multimodal/binary.py); Layer III (huffman + IMDCT) remains the
-documented codec seam.
+rate, channel mode, frame count, duration and average bitrate. Headers
+only: no sample is decoded.
 
 ≙ the reference's format list WAV/FLAC/MP3/OGG (design.md:451-475;
 requirements.md:18).
@@ -18,8 +15,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from audio_feature_extraction_spark.core.errors import LoadError
 
-class Mp3Error(ValueError):
+
+class Mp3Error(LoadError):
     pass
 
 

@@ -6,8 +6,7 @@ computed with the CRC field zeroed) — plus the Vorbis identification
 header (\\x01vorbis: channels, sample rate) and OpusHead (channels,
 pre-skip; Opus granules always tick at 48 kHz). Duration comes from the
 last page's granule position, which both codecs define as the absolute
-PCM sample count. This is the metadata half of OGG support; SAMPLE
-decode stays behind the ``_decode_real`` seam in multimodal/binary.py.
+PCM sample count. Headers only: no packet is decoded.
 
 ≙ the reference's format list WAV/FLAC/MP3/OGG (design.md:451-475).
 """
@@ -16,8 +15,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from audio_feature_extraction_spark.core.errors import LoadError
 
-class OggError(ValueError):
+
+class OggError(LoadError):
     pass
 
 

@@ -1,20 +1,21 @@
 """Container sniffing + real metadata extraction over binary columns.
 
-``probe_payload`` recognizes every format the engine handles — WAV,
-FLAC, MP3, OGG (Vorbis/Opus), MP4/ISO-BMFF, AVI, Matroska/WebM video,
-PNG, BMP, JPEG — from magic bytes and parses the real header metadata
-without decoding samples/pixels: WAV fmt chunk, FLAC STREAMINFO, the
-MP3 frame walk (multimodal/mpeg.py), the Ogg page walk
-(multimodal/ogg.py), the ISO-BMFF box walk (multimodal/mp4.py), the
-AVI RIFF hdrl walk (multimodal/avi.py), the EBML element walk
-(multimodal/mkv.py), PNG IHDR, BMP info header, JPEG SOFn frame header.
+``probe_payload`` recognizes WAV, FLAC, MP3, OGG (Vorbis/Opus),
+MP4/ISO-BMFF, AVI, Matroska/WebM, PNG, BMP and JPEG from magic bytes
+and parses header metadata only, decoding no samples or pixels: WAV
+fmt chunk, FLAC STREAMINFO, the MP3 frame walk (multimodal/mpeg.py),
+the Ogg page walk (multimodal/ogg.py), the ISO-BMFF box walk
+(multimodal/mp4.py), the AVI RIFF hdrl walk (multimodal/avi.py), the
+EBML element walk (multimodal/mkv.py), PNG IHDR, BMP info header, JPEG
+SOFn frame header.
 
 ``probe_media_metadata`` lifts it to a DataFrame operator: an
-Arrow-batched narrow map over the payload scan (decode-where-the-
+Arrow-batched narrow map over the payload scan (probe-where-the-
 bytes-live; only fixed-width metadata leaves the executor) — the
 100 TB-safe shape for corpus intake triage: route by container, drop
-corrupt payloads, bucket by duration/resolution before any expensive
-decode. ≙ reference AudioFileLoader probe (design.md:451-475).
+corrupt payloads, bucket by duration/resolution. ≙ the probe half of
+the reference's AudioFileLoader (design.md:451-475); the engine's
+input is pre-tokenized sequences, so it has no decode half.
 """
 
 from __future__ import annotations
@@ -26,8 +27,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from audio_feature_extraction_spark.core.errors import LoadError
 
-class ProbeError(ValueError):
+
+class ProbeError(LoadError):
     pass
 
 
@@ -130,8 +133,9 @@ def _probe_jpeg(b: bytes) -> dict:
 
 def probe_payload(payload: bytes) -> dict:
     """Sniff the container from magic bytes and parse its metadata.
-    Raises ProbeError / Mp3Error / OggError on unrecognized or corrupt
-    payloads — callers in skip mode record and continue."""
+    Raises a ``core.errors.LoadError`` subclass (ProbeError or the
+    walker's own error) on unrecognized or corrupt payloads — callers
+    in skip mode record and continue."""
     b = bytes(payload)
     if b[:4] == b"RIFF":
         if b[8:12] == b"AVI ":

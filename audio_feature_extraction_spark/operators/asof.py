@@ -27,10 +27,92 @@ with max-seq in both engines so tie-breaks agree).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+from collections.abc import Sequence
+
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.core.materialize import materialize
+
+
+def _carry_input(
+    probes: DataFrame,
+    states: list[DataFrame],
+    entity: str,
+    ts_col: str,
+    value_col: str,
+    seq_col: str,
+    strict: bool,
+    carry: Sequence[str] = (),
+    with_src: bool = False,
+) -> DataFrame:
+    """The union every window shape carries forward over: the rows of
+    each ``states`` table, then the probes. ``_tag`` orders equal
+    timestamps: inclusive puts states (0) before probes (1), ``strict``
+    puts probes first so they cannot see them. ``_s`` is the (value, ts)
+    pair as ONE struct, null on probes and on null-valued states, so
+    ``last(ignorenulls)`` skips a transparent state's pair whole and the
+    served value and ts always come from the same state row.
+    ``_is_probe`` is true on probes, null on states. ``with_src`` adds
+    ``_src``, the index of the row's state table. ``carry`` probe columns
+    ride through the union (null on state rows), which avoids a
+    join-back shuffle after the window."""
+    state_tag, probe_tag = (1, 0) if strict else (0, 1)
+    vtype = states[0].schema[value_col].dataType
+    ptypes = {f.name: f.dataType for f in probes.schema.fields}
+
+    def tagged(df, tag, src, s, is_probe, carried):
+        return df.select(
+            F.col(entity),
+            F.col(ts_col),
+            F.lit(tag).alias("_tag"),
+            F.col(seq_col).alias("_seq"),
+            *([F.lit(src).cast("int").alias("_src")] if with_src else []),
+            s.alias("_s"),
+            F.lit(is_probe).cast("boolean").alias("_is_probe"),
+            *carried,
+        )
+
+    pair = F.when(
+        F.col(value_col).isNotNull(),
+        F.struct(
+            F.col(value_col).alias("v"),
+            F.col(ts_col).cast("timestamp").alias("t"),
+        ),
+    )
+    absent = [F.lit(None).cast(ptypes[c]).alias(c) for c in carry]
+    parts = [
+        tagged(df, state_tag, i, pair, None, absent)
+        for i, df in enumerate(states)
+    ]
+    no_pair = F.lit(None).cast(f"struct<v:{vtype.simpleString()},t:timestamp>")
+    parts.append(
+        tagged(probes, probe_tag, None, no_pair, True, [F.col(c) for c in carry])
+    )
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def _carry_window(ts_col: str, *keys: str) -> WindowSpec:
+    """Running frame per ``keys`` in carry order (ts, tag, seq)."""
+    return (
+        Window.partitionBy(*keys)
+        .orderBy(ts_col, "_tag", "_seq")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def _ttl(ts_col: str, max_staleness_seconds: float | None, v, t):
+    """The feature-store TTL: ``(v, t)`` nulled out where the carried
+    ts ``t`` is older than ``max_staleness_seconds`` at the probe's
+    ``ts_col``; unchanged when there is no TTL."""
+    if max_staleness_seconds is None:
+        return v, t
+    fresh = (
+        F.unix_micros(F.col(ts_col).cast("timestamp"))
+        - F.unix_micros(t.cast("timestamp"))
+    ) <= F.lit(int(max_staleness_seconds * 1_000_000))
+    return F.when(fresh, v), F.when(fresh, t)
 
 
 def asof_join(
@@ -69,76 +151,23 @@ def asof_join(
     # (ts, tag, seq), so among equal-ts states the max-seq row is the last
     # one carried — exactly the oracle's row_number()-desc tie-break, with
     # one less shuffle
-    st = states.select(entity, ts_col, value_col, seq_col)
-
-    # tag ordering encodes the boundary: inclusive -> state(0) before
-    # probe(1) at equal ts; strict -> probe first so it cannot see it
-    state_tag, probe_tag = (0, 1) if not strict else (1, 0)
-    # probe payload columns ride through the union (null on state rows) —
-    # avoids a join-back shuffle after the window
     carry = [
         c for c in probes.columns if c not in (entity, ts_col, seq_col, value_col)
     ]
-    pr_schema = dict(zip(probes.schema.names, probes.schema.fields))
-    # (value, ts) carried as ONE nullable struct: null-valued states map
-    # to a null struct, so last(ignorenulls) skips the whole pair at once
-    vtype = st.schema[value_col].dataType
-    st_tagged = st.select(
-        F.col(entity),
-        F.col(ts_col),
-        F.lit(state_tag).alias("_tag"),
-        F.col(seq_col).alias("_seq"),
-        F.when(
-            F.col(value_col).isNotNull(),
-            F.struct(
-                F.col(value_col).alias("v"),
-                F.col(ts_col).cast("timestamp").alias("t"),
-            ),
-        ).alias("_s"),
-        F.lit(None).cast("boolean").alias("_is_probe"),
-        *[F.lit(None).cast(pr_schema[c].dataType).alias(c) for c in carry],
+    u = _carry_input(
+        probes, [states], entity, ts_col, value_col, seq_col, strict, carry
     )
-    pr_tagged = probes.select(
-        F.col(entity),
-        F.col(ts_col),
-        F.lit(probe_tag).alias("_tag"),
-        F.col(seq_col).alias("_seq"),
-        F.lit(None)
-        .cast(f"struct<v:{vtype.simpleString()},t:timestamp>")
-        .alias("_s"),
-        F.lit(True).alias("_is_probe"),
-        *[F.col(c) for c in carry],
+    carried = u.withColumn(
+        "_c", F.last("_s", ignorenulls=True).over(_carry_window(ts_col, entity))
     )
-    unioned = st_tagged.unionByName(pr_tagged)
-
-    w = (
-        Window.partitionBy(entity)
-        .orderBy(ts_col, "_tag", "_seq")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = (
-        unioned.withColumn("_c", F.last("_s", ignorenulls=True).over(w))
-        .withColumn("asof_value", F.col("_c.v"))
-        .withColumn("asof_ts", F.col("_c.t"))
-    )
-
-    out = carried.where(F.col("_is_probe"))
-    if max_staleness_seconds is not None:
-        ttl_us = int(max_staleness_seconds * 1_000_000)
-        fresh = (
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
-            - F.unix_micros(F.col("asof_ts").cast("timestamp"))
-        ) <= F.lit(ttl_us)
-        out = out.withColumn(
-            "asof_value", F.when(fresh, F.col("asof_value"))
-        ).withColumn("asof_ts", F.when(fresh, F.col("asof_ts")))
-    return out.select(
+    v, t = _ttl(ts_col, max_staleness_seconds, F.col("_c.v"), F.col("_c.t"))
+    return carried.where(F.col("_is_probe")).select(
         F.col(entity),
         F.col("_seq").alias(seq_col),
         F.col(ts_col),
         *carry,
-        "asof_value",
-        "asof_ts",
+        v.alias("asof_value"),
+        t.alias("asof_ts"),
     )
 
 
@@ -168,67 +197,20 @@ def asof_join_multi(
     TTL at probe time).
     """
     names = list(sources)
-    state_tag, probe_tag = (0, 1) if not strict else (1, 0)
-    tagged = []
-    vtype = None
-    for i, name in enumerate(names):
-        src = sources[name]
-        vtype = vtype or src.schema[value_col].dataType
-        st = src.select(
-            F.col(entity),
-            F.col(ts_col),
-            F.lit(state_tag).alias("_tag"),
-            F.col(seq_col).alias("_seq"),
-            F.lit(i).alias("_src"),
-            F.when(
-                F.col(value_col).isNotNull(),
-                F.struct(
-                    F.col(value_col).alias("v"),
-                    F.col(ts_col).cast("timestamp").alias("t"),
-                ),
-            ).alias("_s"),
-            F.lit(None).cast("boolean").alias("_is_probe"),
-        )
-        tagged.append(st)
-    stype = f"struct<v:{vtype.simpleString()},t:timestamp>"
-    pr = probes.select(
-        F.col(entity),
-        F.col(ts_col),
-        F.lit(probe_tag).alias("_tag"),
-        F.col(seq_col).alias("_seq"),
-        F.lit(None).cast("int").alias("_src"),
-        F.lit(None).cast(stype).alias("_s"),
-        F.lit(True).alias("_is_probe"),
+    out = _carry_input(
+        probes, [sources[n] for n in names], entity, ts_col, value_col,
+        seq_col, strict, with_src=True,
     )
-    u = tagged[0]
-    for t in tagged[1:]:
-        u = u.unionByName(t)
-    u = u.unionByName(pr)
-
-    w = (
-        Window.partitionBy(entity)
-        .orderBy(ts_col, "_tag", "_seq")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ttl_us = (
-        int(max_staleness_seconds * 1_000_000)
-        if max_staleness_seconds is not None
-        else None
-    )
-    out = u
+    w = _carry_window(ts_col, entity)
     cols = []
     for i, name in enumerate(names):
         # per-source (value, ts) pair carried as one struct, null for
         # other sources AND for null-valued states (transparency)
         s = F.when(F.col("_src") == i, F.col("_s"))
         out = out.withColumn(f"_c{i}", F.last(s, ignorenulls=True).over(w))
-        v, t = F.col(f"_c{i}.v"), F.col(f"_c{i}.t")
-        if ttl_us is not None:
-            fresh = (
-                F.unix_micros(F.col(ts_col).cast("timestamp"))
-                - F.unix_micros(t)
-            ) <= F.lit(ttl_us)
-            v, t = F.when(fresh, v), F.when(fresh, t)
+        v, t = _ttl(
+            ts_col, max_staleness_seconds, F.col(f"_c{i}.v"), F.col(f"_c{i}.t")
+        )
         out = out.withColumn(f"asof_{name}", v).withColumn(
             f"asof_{name}_ts", t
         )
@@ -278,43 +260,13 @@ def asof_join_bucketed(
     bucket_us = int(bucket_seconds * 1_000_000)
     micros = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
 
-    state_tag, probe_tag = (0, 1) if not strict else (1, 0)
-    vtype = states.schema[value_col].dataType
-    st = states.select(
-        F.col(entity),
-        F.col(ts_col),
-        F.lit(state_tag).alias("_tag"),
-        F.col(seq_col).alias("_seq"),
-        F.when(
-            F.col(value_col).isNotNull(),
-            F.struct(
-                F.col(value_col).alias("v"),
-                F.col(ts_col).cast("timestamp").alias("t"),
-            ),
-        ).alias("_s"),
-        F.lit(None).cast("boolean").alias("_is_probe"),
-    )
-    pr = probes.select(
-        F.col(entity),
-        F.col(ts_col),
-        F.lit(probe_tag).alias("_tag"),
-        F.col(seq_col).alias("_seq"),
-        F.lit(None)
-        .cast(f"struct<v:{vtype.simpleString()},t:timestamp>")
-        .alias("_s"),
-        F.lit(True).alias("_is_probe"),
-    )
-    u = st.unionByName(pr).withColumn(
-        "_bucket", (micros(ts_col) / bucket_us).cast("long")
-    )
+    u = _carry_input(
+        probes, [states], entity, ts_col, value_col, seq_col, strict
+    ).withColumn("_bucket", (micros(ts_col) / bucket_us).cast("long"))
 
     # 1. local carry within (entity, bucket) — (value, ts) as ONE struct so
     # null-valued (transparent) states can't split the pair (ADVICE r01)
-    wloc = (
-        Window.partitionBy(entity, "_bucket")
-        .orderBy(ts_col, "_tag", "_seq")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    wloc = _carry_window(ts_col, entity, "_bucket")
     local = (
         u.withColumn("_l", F.last("_s", ignorenulls=True).over(wloc))
         .withColumn("_lv", F.col("_l.v"))
@@ -362,22 +314,8 @@ def asof_join_bucketed(
     )
     filled = (
         all_buckets.join(prev_carry, [entity, "_bucket"], "left")
-        .withColumn(
-            "_pv",
-            F.last("_pv", ignorenulls=True).over(
-                Window.partitionBy(entity)
-                .orderBy("_bucket")
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .withColumn(
-            "_pts",
-            F.last("_pts", ignorenulls=True).over(
-                Window.partitionBy(entity)
-                .orderBy("_bucket")
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
+        .withColumn("_pv", F.last("_pv", ignorenulls=True).over(wb))
+        .withColumn("_pts", F.last("_pts", ignorenulls=True).over(wb))
     )
 
     # 3. combine: local carry wins, else boundary carry from prior buckets
@@ -392,16 +330,12 @@ def asof_join_bucketed(
             F.coalesce("_lts", "_pts").alias("asof_ts"),
         )
     )
-    if max_staleness_seconds is not None:
-        ttl_us = int(max_staleness_seconds * 1_000_000)
-        fresh = (
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
-            - F.unix_micros(F.col("asof_ts").cast("timestamp"))
-        ) <= F.lit(ttl_us)
-        out = out.withColumn(
-            "asof_value", F.when(fresh, F.col("asof_value"))
-        ).withColumn("asof_ts", F.when(fresh, F.col("asof_ts")))
-    return out
+    v, t = _ttl(
+        ts_col, max_staleness_seconds, F.col("asof_value"), F.col("asof_ts")
+    )
+    return out.select(
+        entity, seq_col, ts_col, v.alias("asof_value"), t.alias("asof_ts")
+    )
 
 
 def asof_join_auto(

@@ -103,7 +103,8 @@ class CorpusConfig:
     bpe_max_words: int = 1_000_000
     # per-stage row counts in the report. Each count materializes the
     # chain-so-far, so accounting caches every stage (persist + count,
-    # released once the next stage lands). accounting=False skips the
+    # released once the next stage lands; the last one is the returned
+    # frame, which the caller releases). accounting=False skips the
     # counts AND the caching: one lazy plan end-to-end, materialized
     # once by the final write — the 100 TB production mode, where stage
     # counts come from the written manifest instead of extra passes.
@@ -133,6 +134,12 @@ def prepare_corpus(
 ) -> tuple[DataFrame, DataFrame, dict]:
     """Run the 6-stage pipeline; returns (kept token sequences with
     epochs, packed-block manifest, per-stage report dict).
+
+    In accounting mode without ``resume_dir`` the returned sequences are
+    the last stage's cache (every earlier stage's is already released),
+    so writing them and the manifest does not recompute the chain. The
+    caller owns that cache: release it with ``mixed.unpersist()`` once
+    both outputs are written, or it stays for the session's lifetime.
 
     ``docs``/``tokseq`` override the default sf_dir tables (tests plant
     rows that way); tokseq doc_ids must be ``doc_<documents.doc_id>``.
@@ -197,7 +204,10 @@ def prepare_corpus(
                 "doc_id"
             )
         )
-        return tokseq.join(kept, "doc_id")  # id-set join; AQE picks
+        # sort-merge hint: both sides are shuffles of unknown size, and
+        # AQE broadcast whichever side's stage finished first, so the
+        # plan (and its generated classes) changed from call to call
+        return tokseq.join(kept.hint("merge"), "doc_id")
 
     ts = stage("after_exact_dedup", exact)
 
@@ -254,9 +264,15 @@ def prepare_corpus(
                 threshold=cfg.semdedup_threshold,
                 n_clusters=cfg.semdedup_clusters,
             ).select(
-                F.concat(F.lit("doc_"), F.col("id_b").cast("string")).alias(
-                    "doc_id"
-                )
+                # id_b is never null; the coalesce tells the optimizer so.
+                # A nullable key made the anti join infer an isnotnull
+                # filter that reached only one side of semdedup's
+                # self-join, so the two sides no longer shared one
+                # exchange and AQE broadcast whichever finished first
+                F.concat(
+                    F.lit("doc_"),
+                    F.coalesce(F.col("id_b").cast("string"), F.lit("")),
+                ).alias("doc_id")
             )
             return ts.join(sem_drop, "doc_id", "left_anti")
 

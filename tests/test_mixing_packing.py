@@ -404,6 +404,7 @@ def test_prepare_corpus_pipeline(spark):
     total_tokens = mixed.agg(F.sum("n_tok")).collect()[0][0]
     slice_tokens = blocks.agg(F.sum("slice_len")).collect()[0][0]
     assert slice_tokens == total_tokens
+    mixed.unpersist()
 
 
 def test_prepare_corpus_kill_and_resume(spark, tmp_path):
@@ -510,6 +511,7 @@ def test_prepare_corpus_substring_stage(spark):
         docs=docs, tokseq=tokseq,
     )
     out = {r.doc_id: r.n_tok for r in mixed.select("doc_id", "n_tok").collect()}
+    mixed.unpersist()
     assert report["after_near_dedup"] == 4       # low jaccard: all survive
     assert report["after_substring_dedup"] == 3  # doc_2 emptied and dropped
     assert out["doc_0"] == 28 and out["doc_1"] == 28
@@ -565,6 +567,7 @@ def test_prepare_corpus_semdedup_and_nb_stages(spark):
         docs=docs, tokseq=tokseq, emb=emb,
     )
     kept = {r.doc_id for r in mixed.select("doc_id").distinct().collect()}
+    mixed.unpersist()
     assert "doc_7" not in kept                      # dominated by doc_3
     assert "doc_3" in kept
     assert report["after_semantic_dedup"] == report["after_near_dedup"] - 1
@@ -583,6 +586,7 @@ def test_prepare_corpus_semdedup_and_nb_stages(spark):
         docs=docs, tokseq=tokseq,
     )
     kept2 = {r.doc_id for r in mixed2.select("doc_id").distinct().collect()}
+    mixed2.unpersist()
     assert kept2.isdisjoint(low)
     assert rep2["after_nb_quality"] == rep2["after_quality"] - len(
         low & {f"doc_{i}" for i in range(20)}
@@ -596,6 +600,7 @@ def test_prepare_corpus_semdedup_and_nb_stages(spark):
         docs=docs, tokseq=tokseq,
     )
     kept3 = {r.doc_id for r in mixed3.select("doc_id").distinct().collect()}
+    mixed3.unpersist()
     assert rep3["after_dsir"] == 8 and len(kept3) == 8
     assert kept3 <= kept2 | low | kept  # subset of the cleaned corpus
     mixed3b, _b3b, rep3b = corpus.prepare_corpus(
@@ -606,11 +611,13 @@ def test_prepare_corpus_semdedup_and_nb_stages(spark):
     assert {
         r.doc_id for r in mixed3b.select("doc_id").distinct().collect()
     } == kept3
-    _m4, _b4, rep4 = corpus.prepare_corpus(
+    mixed3b.unpersist()
+    m4, _b4, rep4 = corpus.prepare_corpus(
         spark, "",
         cfg=corpus.CorpusConfig(block_len=64, dsir_k=10_000),
         docs=docs, tokseq=tokseq,
     )
+    m4.unpersist()
     assert rep4["after_dsir"] == rep4["after_decontamination"]
 
 
@@ -665,6 +672,7 @@ def test_prepare_corpus_bpe_stage(spark):
     # packing conserves the subword token count
     total = mixed.agg(F.sum("n_tok")).collect()[0][0]
     assert blocks.agg(F.sum("slice_len")).collect()[0][0] == total
+    mixed.unpersist()
 
 
 def _snapshot_inputs(spark):
@@ -698,6 +706,45 @@ def _snapshot_inputs(spark):
         "vec_id long, embedding array<double>",
     )
     return docs, tokseq, emb
+
+
+def test_prepare_corpus_caller_releases_accounting_cache(spark):
+    """Accounting mode returns the last stage's cache, and the caller
+    owns it: two default-config calls, each followed by
+    ``mixed.unpersist()``, leave the cache manager empty and no new
+    persisted RDD once the frames are dropped (the near-dup stage's LSH
+    band table is a local checkpoint, which the ContextCleaner frees
+    when the JVM collects the frames that read it)."""
+    import gc
+    import time
+
+    from audio_feature_extraction_spark.plans import corpus
+
+    docs, tokseq, _emb = _snapshot_inputs(spark)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    spark.catalog.clearCache()
+    start = persisted()
+    for _ in range(2):
+        mixed, blocks, _ = corpus.prepare_corpus(
+            spark, "", cfg=corpus.CorpusConfig(), docs=docs, tokseq=tokseq
+        )
+        assert mixed.is_cached
+        blocks.count()  # the caller's write reads the cache
+        mixed.unpersist()
+        assert cache.isEmpty()
+    del mixed, blocks
+    for _ in range(40):
+        gc.collect()
+        spark._jvm.System.gc()
+        if persisted() <= start:
+            break
+        time.sleep(0.25)
+    assert persisted() <= start, persisted() - start
+    assert cache.isEmpty()
 
 
 def test_prepare_corpus_warm_call_compiles_nothing(

@@ -1,10 +1,17 @@
-"""MP3 frame-walk, Ogg page-walk, and the probe_media_metadata operator.
+"""Container walks (MP3, Ogg, MP4, AVI, Matroska), the header probes
+(WAV, FLAC, PNG, BMP, JPEG) and the probe_media_metadata operator.
 
 Fixtures are built byte-by-byte from the public specs (ISO 11172-3
-header layout, RFC 3533 page layout) — no codec library involved.
+header layout, RFC 3533 page layout, RFC 9639 STREAMINFO, PNG IHDR, T.81
+SOFn) — no codec library involved.
 """
 
 from __future__ import annotations
+
+import io
+import struct
+import wave
+import zlib
 
 import pytest
 
@@ -250,25 +257,77 @@ def test_ogg_rejects_garbage():
 # probe dispatch + the Spark operator
 # ---------------------------------------------------------------------------
 
-def _fixture_payloads() -> dict[str, bytes]:
-    import numpy as np
+def _wav_pcm16(n_frames: int, rate: int) -> bytes:
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(bytes(2 * n_frames))
+    return buf.getvalue()
 
-    from audio_feature_extraction_spark.multimodal.flac import encode_flac
-    from audio_feature_extraction_spark.multimodal.image import (
-        encode_bmp,
-        encode_png,
+
+def _flac_header(n_frames: int, rate: int, channels: int = 1) -> bytes:
+    """``fLaC`` + a last-block STREAMINFO (RFC 9639 §8.2): 16-bit
+    samples, 4096-sample blocks, zero MD5; no audio frames follow."""
+    packed = (rate << 44) | ((channels - 1) << 41) | (15 << 36) | n_frames
+    info = (
+        struct.pack(">HH", 4096, 4096) + bytes(6)   # block + frame sizes
+        + packed.to_bytes(8, "big") + bytes(16)      # rate..total, MD5
     )
-    from audio_feature_extraction_spark.multimodal.wav import encode_pcm16
+    return b"fLaC" + bytes([0x80]) + len(info).to_bytes(3, "big") + info
 
-    sig = np.sin(np.linspace(0, 20, 1600)).astype(np.float64)
-    rgb = (np.arange(48, dtype=np.uint8).reshape(4, 4, 3) * 5) % 255
+
+def _png_chunk(ctype: bytes, data: bytes) -> bytes:
+    crc = zlib.crc32(ctype + data)
+    return struct.pack(">I", len(data)) + ctype + data + struct.pack(">I", crc)
+
+
+def _png_rgb(width: int, height: int) -> bytes:
+    rows = b"".join(b"\x00" + bytes(3 * width) for _ in range(height))
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", width, height, 8, 2,
+                                          0, 0, 0))
+        + _png_chunk(b"IDAT", zlib.compress(rows))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def _bmp_rgb(width: int, height: int) -> bytes:
+    """24-bit bottom-up BMP: file header + BITMAPINFOHEADER + rows
+    padded to 4 bytes."""
+    pixels = bytes(((3 * width + 3) // 4 * 4) * height)
+    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0,
+                       len(pixels), 2835, 2835, 0, 0)
+    offset = 14 + len(info)
+    return (
+        b"BM" + struct.pack("<IHHI", offset + len(pixels), 0, 0, offset)
+        + info + pixels
+    )
+
+
+def _jpeg_header(width: int, height: int, sof: int = 0xC0) -> bytes:
+    """SOI, an APP0 segment the marker walk must skip, then an SOFn
+    frame header with three components."""
+    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + bytes(9)
+    comps = b"".join(bytes([cid, 0x11, 0]) for cid in (1, 2, 3))
+    sof_seg = (
+        bytes([0xFF, sof]) + struct.pack(">HBHHB", 8 + len(comps), 8,
+                                         height, width, 3)
+        + comps
+    )
+    return b"\xff\xd8" + app0 + sof_seg + b"\xff\xd9"
+
+
+def _fixture_payloads() -> dict[str, bytes]:
     return {
-        "wav": encode_pcm16(sig, 16000),
-        "flac": encode_flac((sig * 30000).astype(np.int32), 16000),
+        "wav": _wav_pcm16(1600, 16000),
+        "flac": _flac_header(1600, 16000),
         "mp3": b"".join(_mp3_frame() for _ in range(5)),
         "ogg": _vorbis_stream(),
-        "png": encode_png(rgb),
-        "bmp": encode_bmp(rgb),
+        "png": _png_rgb(4, 4),
+        "bmp": _bmp_rgb(4, 4),
     }
 
 
@@ -310,6 +369,40 @@ def test_probe_media_metadata_operator(spark):
         probe_media_metadata(df, on_error="raise").collect()
 
 
+
+def test_probe_jpeg_frame_header():
+    info = probe_payload(_jpeg_header(56, 40))
+    assert info["container"] == "jpeg" and info["codec"] == "jpeg_baseline"
+    assert (info["width"], info["height"]) == (56, 40)
+    assert info["channels"] == 3
+    assert probe_payload(_jpeg_header(56, 40, sof=0xC2))["codec"] == (
+        "jpeg_progressive"
+    )
+    with pytest.raises(ProbeError, match="SOFn"):
+        probe_payload(b"\xff\xd8\xff\xd9")
+
+
+def test_error_hierarchy():
+    """≙ design.md:2349-2377 §9.1: one base, typed subclasses, ValueError
+    compatibility for existing callers; every walker error is a
+    LoadError, so skip mode records it by its own class name."""
+    from audio_feature_extraction_spark.core import errors
+    from audio_feature_extraction_spark.core.config import FrameSpec
+    from audio_feature_extraction_spark.multimodal.avi import AviError
+    from audio_feature_extraction_spark.multimodal.mkv import MkvError
+    from audio_feature_extraction_spark.multimodal.mp4 import Mp4Error
+
+    with pytest.raises(errors.InvalidConfigError):
+        FrameSpec(frame_len=0)
+    with pytest.raises(errors.LoadError):
+        probe_payload(b"nope")
+    for exc in (errors.LoadError, errors.FeatureExtractionError,
+                errors.InvalidConfigError):
+        assert issubclass(exc, errors.EngineError)
+        assert issubclass(exc, ValueError)
+    for exc in (ProbeError, Mp3Error, OggError, Mp4Error, AviError, MkvError):
+        assert issubclass(exc, errors.LoadError)
+
 def _raw_header(version=3, layer_bits=1, br_idx=9, sr_idx=0,
                 padding=0, mode=0, protection=1) -> bytes:
     h = (0x7FF << 21) | (version << 19) | (layer_bits << 17) | (protection << 16)
@@ -332,6 +425,15 @@ def test_mp3_layer1_and_layer2_geometry():
     assert h2.layer == 2 and h2.samples_per_frame == 1152
     assert h2.bitrate_kbps == 384 and h2.sample_rate == 48000
     assert h2.frame_bytes == 144 * 384000 // 48000
+
+    # the stream walk over whole Layer I and Layer II streams
+    for raw in (_raw_header(layer_bits=3, br_idx=14, sr_idx=2, mode=1),
+                _raw_header(layer_bits=2, br_idx=14, sr_idx=1, mode=1)):
+        hdr = parse_frame_header(raw)
+        info = parse_mp3((raw + bytes(hdr.frame_bytes - 4)) * 3)
+        assert info.layer == hdr.layer and info.n_frames == 3
+        assert info.sample_rate == hdr.sample_rate
+        assert info.channel_mode == "joint_stereo"
 
 
 def test_mp3_rejects_unwalkable_headers():

@@ -1,13 +1,11 @@
-"""Streaming stateful framing + multimodal binary plumbing."""
+"""Streaming stateful framing, serving, dedup and scoring."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from audio_feature_extraction_spark.core.config import FrameSpec
 from audio_feature_extraction_spark.core.schemas import TOKEN_SEQUENCES
-from audio_feature_extraction_spark.multimodal import binary
 from audio_feature_extraction_spark.operators import framing
 from audio_feature_extraction_spark.streaming import stream
 
@@ -277,160 +275,6 @@ def test_latency_stats():
     assert abs(rep["window_avg_ms"] - 70.0) < 1e-9
 
 
-def test_media_features_deterministic(spark):
-    media = binary.synthetic_media(spark, 9)
-    out1 = {
-        r.media_id: tuple(r.features)
-        for r in binary.extract_media_features(media, dim=8).collect()
-    }
-    out2 = {
-        r.media_id: tuple(r.features)
-        for r in binary.extract_media_features(media, dim=8).collect()
-    }
-    assert out1 == out2
-    assert all(len(v) == 8 for v in out1.values())
-    assert len(out1) == 9
-
-
-def test_media_decode_stub_raises_without_codec(spark):
-    # image raises NotImplementedError (no codec libs); audio with
-    # non-WAV bytes fails loudly in the real RIFF parser
-    media = binary.synthetic_media(spark, 3)
-    with pytest.raises(Exception, match="NotImplementedError|codec|RIFF"):
-        binary.extract_media_features(media, decode_stub=False).collect()
-
-
-def test_video_frame_sampling(spark):
-    media = binary.synthetic_media(spark, 9)
-    out = binary.sample_video_frames(media, every_n=2).collect()
-    by_media = {}
-    for r in out:
-        by_media.setdefault(r.media_id, []).append(r.frame_idx)
-    # videos have n_frames=6, sampled every 2 -> idx 0,2,4
-    assert all(sorted(v) == [0, 2, 4] for v in by_media.values())
-    assert all(len(r.frame_payload) > 0 for r in out)
-
-
-# ---------------------------------------------------------------------------
-# real WAV decode path (pure-numpy codec behind the multimodal seam)
-# ---------------------------------------------------------------------------
-
-def _sine(n=480, sr=16000):
-    t = np.arange(n, dtype=np.float64) / sr
-    return 0.5 * np.sin(2 * np.pi * 440.0 * t)
-
-
-def test_wav_pcm16_roundtrip():
-    from audio_feature_extraction_spark.multimodal import wav
-
-    sig = _sine()
-    payload = wav.encode_pcm16(sig, 16000)
-    dec, sr = wav.decode_wav(payload)
-    assert sr == 16000 and len(dec) == len(sig)
-    # 16-bit quantization: exact to within half an LSB
-    assert np.abs(dec - sig).max() <= 0.5 / 32768.0 + 1e-12
-
-
-def test_wav_formats_and_mixdown():
-    from audio_feature_extraction_spark.multimodal import wav
-
-    # stereo float32: mixdown = channel mean
-    sr = 8000
-    left = np.array([0.5, -0.5, 0.25], dtype=np.float32)
-    right = np.array([0.0, 0.5, 0.75], dtype=np.float32)
-    inter = np.empty(6, dtype="<f4"); inter[0::2] = left; inter[1::2] = right
-    data = inter.tobytes()
-    fmt = (3).to_bytes(2, "little") + (2).to_bytes(2, "little") + \
-        sr.to_bytes(4, "little") + (sr * 8).to_bytes(4, "little") + \
-        (8).to_bytes(2, "little") + (32).to_bytes(2, "little")
-    body = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt + \
-        b"data" + len(data).to_bytes(4, "little") + data
-    payload = b"RIFF" + len(body).to_bytes(4, "little") + body
-    dec, got_sr = wav.decode_wav(payload)
-    assert got_sr == sr
-    np.testing.assert_allclose(dec, (left.astype(np.float64) + right) / 2.0)
-    # 8-bit unsigned PCM: 128 -> 0.0
-    fmt8 = (1).to_bytes(2, "little") + (1).to_bytes(2, "little") + \
-        sr.to_bytes(4, "little") + sr.to_bytes(4, "little") + \
-        (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
-    d8 = bytes([128, 255, 0])
-    body8 = b"WAVE" + b"fmt " + len(fmt8).to_bytes(4, "little") + fmt8 + \
-        b"data" + len(d8).to_bytes(4, "little") + d8
-    dec8, _ = wav.decode_wav(b"RIFF" + len(body8).to_bytes(4, "little") + body8)
-    np.testing.assert_allclose(dec8, [0.0, 127 / 128.0, -1.0])
-
-
-def test_wav_rejects_non_wav():
-    from audio_feature_extraction_spark.multimodal import wav
-
-    with pytest.raises(ValueError):
-        wav.decode_wav(b"\x00" * 64)
-
-
-def test_extract_media_features_real_audio(spark):
-    """decode_stub=False decodes real WAV payloads end-to-end through the
-    Arrow-batched plumbing (VERDICT r01 missing #2)."""
-    from audio_feature_extraction_spark.multimodal import wav
-    from audio_feature_extraction_spark.multimodal.binary import (
-        MEDIA_SCHEMA,
-        _signal_features,
-        extract_media_features,
-    )
-
-    sig = _sine()
-    payload = wav.encode_pcm16(sig, 16000)
-    meta = {"width": None, "height": None, "sample_rate": 16000,
-            "n_frames": None, "codec": "pcm16"}
-    media = spark.createDataFrame(
-        [("m0", "audio", payload, meta)], schema=MEDIA_SCHEMA
-    )
-    (row,) = extract_media_features(media, dim=8, decode_stub=False).collect()
-    dec, _ = wav.decode_wav(payload)
-    np.testing.assert_allclose(
-        np.array(row.features), _signal_features(dec, 8), rtol=0, atol=0
-    )
-    assert row.n_bytes == len(payload)
-
-
-def test_extract_media_features_real_video_mjpeg_and_seam(spark):
-    """Video decodes FOR REAL in the executor kernel for the MJPEG-AVI
-    profile; inter-coded payloads degrade to per-row errors at the
-    documented seam (never a job failure)."""
-    import numpy as np
-
-    from audio_feature_extraction_spark.multimodal import avi as A
-    from audio_feature_extraction_spark.multimodal import jpeg as J
-    from audio_feature_extraction_spark.multimodal.binary import (
-        MEDIA_SCHEMA,
-        extract_media_features,
-    )
-
-    h, w = 16, 16
-    frames = []
-    for f in range(4):
-        img = ((np.arange(h)[:, None] * 3 + np.arange(w)[None, :] * 5
-                + f * 11) % 256).astype(np.uint8)
-        frames.append(J.encode_jpeg(img, quality=2))
-    mjpeg = A.build_mjpeg_avi(frames, w, h, fps=4)
-    meta = {"width": w, "height": h, "sample_rate": None,
-            "n_frames": 4, "codec": "mjpg"}
-    media = spark.createDataFrame(
-        [("m_mjpeg", "video", mjpeg, meta),
-         ("m_h264", "video", b"\x00\x00\x01garbage", meta)],
-        schema=MEDIA_SCHEMA,
-    )
-    out = {
-        r.media_id: r
-        for r in extract_media_features(
-            media, dim=4, decode_stub=False, on_error="skip"
-        ).collect()
-    }
-    assert out["m_mjpeg"].error is None
-    assert len(out["m_mjpeg"].features) == 4
-    assert out["m_h264"].features is None
-    assert out["m_h264"].error is not None
-
-
 @pytest.mark.slow
 def test_state_ttl_flushes_idle_doc(spark, tmp_path):
     """T5 state-reset lifecycle: a doc idle past flush_timeout_seconds has
@@ -488,264 +332,6 @@ def test_state_ttl_flushes_idle_doc(spark, tmp_path):
     assert ("d", 0, (0, 1, 2, 3)) in got
     assert ("d", 1, (2, 3, 4, 5)) in got
     assert ("d", 2, (4, 5)) in got
-
-
-def test_extract_media_skip_and_log_recovery(spark):
-    """design.md §9.2 recovery: a corrupt payload among good ones yields
-    an error row (null features, reason recorded) while the rest decode —
-    the job survives (on_error='skip')."""
-    from audio_feature_extraction_spark.multimodal import wav
-    from audio_feature_extraction_spark.multimodal.binary import (
-        MEDIA_SCHEMA,
-        extract_media_features,
-    )
-
-    good = wav.encode_pcm16(_sine(64), 8000)
-    meta = {"width": None, "height": None, "sample_rate": 8000,
-            "n_frames": None, "codec": "pcm16"}
-    media = spark.createDataFrame(
-        [
-            ("ok", "audio", good, meta),
-            ("bad", "audio", b"\x00garbage", meta),
-            ("img", "image", b"\x89PNG", meta),
-        ],
-        schema=MEDIA_SCHEMA,
-    )
-    rows = {
-        r.media_id: r
-        for r in extract_media_features(
-            media, dim=4, decode_stub=False, on_error="skip"
-        ).collect()
-    }
-    assert rows["ok"].error is None and len(rows["ok"].features) == 4
-    assert rows["bad"].features is None and "LoadError" in rows["bad"].error
-    assert rows["img"].features is None and "LoadError" in rows["img"].error
-    # raise mode still fails fast on the same input
-    with pytest.raises(Exception, match="LoadError|RIFF|NotImplementedError"):
-        extract_media_features(media, dim=4, decode_stub=False).collect()
-
-
-def test_error_hierarchy():
-    """≙ design.md:2349-2377 §9.1: one base, typed subclasses, ValueError
-    compatibility for existing callers."""
-    from audio_feature_extraction_spark.core import errors
-    from audio_feature_extraction_spark.core.config import FrameSpec
-    from audio_feature_extraction_spark.multimodal import wav
-
-    with pytest.raises(errors.InvalidConfigError):
-        FrameSpec(frame_len=0)
-    with pytest.raises(errors.LoadError):
-        wav.decode_wav(b"nope")
-    for exc in (errors.LoadError, errors.FeatureExtractionError,
-                errors.InvalidConfigError):
-        assert issubclass(exc, errors.EngineError)
-        assert issubclass(exc, ValueError)
-
-
-def test_bmp_roundtrip_and_png_filters():
-    """BMP encode/decode round-trips exactly; PNG decodes every filter
-    type (rows hand-filtered per the spec inverse)."""
-    import struct
-    import zlib
-
-    from audio_feature_extraction_spark.multimodal import image as img
-
-    rng = np.random.RandomState(7)
-    rgb = rng.randint(0, 256, size=(5, 4, 3)).astype(np.uint8)
-    np.testing.assert_array_equal(img.decode_bmp(img.encode_bmp(rgb)), rgb)
-    np.testing.assert_array_equal(img.decode_png(img.encode_png(rgb)), rgb)
-
-    # craft a PNG using filters 0..4, one per row
-    h, w, nch = rgb.shape[0], rgb.shape[1], 3
-    stride = w * nch
-    flat = rgb.reshape(h, stride).astype(np.int32)
-    raw = b""
-    prev = np.zeros(stride, dtype=np.int32)
-    for y, ft in enumerate([0, 1, 2, 3, 4]):
-        cur = flat[y]
-        filt = np.empty(stride, dtype=np.int32)
-        for x in range(stride):
-            a = cur[x - nch] if x >= nch else 0
-            b = prev[x]
-            c = prev[x - nch] if x >= nch else 0
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = b
-            elif ft == 3:
-                pred = (a + b) >> 1
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            filt[x] = (cur[x] - pred) & 0xFF
-        raw += bytes([ft]) + filt.astype(np.uint8).tobytes()
-        prev = cur
-
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF))
-
-    payload = (b"\x89PNG\r\n\x1a\n"
-               + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-               + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-    np.testing.assert_array_equal(img.decode_png(payload), rgb)
-
-
-def test_image_decode_rejects_unknown():
-    from audio_feature_extraction_spark.core.errors import LoadError
-    from audio_feature_extraction_spark.multimodal import image as img
-
-    with pytest.raises(LoadError):
-        img.decode_image(b"\xff\xd8\xff\xe0 jpeg-ish")
-
-
-def test_extract_media_features_real_image(spark):
-    """Real PNG payloads decode end-to-end through the Arrow plumbing."""
-    from audio_feature_extraction_spark.multimodal import image as img
-    from audio_feature_extraction_spark.multimodal.binary import (
-        MEDIA_SCHEMA,
-        _signal_features,
-        extract_media_features,
-    )
-
-    rng = np.random.RandomState(3)
-    rgb = rng.randint(0, 256, size=(8, 8, 3)).astype(np.uint8)
-    payload = img.encode_png(rgb)
-    meta = {"width": 8, "height": 8, "sample_rate": None,
-            "n_frames": None, "codec": "png"}
-    media = spark.createDataFrame(
-        [("p0", "image", payload, meta)], schema=MEDIA_SCHEMA
-    )
-    (row,) = extract_media_features(media, dim=4, decode_stub=False).collect()
-    exp = _signal_features(img.decode_image(payload).ravel(), 4)
-    np.testing.assert_allclose(np.array(row.features), exp, rtol=0, atol=0)
-
-
-# ---------------------------------------------------------------------------
-# FLAC codec (multimodal/flac.py)
-# ---------------------------------------------------------------------------
-
-def test_flac_roundtrip_all_subframe_types():
-    """decode(encode(x)) is bit-exact for every subframe type the
-    decoder supports: verbatim, constant, fixed 1/2 (rice and escaped
-    partitions), order-1 LPC."""
-    import numpy as np
-
-    from audio_feature_extraction_spark.multimodal.flac import (
-        decode_flac,
-        encode_flac,
-    )
-
-    rng = np.random.default_rng(11)
-    # smooth-ish signal so rice-coded residuals stay small
-    x = np.round(
-        3000 * np.sin(np.arange(9000) / 25.0)
-        + rng.integers(-40, 40, size=9000)
-    ).astype(np.int64)
-    for mode, rp in [
-        ("verbatim", 6),
-        ("fixed1", 6),
-        ("fixed2", 6),
-        ("fixed2", None),   # escaped raw partition
-        ("lpc1", None),
-    ]:
-        payload = encode_flac(x, 22050, subframe=mode, rice_param=rp)
-        sig, sr = decode_flac(payload)
-        back = np.round(sig * 32768).astype(np.int64)
-        assert sr == 22050 and np.array_equal(back, x), mode
-
-    const = np.full(5000, -321, dtype=np.int64)
-    sig, sr = decode_flac(encode_flac(const, 8000, subframe="constant",
-                                      block_size=1000))
-    assert sr == 8000
-    assert np.array_equal(np.round(sig * 32768).astype(np.int64), const)
-
-
-def test_flac_mid_side_stereo_mixdown():
-    """Hand-built mid/side frame: the decoder reconstructs L/R exactly
-    and mixes down by channel mean (same convention as decode_wav)."""
-    import numpy as np
-
-    from audio_feature_extraction_spark.multimodal import flac as fl
-
-    left = np.array([100, -200, 300, -400, 500, -600, 700, -800], np.int64)
-    right = np.array([90, -180, 270, -360, 450, -540, 630, -720], np.int64)
-    mid, side = (left + right) >> 1, left - right
-    n = len(left)
-
-    head = fl._BitWriter()
-    head.write(int.from_bytes(b"fLaC", "big"), 32)
-    head.write(0x80, 8); head.write(34, 24)
-    head.write(n, 16); head.write(n, 16)
-    head.write(0, 24); head.write(0, 24)
-    head.write(16000, 20)
-    head.write(1, 3)          # channels - 1 = 1 (stereo)
-    head.write(15, 5)         # bps - 1
-    head.write(n, 36)
-    for _ in range(16):
-        head.write(0, 8)
-
-    w = fl._BitWriter()
-    w.write(0x3FFE, 14); w.write(0, 1); w.write(0, 1)
-    w.write(7, 4)             # 16-bit blocksize at end of header
-    w.write(0, 4)             # sample rate from STREAMINFO
-    w.write(10, 4)            # mid/side
-    w.write(4, 3); w.write(0, 1)
-    w.write(0, 8)             # frame number 0
-    w.write(n - 1, 16)
-    w.align()
-    w.write(fl._crc8(bytes(w.buf)), 8)
-    for vals, bits in ((mid, 16), (side, 17)):
-        w.write(0, 1)         # padding
-        w.write(1, 6)         # VERBATIM
-        w.write(0, 1)         # no wasted bits
-        for v in vals:
-            w.write(int(v), bits)
-    w.align()
-    w.write(fl._crc16(bytes(w.buf)), 16)
-    payload = head.bytes() + w.bytes()
-
-    sig, sr = fl.decode_flac(payload)
-    assert sr == 16000
-    expect = (left + right) / 2.0 / 32768.0
-    assert np.allclose(sig, expect, atol=0, rtol=0)
-
-
-def test_flac_corrupt_payloads_raise_loaderror():
-    import numpy as np
-    import pytest
-
-    from audio_feature_extraction_spark.core.errors import LoadError
-    from audio_feature_extraction_spark.multimodal.flac import (
-        decode_flac,
-        encode_flac,
-    )
-
-    with pytest.raises(LoadError):
-        decode_flac(b"NOTF" + b"\x00" * 60)
-    good = bytearray(encode_flac(np.arange(100, dtype=np.int64), 8000))
-    good[-3] ^= 0xFF          # flip a bit inside the last frame body
-    with pytest.raises(LoadError):
-        decode_flac(bytes(good))
-
-
-def test_extract_media_features_real_flac(spark):
-    """FLAC payloads flow through the real-decode seam end-to-end."""
-    import numpy as np
-
-    from audio_feature_extraction_spark.multimodal import binary as mm
-    from audio_feature_extraction_spark.multimodal.flac import encode_flac
-
-    x = np.round(8000 * np.sin(np.arange(4000) / 16.0)).astype(np.int64)
-    rows = [("fa", "audio", bytearray(encode_flac(x, 16000)),
-             (None, None, 16000, None, "flac"))]
-    df = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-    out = mm.extract_media_features(df, dim=8, decode_stub=False).collect()
-    assert len(out) == 1 and len(out[0].features) == 8
-    assert max(out[0].features) > 0.0
 
 
 # ---------------------------------------------------------------------------
@@ -894,56 +480,6 @@ def test_stream_pit_late_probe_not_served_future_state(spark, tmp_path):
     assert got[3] == (9.0, t0 + dt.timedelta(minutes=20))
 
 
-def test_flac_left_side_and_right_side_stereo():
-    """Hand-built left/side and right/side frames reconstruct L/R
-    exactly (side channel carries bps+1 bits)."""
-    import numpy as np
-
-    from audio_feature_extraction_spark.multimodal import flac as fl
-
-    left = np.array([1000, -2000, 3000, -4000], np.int64)
-    right = np.array([900, -1800, 2700, -3600], np.int64)
-    n = len(left)
-
-    def build(chan_code, ch0, ch0_bits, ch1, ch1_bits):
-        head = fl._BitWriter()
-        head.write(int.from_bytes(b"fLaC", "big"), 32)
-        head.write(0x80, 8); head.write(34, 24)
-        head.write(n, 16); head.write(n, 16)
-        head.write(0, 24); head.write(0, 24)
-        head.write(8000, 20)
-        head.write(1, 3)
-        head.write(15, 5)
-        head.write(n, 36)
-        for _ in range(16):
-            head.write(0, 8)
-        w = fl._BitWriter()
-        w.write(0x3FFE, 14); w.write(0, 1); w.write(0, 1)
-        w.write(7, 4); w.write(0, 4)
-        w.write(chan_code, 4)
-        w.write(4, 3); w.write(0, 1)
-        w.write(0, 8)
-        w.write(n - 1, 16)
-        w.align()
-        w.write(fl._crc8(bytes(w.buf)), 8)
-        for vals, bits in ((ch0, ch0_bits), (ch1, ch1_bits)):
-            w.write(0, 1); w.write(1, 6); w.write(0, 1)
-            for v in vals:
-                w.write(int(v), bits)
-        w.align()
-        w.write(fl._crc16(bytes(w.buf)), 16)
-        return head.bytes() + w.bytes()
-
-    expect = (left + right) / 2.0 / 32768.0
-    side = left - right
-    # chan 8 = left/side: channels are (left @16, side @17)
-    sig, _ = fl.decode_flac(build(8, left, 16, side, 17))
-    assert np.array_equal(sig, expect)
-    # chan 9 = right/side: channels are (side @17, right @16)
-    sig, _ = fl.decode_flac(build(9, side, 17, right, 16))
-    assert np.array_equal(sig, expect)
-
-
 def test_stream_pit_serve_multi_matches_batch(spark, tmp_path):
     """Multi-source online serving == batch asof_join_multi over an
     in-order two-trigger replay."""
@@ -1021,69 +557,6 @@ def test_stream_pit_serve_multi_matches_batch(spark, tmp_path):
     assert got == expect and len(got) == 4
     assert got[5][0] == 2.0 and got[5][2] == 5.0  # state crossed triggers
     assert got[3] == (None, None, None, None)
-
-
-def test_flac_wasted_bits_and_many_frames():
-    """Wasted-bits subframes shift back correctly, and the UTF-8 frame
-    number survives past 127 frames (2-byte encoding)."""
-    import numpy as np
-
-    from audio_feature_extraction_spark.multimodal import flac as fl
-
-    # --- wasted bits: hand-build one frame whose samples are all even;
-    # store them >>1 with wasted=1 and expect exact reconstruction
-    vals = np.array([2, -4, 6, -8, 10, -12], np.int64)
-    n = len(vals)
-    head = fl._BitWriter()
-    head.write(int.from_bytes(b"fLaC", "big"), 32)
-    head.write(0x80, 8); head.write(34, 24)
-    head.write(n, 16); head.write(n, 16)
-    head.write(0, 24); head.write(0, 24)
-    head.write(8000, 20); head.write(0, 3); head.write(15, 5)
-    head.write(n, 36)
-    for _ in range(16):
-        head.write(0, 8)
-    w = fl._BitWriter()
-    w.write(0x3FFE, 14); w.write(0, 1); w.write(0, 1)
-    w.write(7, 4); w.write(0, 4); w.write(0, 4); w.write(4, 3); w.write(0, 1)
-    w.write(0, 8); w.write(n - 1, 16)
-    w.align(); w.write(fl._crc8(bytes(w.buf)), 8)
-    w.write(0, 1)          # subframe padding
-    w.write(1, 6)          # VERBATIM
-    w.write(1, 1)          # wasted-bits flag
-    w.write(1, 1)          # unary 0 -> wasted = 1
-    for v in vals >> 1:    # stored at bps - wasted = 15 bits
-        w.write(int(v), 15)
-    w.align(); w.write(fl._crc16(bytes(w.buf)), 16)
-    sig, _ = fl.decode_flac(head.bytes() + w.bytes())
-    assert np.array_equal(np.round(sig * 32768).astype(np.int64), vals)
-
-    # --- >127 frames: frame numbers need the 2-byte UTF-8 form
-    x = np.arange(140 * 8, dtype=np.int64) % 1000
-    sig, _ = fl.decode_flac(fl.encode_flac(x, 8000, block_size=8))
-    assert np.array_equal(np.round(sig * 32768).astype(np.int64), x)
-
-
-def test_flac_multi_partition_residuals():
-    """partition_order > 0: 2^order rice partitions per block (the first
-    short by the predictor order) decode exactly — mixed rice and
-    escaped layouts."""
-    import numpy as np
-
-    from audio_feature_extraction_spark.multimodal.flac import (
-        decode_flac,
-        encode_flac,
-    )
-
-    x = np.round(2000 * np.sin(np.arange(2048) / 20.0)).astype(np.int64)
-    for rp, po in [(5, 2), (None, 3), (6, 4)]:
-        payload = encode_flac(
-            x, 16000, subframe="fixed2", rice_param=rp,
-            block_size=512, partition_order=po,
-        )
-        sig, sr = decode_flac(payload)
-        assert sr == 16000
-        assert np.array_equal(np.round(sig * 32768).astype(np.int64), x), (rp, po)
 
 
 def test_stream_exact_dedup_matches_batch(spark, tmp_path):
