@@ -1,9 +1,7 @@
 """Baseline JPEG (ITU-T T.81 / ISO 10918-1) codec — pure numpy/python.
 
-Third real image format after BMP/PNG (multimodal/image.py), and the
-stepping stone to real VIDEO frame decode: an MJPEG AVI is a RIFF
-container (multimodal/avi.py already walks it) whose frames are
-baseline JPEGs.
+No engine module calls it; ``cli probe`` reads the JPEG SOFn frame
+header itself (multimodal/probe.py).
 
 Spec-faithful structure: the marker stream (SOI / APP / DQT / SOF0 /
 DHT / SOS / RSTn / EOI), 8-bit quantization tables in zig-zag order,

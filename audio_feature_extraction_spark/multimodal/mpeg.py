@@ -5,7 +5,8 @@ Real frame-header walk over MPEG-1/2/2.5 Layer I/II/III streams
 formulae, and the de-facto Xing/Info VBR tag): skips ID3v2/ID3v1 tags,
 validates every frame header, resyncs across junk, and reports sample
 rate, channel mode, frame count, duration and average bitrate. Headers
-only: no sample is decoded.
+only: no sample is decoded here; the Layer I/II and Layer III sample
+codecs (multimodal/mpeg_decode.py, mpeg_layer3.py) build on this walk.
 
 ≙ the reference's format list WAV/FLAC/MP3/OGG (design.md:451-475;
 requirements.md:18).

@@ -1,17 +1,14 @@
-"""Pure-numpy RIFF/WAVE codec — the real decoder behind the multimodal
-seam (≙ AudioFileLoader, design.md:451-475; FR-1.1 requirements.md:18
-lists WAV among the supported formats).
+"""Pure-numpy RIFF/WAVE codec (≙ AudioFileLoader, design.md:451-475;
+FR-1.1 requirements.md:18 lists WAV among the supported formats).
 
-No external codec libraries: WAV/PCM is a trivial container, so the one
-format a user's raw bytes most commonly arrive in decodes for real even
-in this sandbox. Supported: PCM 8/16/24/32-bit int, IEEE float32/64,
-WAVE_FORMAT_EXTENSIBLE wrappers, any channel count (mixdown = channel
-mean, matching the reference's mono conversion). FLAC decodes for real
-too (multimodal/flac.py); lossy formats (MP3/OGG) still raise at the
-documented seam.
+No external codec libraries: WAV/PCM is a trivial container. Supported:
+PCM 8/16/24/32-bit int, IEEE float32/64, WAVE_FORMAT_EXTENSIBLE
+wrappers, any channel count (mixdown = channel mean, matching the
+reference's mono conversion). No engine module calls it; ``cli probe``
+reads WAV headers itself (multimodal/probe.py).
 
 ``encode_pcm16`` is the inverse (mono int16 writer) — used by the
-round-trip tests and as a minimal media sink.
+round-trip tests.
 """
 
 from __future__ import annotations

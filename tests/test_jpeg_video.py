@@ -1,9 +1,9 @@
-"""Baseline JPEG codec + MJPEG-in-AVI video decode.
+"""Baseline JPEG codec.
 
 Layers: DCT/Huffman/bitstream identities, marker round trips, full
-image round trips (4:4:4, 4:2:0, grayscale), probe integration, and
-real video frame decode through the AVI walk (incl. the motion-signal
-contract the executor kernel consumes).
+image round trips (4:4:4, 4:2:0, grayscale), restart intervals and the
+progressive seam. JPEG header probing is tested in
+test_multimodal_probe.py.
 """
 
 from __future__ import annotations
@@ -12,11 +12,7 @@ import numpy as np
 import pytest
 
 from audio_feature_extraction_spark.core.errors import LoadError
-from audio_feature_extraction_spark.multimodal import avi as A
 from audio_feature_extraction_spark.multimodal import jpeg as J
-from audio_feature_extraction_spark.multimodal import video as VID
-from audio_feature_extraction_spark.multimodal.image import decode_image
-from audio_feature_extraction_spark.multimodal.probe import probe_payload
 
 
 def _psnr(a: np.ndarray, b: np.ndarray) -> float:
@@ -123,78 +119,12 @@ def test_odd_dimensions_pad_and_crop():
     assert out.shape == (19, 13, 3)
 
 
-def test_probe_and_decode_image_dispatch():
-    rgb = _test_rgb()
-    blob = J.encode_jpeg(rgb, quality=2)
-    info = probe_payload(blob)
-    assert info["container"] == "jpeg" and info["codec"] == "jpeg_baseline"
-    assert (info["width"], info["height"]) == (56, 40)
-    lum = decode_image(blob)
-    assert lum.shape == (40, 56) and 0.0 <= lum.min() <= lum.max() <= 1.0
-
-
 def test_progressive_is_explicit_seam():
     blob = bytearray(J.encode_jpeg(_test_rgb(), quality=2))
     idx = blob.find(b"\xff\xc0")
     blob[idx + 1] = 0xC2  # relabel SOF0 -> SOF2 (progressive)
     with pytest.raises(LoadError, match="progressive"):
         J.decode_jpeg(bytes(blob))
-
-
-# ---------------------------------------------------------------------------
-# MJPEG video
-# ---------------------------------------------------------------------------
-
-
-def _mjpeg_fixture(n=6, h=32, w=48):
-    frames_rgb = []
-    for f in range(n):
-        yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-        img = ((xx + f * 7) * 5 + yy * 3) % 256
-        frames_rgb.append(
-            np.stack([img, img, img], axis=2).astype(np.uint8)
-        )
-    jpegs = [J.encode_jpeg(fr, quality=2) for fr in frames_rgb]
-    return A.build_mjpeg_avi(jpegs, w, h, fps=5), frames_rgb
-
-
-def test_mjpeg_avi_frames_decode_to_real_pixels():
-    blob, frames_rgb = _mjpeg_fixture()
-    info = A.parse_avi(blob)
-    assert info.video_codec == "mjpg" and info.n_frames == 6
-    frames = VID.decode_mjpeg_frames(blob)
-    assert len(frames) == 6 and frames[0].shape == (32, 48)
-    for got, want in zip(frames, frames_rgb):
-        ref = want[:, :, 0].astype(float) / 255.0
-        assert np.abs(got - ref).max() < 0.15  # quantizer-limited pixels
-
-
-def test_mjpeg_frame_sampling_and_motion_signal():
-    blob, _ = _mjpeg_fixture(n=8)
-    assert len(VID.decode_mjpeg_frames(blob, every_n=2)) == 4
-    assert len(VID.decode_mjpeg_frames(blob, max_frames=3)) == 3
-    sig = VID.video_motion_signal(blob)
-    assert sig.shape == (8,)
-    # constant-velocity gradient: steady nonzero inter-frame motion
-    assert np.all(sig[1:] > 0.05)
-    assert sig[1:].std() < 0.05
-
-
-def test_video_decode_real_kernel_path():
-    from audio_feature_extraction_spark.multimodal.binary import _decode_real
-
-    blob, _ = _mjpeg_fixture()
-    sig = _decode_real(blob, "video")
-    assert isinstance(sig, np.ndarray) and len(sig) == 6
-    # a non-MJPEG AVI stays an explicit seam
-    bad = bytearray(blob)
-    i = bad.find(b"MJPG")
-    bad[i : i + 4] = b"H264"
-    i = bad.find(b"MJPG")       # strf fourcc too
-    if i != -1:
-        bad[i : i + 4] = b"H264"
-    with pytest.raises(LoadError, match="ffmpeg-class"):
-        _decode_real(bytes(bad), "video")
 
 
 def test_restart_intervals_roundtrip():
@@ -210,25 +140,3 @@ def test_restart_intervals_roundtrip():
     )
     assert n_rst > 5
     assert np.array_equal(J.decode_jpeg(blob), base)
-
-
-def test_sample_video_frames_real_extracts_jpegs(spark):
-    """decode_stub=False yields the ACTUAL per-frame JPEG payloads from
-    the AVI movi walk; each sampled frame decodes to real pixels."""
-    from audio_feature_extraction_spark.multimodal.binary import (
-        MEDIA_SCHEMA,
-        sample_video_frames,
-    )
-
-    blob, frames_rgb = _mjpeg_fixture(n=6)
-    meta = {"width": 48, "height": 32, "sample_rate": None,
-            "n_frames": 6, "codec": "mjpg"}
-    media = spark.createDataFrame(
-        [("m1", "video", blob, meta)], schema=MEDIA_SCHEMA
-    )
-    rows = sample_video_frames(media, every_n=2, decode_stub=False).collect()
-    assert [r.frame_idx for r in rows] == [0, 2, 4]
-    for r in rows:
-        rgb = J.decode_jpeg(bytes(r.frame_payload))
-        ref = frames_rgb[r.frame_idx].astype(float)
-        assert _psnr(rgb, ref) > 25.0

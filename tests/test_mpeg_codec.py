@@ -2,7 +2,7 @@
 round-trip tests against deterministic fixtures encoded with the same
 tables/windows (the self-consistency contract mpeg_decode documents),
 filterbank quality gates, bitstream-path coverage (grouping, scfsi,
-stereo), and the probe->decode integration through _decode_real."""
+stereo)."""
 
 from __future__ import annotations
 
@@ -162,82 +162,3 @@ def test_layer3_dispatch_and_joint_stereo_seam():
     blob[:4] = h.to_bytes(4, "big")
     with pytest.raises(Mp3Error, match="joint"):
         M.decode_mpeg_samples(bytes(blob))
-
-
-def test_decode_real_seam_decodes_mpeg_audio():
-    """_decode_real (the production mapInPandas decode seam) decodes
-    MPEG Layer I/II payloads for real — including with a leading ID3v2
-    tag — and routes OggS payloads to the Vorbis codec (garbage Ogg is
-    a parse error, not an unimplemented seam)."""
-    from audio_feature_extraction_spark.multimodal.binary import _decode_real
-    from audio_feature_extraction_spark.multimodal.ogg import OggError
-    from audio_feature_extraction_spark.multimodal.vorbis import encode_vorbis
-
-    x = _sine(1152 * 2)
-    blob = M.encode_mpeg(x, sr=SR, layer=2, nbits=8)
-    out = _decode_real(blob, "audio")
-    assert isinstance(out, np.ndarray) and len(out) == 1152 * 2
-    assert _snr(x, out) > 40.0
-    # ID3v2-prefixed payload routes through the same decode
-    size = 64
-    id3 = b"ID3\x04\x00\x00" + bytes(
-        [(size >> 21) & 0x7F, (size >> 14) & 0x7F, (size >> 7) & 0x7F,
-         size & 0x7F]
-    ) + bytes(size)
-    out2 = _decode_real(id3 + blob, "audio")
-    assert np.allclose(out, out2)
-    # a real engine-profile Ogg Vorbis payload decodes for real
-    ogg = encode_vorbis(_sine(128 * 20), sr=SR)
-    vout = _decode_real(ogg, "audio")
-    assert isinstance(vout, np.ndarray) and len(vout) > 128 * 10
-    # truncated/garbage Ogg raises a parse error, not NotImplementedError
-    with pytest.raises(OggError):
-        _decode_real(b"OggS" + bytes(64), "audio")
-
-
-def test_extract_media_features_real_decode_mpeg(spark):
-    """Spark integration: the Arrow-batched feature extractor with
-    decode_stub=False runs the real MPEG decode inside the executor
-    kernel; a Layer III payload degrades to a per-row error under
-    on_error='skip' instead of killing the job."""
-    from audio_feature_extraction_spark.multimodal.binary import (
-        MEDIA_SCHEMA,
-        extract_media_features,
-    )
-
-    from audio_feature_extraction_spark.multimodal.mpeg_layer3 import (
-        encode_layer3,
-    )
-
-    x = _sine(1152 * 2)
-    good = M.encode_mpeg(x, sr=SR, layer=2, nbits=8)
-    good_l3 = encode_layer3(x, sr=SR)
-    bad = bytearray(good)  # Layer II payload relabeled as Layer III:
-    h = int.from_bytes(bad[:4], "big")  # garbage to the real L3 path
-    h = (h & ~(0x3 << 17)) | (0x1 << 17)
-    bad[:4] = h.to_bytes(4, "big")
-    meta = {"width": None, "height": None, "sample_rate": SR,
-            "n_frames": 2, "codec": "mp2"}
-    media = spark.createDataFrame(
-        [("m_good", "audio", bytes(good), meta),
-         ("m_good_l3", "audio", bytes(good_l3), meta),
-         ("m_bad", "audio", bytes(bad), meta)],
-        schema=MEDIA_SCHEMA,
-    )
-    out = {
-        r.media_id: r
-        for r in extract_media_features(
-            media, dim=8, decode_stub=False, on_error="skip"
-        ).collect()
-    }
-    assert out["m_good"].error is None
-    assert len(out["m_good"].features) == 8
-    assert max(out["m_good"].features) > 0.0
-    # Layer III decodes FOR REAL through the same executor kernel now
-    assert out["m_good_l3"].error is None
-    assert len(out["m_good_l3"].features) == 8
-    assert max(out["m_good_l3"].features) > 0.0
-    # the relabeled stream is garbage to the Layer III parser: a
-    # per-row error under skip, never a job failure
-    assert out["m_bad"].features is None
-    assert "Mp3Error" in out["m_bad"].error

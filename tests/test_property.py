@@ -705,3 +705,27 @@ def test_ln_ratio_python_twin_property(a, ratio):
     got = float(e) * _LN2 + (2.0 * z) * horner
     true = math.log(a / b)
     assert abs(got - true) <= max(abs(true), 1.0) * 5e-9
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    data=st.lists(
+        st.integers(min_value=0, max_value=255), min_size=64, max_size=400
+    ),
+    quality=st.sampled_from([1, 2, 5]),
+)
+def test_jpeg_grayscale_roundtrip_property(data, quality):
+    """Random grayscale content round-trips through the full T.81 chain
+    within the quantizer bound: every pixel's error is bounded by the
+    worst-case IDCT spread of the quantization error."""
+    import numpy as np
+
+    from audio_feature_extraction_spark.multimodal import jpeg as J
+
+    side = max(8, int(len(data) ** 0.5))
+    img = np.resize(np.array(data, dtype=np.uint8), (side, side))
+    out = J.decode_jpeg(J.encode_jpeg(img, quality=quality))[:, :, 0]
+    # quant error per coefficient <= q/2; IDCT rows have L2 norm 1, so
+    # pixel error <= sum over 64 coefficients of (q_uv/2) / 8 is loose;
+    # use the empirical-safe bound 8 * quality * 2
+    assert np.abs(out.astype(int) - img.astype(int)).max() <= 16 * quality

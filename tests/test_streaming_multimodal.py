@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from audio_feature_extraction_spark.core.config import FrameSpec
@@ -273,6 +274,58 @@ def test_latency_stats():
     assert rep["violations"] == 1
     assert rep["window_max_ms"] == 80  # window holds last 3 only
     assert abs(rep["window_avg_ms"] - 70.0) < 1e-9
+
+
+def _sine(n=480, sr=16000):
+    t = np.arange(n, dtype=np.float64) / sr
+    return 0.5 * np.sin(2 * np.pi * 440.0 * t)
+
+
+def test_wav_pcm16_roundtrip():
+    from audio_feature_extraction_spark.multimodal import wav
+
+    sig = _sine()
+    payload = wav.encode_pcm16(sig, 16000)
+    dec, sr = wav.decode_wav(payload)
+    assert sr == 16000 and len(dec) == len(sig)
+    # 16-bit quantization: exact to within half an LSB
+    assert np.abs(dec - sig).max() <= 0.5 / 32768.0 + 1e-12
+
+
+def test_wav_formats_and_mixdown():
+    from audio_feature_extraction_spark.multimodal import wav
+
+    # stereo float32: mixdown = channel mean
+    sr = 8000
+    left = np.array([0.5, -0.5, 0.25], dtype=np.float32)
+    right = np.array([0.0, 0.5, 0.75], dtype=np.float32)
+    inter = np.empty(6, dtype="<f4"); inter[0::2] = left; inter[1::2] = right
+    data = inter.tobytes()
+    fmt = (3).to_bytes(2, "little") + (2).to_bytes(2, "little") + \
+        sr.to_bytes(4, "little") + (sr * 8).to_bytes(4, "little") + \
+        (8).to_bytes(2, "little") + (32).to_bytes(2, "little")
+    body = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt + \
+        b"data" + len(data).to_bytes(4, "little") + data
+    payload = b"RIFF" + len(body).to_bytes(4, "little") + body
+    dec, got_sr = wav.decode_wav(payload)
+    assert got_sr == sr
+    np.testing.assert_allclose(dec, (left.astype(np.float64) + right) / 2.0)
+    # 8-bit unsigned PCM: 128 -> 0.0
+    fmt8 = (1).to_bytes(2, "little") + (1).to_bytes(2, "little") + \
+        sr.to_bytes(4, "little") + sr.to_bytes(4, "little") + \
+        (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
+    d8 = bytes([128, 255, 0])
+    body8 = b"WAVE" + b"fmt " + len(fmt8).to_bytes(4, "little") + fmt8 + \
+        b"data" + len(d8).to_bytes(4, "little") + d8
+    dec8, _ = wav.decode_wav(b"RIFF" + len(body8).to_bytes(4, "little") + body8)
+    np.testing.assert_allclose(dec8, [0.0, 127 / 128.0, -1.0])
+
+
+def test_wav_rejects_non_wav():
+    from audio_feature_extraction_spark.multimodal import wav
+
+    with pytest.raises(ValueError):
+        wav.decode_wav(b"\x00" * 64)
 
 
 @pytest.mark.slow
