@@ -22,6 +22,14 @@ local masters get it, because there the workers share the driver's
 filesystem: the session adds the package's parent directory to the
 executors' ``PYTHONPATH`` so the module imports from any working
 directory. Other masters keep Spark's stock daemon.
+
+Local masters also write streaming checkpoints through Spark's
+``FileSystemBasedCheckpointFileManager``. The default FileContext
+manager asks the local filesystem for each file's link status, and
+without the native Hadoop library every such call runs ``readlink`` as
+a child process (~4 ms): 88 of them per warm ``stream_chunks`` trigger.
+On ``file:`` paths both managers do the same check-then-rename for a
+no-overwrite commit, so the switch loses no guarantee there.
 """
 
 from __future__ import annotations
@@ -32,6 +40,11 @@ import re
 from pyspark.sql import SparkSession
 
 DAEMON_MODULE = "audio_feature_extraction_spark.core.pyworker"
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 _EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 # the directory the package is imported from (its parent)
 _PACKAGE_PARENT = os.path.dirname(
@@ -43,15 +56,18 @@ def _with_worker_conf(
     master: str, extra_conf: dict[str, str] | None
 ) -> dict[str, str]:
     """``extra_conf`` plus, for ``local`` masters, the Python daemon
-    module of :mod:`~audio_feature_extraction_spark.core.pyworker` and an
+    module of :mod:`~audio_feature_extraction_spark.core.pyworker`, an
     executor ``PYTHONPATH`` that lets workers import it from any CWD
     (the package's parent first, then any ``PYTHONPATH`` the caller
-    set). A daemon module the caller names wins. Other masters keep
-    Spark's stock daemon: their executors may see the package only
-    through ``--py-files``, which is not on the daemon's path."""
+    set) and the FileSystem-based streaming checkpoint manager. A daemon
+    module or checkpoint manager the caller names wins. Other masters
+    keep Spark's defaults: their executors may see the package only
+    through ``--py-files``, which is not on the daemon's path, and their
+    checkpoints live on a shared store, where no ``readlink`` runs."""
     conf = dict(extra_conf or {})
     if master == "local" or master.startswith("local["):
         conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
+        conf.setdefault(_CHECKPOINT_MANAGER_KEY, CHECKPOINT_FILE_MANAGER)
         conf[_EXECUTOR_PYTHONPATH] = os.pathsep.join(
             filter(None, [_PACKAGE_PARENT, conf.get(_EXECUTOR_PYTHONPATH)])
         )

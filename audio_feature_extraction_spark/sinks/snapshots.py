@@ -10,7 +10,8 @@ actually relies on, with nothing but parquet + JSON + one atomic rename:
   exact dir — is created with O_EXCL (the commit lock — a concurrent
   committer loses and retries the metadata commit on the next version),
   then the ``_current`` pointer is atomically replaced. Readers never
-  see a partial write.
+  see a partial write. The manifest is the commit record, so a data dir
+  carries no ``_SUCCESS`` marker.
 * ``read_snapshot(version=...)`` is time travel: a manifest lists the
   FULL set of live data directories for its version, so old versions
   stay readable after appends (and after logical overwrites, which keep
@@ -167,7 +168,11 @@ def write_snapshot(
     # manifest commits, and impossible for a concurrent writer to target
     stage_rel = f"data/s-{uuid.uuid4().hex[:12]}"
     staged_abs = os.path.join(table_dir, "data", stage_rel.split("/", 1)[1])
-    df.write.parquet(staged_abs)
+    # the manifest commits the write, so the data dir needs no _SUCCESS
+    # marker (it would cost the committer one more file and its chmods)
+    df.write.option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(staged_abs)
     schema = df.schema
     props = dict(properties or {})
     if properties_fn is not None:

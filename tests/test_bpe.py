@@ -12,6 +12,7 @@ with the trained ranks reproduces the training-time segmentation.
 
 from __future__ import annotations
 
+import os
 import random
 from collections import Counter
 
@@ -19,6 +20,8 @@ import duckdb
 import pytest
 
 from audio_feature_extraction_spark.operators import bpe
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _docs(spark, texts):
@@ -193,7 +196,7 @@ def test_cli_tokenize(tmp_path):
         [sys.executable, "-m", "audio_feature_extraction_spark.cli",
          "tokenize", "--input", "/root/testdata/sf0.001",
          "--output", str(tmp_path / "bpe"), "--merges", "40"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-500:]
     rep = json.loads(out.stdout.strip().splitlines()[-1])

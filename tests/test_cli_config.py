@@ -3,12 +3,15 @@
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
 import pytest
 
 from audio_feature_extraction_spark.core.pipeline_config import PipelineConfig
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_config_from_yaml(tmp_path):
@@ -38,7 +41,7 @@ def test_cli_extract_and_reconstruct(tmp_path):
         [sys.executable, "-m", "audio_feature_extraction_spark.cli", "extract",
          "--input", "/root/testdata/sf0.001", "--output", str(tmp_path / "ds"),
          "--split"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-500:]
     rep = json.loads(out.stdout.strip().splitlines()[-1])
@@ -47,7 +50,7 @@ def test_cli_extract_and_reconstruct(tmp_path):
     out2 = subprocess.run(
         [sys.executable, "-m", "audio_feature_extraction_spark.cli", "reconstruct",
          "--input", "/root/testdata/sf0.001", "--output", str(tmp_path / "rec")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert out2.returncode == 0, out2.stderr[-500:]
     rep2 = json.loads(out2.stdout.strip().splitlines()[-1])
@@ -59,7 +62,7 @@ def test_cli_pit(tmp_path):
     out = subprocess.run(
         [sys.executable, "-m", "audio_feature_extraction_spark.cli", "pit",
          "--input", "/root/testdata/sf0.001", "--output", str(tmp_path / "pit")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-500:]
     rep = json.loads(out.stdout.strip().splitlines()[-1])
@@ -77,14 +80,14 @@ def test_cli_extract_snapshot_resume(tmp_path):
         "--snapshot", "--units", "8",
     ]
     out1 = subprocess.run(
-        args, capture_output=True, text=True, cwd="/root/repo", timeout=600
+        args, capture_output=True, text=True, cwd=ROOT, timeout=600
     )
     assert out1.returncode == 0, out1.stderr[-500:]
     rep1 = json.loads(out1.stdout.strip().splitlines()[-1])
     assert rep1["rows"] > 0 and rep1["resume"] == "snapshot"
 
     out2 = subprocess.run(
-        args, capture_output=True, text=True, cwd="/root/repo", timeout=600
+        args, capture_output=True, text=True, cwd=ROOT, timeout=600
     )
     assert out2.returncode == 0, out2.stderr[-500:]
     rep2 = json.loads(out2.stdout.strip().splitlines()[-1])
@@ -106,7 +109,7 @@ def test_cli_probe(tmp_path, spark):
     out = subprocess.run(
         [sys.executable, "-m", "audio_feature_extraction_spark.cli", "probe",
          "--input", str(src), "--output", str(tmp_path / "meta")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-500:]
     rep = json.loads(out.stdout.strip().splitlines()[-1])

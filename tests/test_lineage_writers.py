@@ -156,6 +156,25 @@ def test_snapshot_append_and_time_travel(spark, tmp_path):
     assert hist[1]["parent"] == 0 and hist[1]["op"] == "append"
 
 
+def test_snapshot_data_dirs_carry_no_success_marker(spark, tmp_path):
+    """The manifest commits a snapshot's data dir, so the write leaves no
+    ``_SUCCESS`` marker next to its parquet files."""
+    import os
+
+    from audio_feature_extraction_spark.sinks import snapshots as sn
+
+    t = str(tmp_path / "tbl")
+    sn.write_snapshot(spark.range(0, 5), t)
+    sn.write_snapshot(spark.range(5, 8), t, mode="append")
+    dirs = sn.snapshot_history(t)[-1]["data_dirs"]
+    assert len(dirs) == 2
+    for d in dirs:
+        files = os.listdir(os.path.join(t, d))
+        assert any(f.endswith(".parquet") for f in files)
+        assert "_SUCCESS" not in files
+    assert sorted(r.id for r in sn.read_snapshot(spark, t).collect()) == list(range(8))
+
+
 def test_snapshot_overwrite_is_metadata_only(spark, tmp_path):
     from audio_feature_extraction_spark.sinks import snapshots as sn
 

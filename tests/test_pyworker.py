@@ -82,15 +82,23 @@ def test_session_workers_run_the_memoized_method(spark):
 
 def test_worker_conf_is_local_only():
     key = "spark.executorEnv.PYTHONPATH"
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
     for master in ("spark://host:7077", "yarn", "k8s://https://host:6443"):
         assert session._with_worker_conf(master, None) == {}
         assert session._with_worker_conf(master, {key: "/x"}) == {key: "/x"}
     conf = session._with_worker_conf("local[2]", {key: "/x"})
     assert conf["spark.python.daemon.module"] == session.DAEMON_MODULE
     assert conf[key].split(os.pathsep) == [session._PACKAGE_PARENT, "/x"]
+    assert conf[manager] == session.CHECKPOINT_FILE_MANAGER
+    assert session._with_worker_conf("local", None)[manager] == (
+        session.CHECKPOINT_FILE_MANAGER
+    )
     assert session._with_worker_conf(
         "local", {"spark.python.daemon.module": "pyspark.daemon"}
     )["spark.python.daemon.module"] == "pyspark.daemon"
+    assert session._with_worker_conf(
+        "local[4]", {manager: "com.example.Manager"}
+    )[manager] == "com.example.Manager"
 
 
 def test_master_cores_reads_local_n_and_falls_back_otherwise():

@@ -16,6 +16,7 @@ Two layers under test:
 from __future__ import annotations
 
 import math
+import os
 import random
 
 import duckdb
@@ -25,6 +26,8 @@ from pyspark.sql import functions as F
 from audio_feature_extraction_spark.core.materialize import materialize
 from audio_feature_extraction_spark.functions.reproducible import ln_ratio_sql
 from audio_feature_extraction_spark.operators import retrieval
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SF = "/root/testdata/sf0.001"
 
@@ -316,7 +319,7 @@ def test_cli_search(tmp_path):
         [sys.executable, "-m", "audio_feature_extraction_spark.cli",
          "search", "--input", "/root/testdata/sf0.001",
          "--output", str(tmp_path / "hits"), "--variant", "tfidf", "--k", "3"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-500:]
     rep = json.loads(out.stdout.strip().splitlines()[-1])

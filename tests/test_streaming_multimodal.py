@@ -154,6 +154,59 @@ def test_stream_extract_with_restart(spark, tmp_path):
     assert len(got) > 2  # frames from both sides of the restart
 
 
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """The session's streaming checkpoint manager is Spark's
+    FileSystem-based one, and it still refuses a no-overwrite commit
+    onto an existing file: the guarantee the offsets and commits logs
+    rest on."""
+    from py4j.protocol import Py4JJavaError
+
+    from audio_feature_extraction_spark.core.session import (
+        CHECKPOINT_FILE_MANAGER,
+    )
+
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri()), conf
+    )
+    assert manager.getClass().getName() == CHECKPOINT_FILE_MANAGER
+
+    target = jvm.org.apache.hadoop.fs.Path((tmp_path / "0").as_uri())
+    first = manager.createAtomic(target, False)
+    first.write(1)
+    first.close()
+    second = manager.createAtomic(target, False)
+    second.write(2)
+    with pytest.raises(Py4JJavaError, match="FAILED_RENAME_PATH"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == bytes([1])
+
+
+def test_stream_sink_batch_dirs_carry_no_success_marker(spark, tmp_path):
+    """The query's commit log, not a ``_SUCCESS`` file, commits each
+    ``batch_id=N`` directory of the stream sink."""
+    import os
+
+    src = tmp_path / "in"
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
+    spark.createDataFrame(
+        [("d", 0, list(range(10)))], stream.CHUNK_SCHEMA
+    ).coalesce(1).write.parquet(str(src / "b1"))
+    chunks = spark.readStream.schema(stream.CHUNK_SCHEMA).parquet(str(src / "*"))
+    q = stream.stream_feature_extract(chunks, out, ckpt, FrameSpec(4, 2))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert os.listdir(out) == ["batch_id=0"]
+    files = os.listdir(os.path.join(out, "batch_id=0"))
+    assert any(f.endswith(".parquet") for f in files)
+    assert "_SUCCESS" not in files
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+
 def test_stream_trigger_compiles_nothing_when_warm(spark, tmp_path):
     """A warm trigger of the stateful stream generates no new classes:
     the state encoder, the frame kernel's plan and the sink all hit the
