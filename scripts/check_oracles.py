@@ -10,12 +10,13 @@ order-insensitive values. Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from audio_feature_extraction_spark.core.session import get_spark  # noqa: E402

@@ -14,9 +14,10 @@ better. Run:
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from audio_feature_extraction_spark.core.session import get_spark  # noqa: E402
 from audio_feature_extraction_spark.operators import similarity  # noqa: E402

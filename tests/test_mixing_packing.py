@@ -519,6 +519,80 @@ def test_prepare_corpus_substring_stage(spark):
     assert "doc_2" not in out
 
 
+def test_prepare_corpus_exact_components_chain(spark):
+    """exact_components: on a chain a~hub~b whose ends are not near-dups
+    of each other, the greedy pair-drop removes only the hub (each
+    confirmed pair drops its larger id) and keeps both ends, while
+    connected components keep only the chain's min id."""
+    from pyspark.sql import functions as F
+
+    from audio_feature_extraction_spark.operators import dedup
+    from audio_feature_extraction_spark.operators import split as split_op
+    from audio_feature_extraction_spark.plans import corpus
+    from audio_feature_extraction_spark.sources.tokens import tokenize_expr
+
+    def words(seed, n):
+        return " ".join(
+            chr(97 + (seed * 5 + i * 3) % 26)
+            + "x" * ((seed * 3 + i) % 7)
+            + chr(97 + (seed * 11 + i * 7) % 26)
+            for i in range(n)
+        )
+
+    # three held-out ids: decontamination drops only train docs, so the
+    # kept set is the near-dedup survivors. Pairs order ids as strings.
+    probe = spark.createDataFrame(
+        [(f"doc_{i}",) for i in range(1, 60)], "doc_id string"
+    )
+    held = sorted(
+        r.doc_id for r in split_op.assign_split(probe, "doc_id").collect()
+        if r.split != "train"
+    )
+    a, b, hub = held[:3]
+    # a replaces the hub's first 5 words and b its last 5, so each end
+    # shares 34 of 44 bigrams with the hub and 29 of 49 with the other
+    hub_words = words(3, 40).split()
+    texts = {
+        a: " ".join(words(41, 5).split() + hub_words[5:]),
+        b: " ".join(hub_words[:-5] + words(42, 5).split()),
+        hub: " ".join(hub_words),
+    }
+    docs = spark.createDataFrame(
+        [(int(d[4:]), t, "en", "web", len(t)) for d, t in texts.items()],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    toks = tokenize_expr()
+    tokseq = docs.select(
+        F.concat(F.lit("doc_"), F.col("doc_id").cast("string")).alias("doc_id"),
+        toks.alias("tokens"),
+        F.size(toks).cast("int").alias("n_tok"),
+        "source",
+    )
+    confirmed = {
+        (r.doc_a, r.doc_b)
+        for r in dedup.jaccard_on_pairs(
+            dedup.lsh_candidate_pairs(tokseq), tokseq
+        ).where(F.col("jaccard") >= corpus.CorpusConfig.jaccard_threshold)
+        .collect()
+    }
+    assert confirmed == {(a, hub), (b, hub)}
+
+    def kept(exact_components):
+        cfg = corpus.CorpusConfig(
+            block_len=64, exact_components=exact_components
+        )
+        mixed, _blocks, report = corpus.prepare_corpus(
+            spark, "", cfg=cfg, docs=docs, tokseq=tokseq
+        )
+        out = {r.doc_id for r in mixed.select("doc_id").collect()}
+        mixed.unpersist()
+        assert report["after_near_dedup"] == len(out)
+        return out
+
+    assert kept(False) == {a, b}
+    assert kept(True) == {a}
+
+
 def test_prepare_corpus_semdedup_and_nb_stages(spark):
     """Stage 2c (SemDeDup) drops the planted embedding near-dup; stage
     3b (NB quality) drops exactly the docs scoring below the bound."""
