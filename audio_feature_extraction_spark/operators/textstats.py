@@ -734,10 +734,10 @@ def nb_quality(tokseq: DataFrame) -> DataFrame:
 
     r06 shape: the trained model (64 weights + prior, bounded by
     construction) is collected to driver literals and the scoring pass
-    compiles into one integer fold per doc (the :func:`nb_expr_score`
-    serving shape) — bit-identical to :func:`nb_score`'s explode →
-    broadcast-join → groupBy plan (integer sums are order-free; the
-    ``coalesce`` reproduces the join's null-bucket drop; the non-null
+    is :func:`nb_expr_score`'s integer fold per doc — bit-identical to
+    :func:`nb_score`'s explode → broadcast-join → groupBy plan (integer
+    sums are order-free; the ``coalesce`` reproduces the join's
+    null-bucket drop; the non-null
     filter reproduces the join dropping docs with no bucketed token,
     empty ones included), but the scoring side ships zero rows through
     any exchange. Only the tiny fit still shuffles. Use :func:`nb_train` + :func:`nb_score` to
@@ -749,24 +749,8 @@ def nb_quality(tokseq: DataFrame) -> DataFrame:
     values (DuckDB's ``list_distinct``).
     """
     weights, prior = _nb_fit_literals_kernel(tokseq)
-    v, a, b = NB_BUCKETS, NB_MULT, NB_OFF
-    arr = f"array({', '.join(f'{int(w)}L' for w in weights)})"
-    prior_sql = (
-        "CAST(NULL AS BIGINT)" if prior is None else f"{int(prior)}L"
-    )
-    score = (
-        f"{prior_sql} + aggregate(tokens, cast(0 as bigint), "
-        f"(acc, t) -> acc + coalesce(element_at({arr}, "
-        f"((t * {a} + {b}) % {v} + {v}) % {v} + 1), cast(0 as bigint)))"
-    )
-    return tokseq.where(F.expr("exists(tokens, t -> t is not null)")).select(
-        "doc_id",
-        F.expr(_NB_LABEL[True]).alias("weak_label"),
-        F.expr(score).cast("long").alias("nb_score_micro"),
-        F.expr(f"case when ({score}) > 0 then 1 else 0 end").alias(
-            "predicted"
-        ),
-    )
+    nonnull = tokseq.where(F.expr("exists(tokens, t -> t is not null)"))
+    return nb_expr_score(nonnull, weights, prior)
 
 
 def nb_quality_oracle_sql(
@@ -991,7 +975,7 @@ def nb_model_literals(
 
 
 def nb_expr_score(
-    tokseq: DataFrame, weights: list[int], prior: int
+    tokseq: DataFrame, weights: list[int], prior: int | None
 ) -> DataFrame:
     """Score with the model COMPILED INTO ONE SCALAR EXPRESSION: the 64
     micro-nat weights become an array literal and the per-doc score is
@@ -1001,16 +985,18 @@ def nb_expr_score(
     trained filter deploys online: the model rides in the plan itself.
 
     Semantics match :func:`nb_score` row-for-row (tested), except docs
-    with EMPTY token arrays: the explode path drops them, the fold
+    with no non-null token: the explode path drops them, the fold
     scores them at the bare prior (a stream must emit something per
-    input row).
+    input row). A NULL element adds nothing, and a ``None`` prior (an
+    empty train split) scores NULL, as in the SQL path.
     """
     v, a, b = NB_BUCKETS, NB_MULT, NB_OFF
     arr = f"array({', '.join(f'{int(w)}L' for w in weights)})"
+    prior_sql = "CAST(NULL AS BIGINT)" if prior is None else f"{int(prior)}L"
     score = (
-        f"{int(prior)}L + aggregate(tokens, cast(0 as bigint), "
-        f"(acc, t) -> acc + element_at({arr}, "
-        f"((t * {a} + {b}) % {v} + {v}) % {v} + 1))"
+        f"{prior_sql} + aggregate(tokens, cast(0 as bigint), "
+        f"(acc, t) -> acc + coalesce(element_at({arr}, "
+        f"((t * {a} + {b}) % {v} + {v}) % {v} + 1), cast(0 as bigint)))"
     )
     return tokseq.select(
         "doc_id",

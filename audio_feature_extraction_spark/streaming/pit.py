@@ -1,15 +1,17 @@
 """Streaming point-in-time feature serving — the online twin of
-``operators/asof.asof_join``.
+``operators/asof.asof_join`` / ``asof_join_multi``: one server for
+one or more state sources.
 
 The batch as-of join answers "what was the latest state at each probe's
 timestamp" over history; the ONLINE feature store answers the same
 question as events arrive. One unioned stream (state rows + probe rows)
 grouped by entity runs through ``applyInPandasWithState``:
 
-* state = the latest (value, ts, seq) seen for the entity — exactly the
-  carry the batch window computes, held in the state store instead;
-* each probe row is served from the carried state and emitted
-  immediately (append mode);
+* state = per source, the latest (value, ts, seq) seen for the entity —
+  exactly the carry the batch window computes, held in the state store;
+* each probe row is served from every source's carried state and
+  emitted immediately (append mode); a one-source caller tags with
+  ``{"value": filter}`` and reads ``asof_value`` / ``asof_value_ts``;
 * null-valued states are TRANSPARENT (do not advance the carry), the
   TTL nulls out stale serves — both matching ``asof_join``'s contract;
 * within a micro-batch rows apply in (ts, tag, seq) order (state before
@@ -27,15 +29,15 @@ prev-slot state if that one is genuinely earlier, else null. The
 invariants that hold under ARBITRARY arrival disorder
 (property-tested with shuffled chunk->trigger permutations):
 
-* zero leakage — a served ``asof_ts`` is never later than the probe's
-  (strictly earlier in strict mode);
+* zero leakage — a served ``asof_<source>_ts`` is never later than the
+  probe's (strictly earlier in strict mode);
 * serve integrity — a non-null serve is always a real (value, ts) state
   of that entity, within the TTL when one is set;
 * in-order replay reproduces the batch ``asof_join`` row-for-row
   (inclusive, strict, and TTL modes).
 
-Scale shape: state is TWO small rows per entity (last + prev carry:
-two values + four longs) in the state store; the shuffle is the same
+Scale shape: state is ONE small row per entity (a last + prev carry
+per source) in the state store; the shuffle is the same
 entity-hash exchange the batch join does once per batch.
 """
 
@@ -48,146 +50,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-PIT_STATE_SCHEMA = (
-    "v double, ts long, seq long, pv double, pts long, pseq long"
-)
 _NO_TS = -(2**63)  # "no state" sentinel outside any real unix_micros
-
-PIT_OUT_SCHEMA = (
-    "user_id long, event_id long, ts timestamp, asof_value double, "
-    "asof_ts timestamp"
-)
 
 
 def tag_pit_stream(
-    events: DataFrame,
-    probe_filter: str,
-    state_filter: str,
-    entity: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str = "event_id",
-) -> DataFrame:
-    """Project an event stream to the unioned (entity, ts, tag, seq, v)
-    shape the serving operator consumes. tag 0 = state, 1 = probe."""
-    return events.select(
-        F.col(entity).cast("long").alias("user_id"),
-        F.col(ts_col).cast("timestamp").alias("ts"),
-        F.when(F.expr(probe_filter), F.lit(1))
-        .when(F.expr(state_filter), F.lit(0))
-        .alias("tag"),
-        F.col(seq_col).cast("long").alias("event_id"),
-        F.col(value_col).cast("double").alias("v"),
-    ).where(F.col("tag").isNotNull())
-
-
-def stream_pit_serve(
-    tagged: DataFrame,
-    max_staleness_seconds: float | None = None,
-    strict: bool = False,
-) -> DataFrame:
-    """(entity, ts, tag, seq, v) stream -> served probe stream.
-
-    Output: one row per probe with the latest non-null state value at
-    (``strict``: strictly before) serve time — nulls when no eligible
-    prior state, or older than the TTL. The carry is two-deep, exactly
-    :func:`operators.asof.asof_join_range`'s boundary carry held in the
-    state store: ``last`` = max-(ts, seq) accepted state, ``prev`` =
-    best known state with ts strictly earlier than ``last``'s. ``prev``
-    is what strict mode serves at an equal-ts boundary, and what a
-    guarded late probe falls back to instead of null. The equivalence
-    tests replay in-order history through a real two-trigger streaming
-    query and match ``asof_join`` row-for-row in all three modes; the
-    disorder property test replays shuffled chunk permutations and
-    asserts zero leakage + serve integrity.
-    """
-    ttl_us = (
-        int(max_staleness_seconds * 1_000_000)
-        if max_staleness_seconds is not None
-        else None
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            sv, sts, sseq, pv, pts, pseq = state.get
-        else:
-            sv, sts, sseq, pv, pts, pseq = (None,) * 6
-        out = []
-        # applyInPandasWithState may split the group across Arrow
-        # chunks; concat before sorting so in-batch (ts, tag, seq)
-        # ordering repair spans the whole micro-batch, not each chunk
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        whole = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else (chunks[0] if chunks else None)
-        )
-        if whole is not None:
-            whole = whole.sort_values(["ts", "tag", "event_id"])
-            for row in whole.itertuples(index=False):
-                ts_us = row.ts.value // 1000  # pandas Timestamp -> micros
-                if row.tag == 0:
-                    if row.v is None or pd.isna(row.v):
-                        continue  # transparent state
-                    seq = int(row.event_id)
-                    if sts is None or (ts_us, seq) >= (sts, sseq):
-                        if sts is not None and ts_us > sts:
-                            pv, pts, pseq = sv, sts, sseq
-                        sv, sts, sseq = float(row.v), ts_us, seq
-                    elif ts_us < sts and (
-                        pts is None or (ts_us, seq) > (pts, pseq)
-                    ):
-                        # late state: cannot re-serve the past, but may
-                        # refine the strictly-earlier prev slot
-                        pv, pts, pseq = float(row.v), ts_us, seq
-                else:
-                    # newest eligible carry: last, else prev, else null.
-                    # Eligible = not in the probe's future (the
-                    # no-leakage guard; strict also excludes equal-ts)
-                    def _ok(t):
-                        return t is not None and (
-                            t < ts_us if strict else t <= ts_us
-                        )
-
-                    if _ok(sts):
-                        v, t = sv, sts
-                    elif _ok(pts):
-                        v, t = pv, pts
-                    else:
-                        v, t = None, None
-                    if v is not None and ttl_us is not None and (
-                        ts_us - t > ttl_us
-                    ):
-                        v, t = None, None
-                    out.append(
-                        (
-                            key[0],
-                            int(row.event_id),
-                            row.ts,
-                            v,
-                            pd.Timestamp(t * 1000, unit="ns") if t is not None else pd.NaT,
-                        )
-                    )
-        if sts is not None:
-            state.update((sv, sts, sseq, pv, pts, pseq))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "event_id", "ts", "asof_value", "asof_ts"],
-            )
-
-    return tagged.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=PIT_OUT_SCHEMA,
-        stateStructType=PIT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def tag_pit_stream_multi(
     events: DataFrame,
     probe_filter: str,
     source_filters: dict[str, str],
@@ -196,8 +62,9 @@ def tag_pit_stream_multi(
     value_col: str = "value",
     seq_col: str = "event_id",
 ) -> DataFrame:
-    """Multi-source tagging: probes get tag 1; each source's states get
-    tag 0 with their source index in ``src`` (dict order)."""
+    """Tag an event stream for :func:`stream_pit_serve`: probes get tag
+    1; each source's states get tag 0 with their source index in ``src``
+    (dict order)."""
     src = F.lit(None).cast("int")
     for i, (name, flt) in enumerate(source_filters.items()):
         src = F.when(F.expr(flt), F.lit(i)).otherwise(src)
@@ -213,7 +80,7 @@ def tag_pit_stream_multi(
     ).where(F.col("tag").isNotNull())
 
 
-def stream_pit_serve_multi(
+def stream_pit_serve(
     tagged: DataFrame,
     sources: list[str],
     max_staleness_seconds: float | None = None,
@@ -222,11 +89,12 @@ def stream_pit_serve_multi(
     """Online twin of ``asof_join_multi``: each probe is served the
     latest non-null state from EVERY source, from one state row per
     entity holding parallel per-source (last, prev) carries — still the
-    minimum state the problem allows. Same contract as
-    ``stream_pit_serve`` per source: null transparency, TTL, strict
-    equal-ts exclusion via the prev slot, late states refine prev but
-    never re-serve the past, late probes fall back to prev or null
-    (zero leakage)."""
+    minimum state the problem allows. Per source: null transparency,
+    TTL, strict equal-ts exclusion via the prev slot, late states refine
+    prev but never re-serve the past, late probes fall back to prev or
+    null (zero leakage). The carry is ``asof_join_range``'s boundary
+    carry: ``last`` = max-(ts, seq) accepted state, ``prev`` = best
+    known state with ts strictly earlier than ``last``'s."""
     n_src = len(sources)
     ttl_us = (
         int(max_staleness_seconds * 1_000_000)

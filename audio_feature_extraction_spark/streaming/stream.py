@@ -251,26 +251,3 @@ def stream_feature_extract(
     if listener is not None:
         return query, listener
     return query
-
-
-def session_windows_stream(
-    events: DataFrame, gap_seconds: float = 1800.0, watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming gap-sessionization via the native session_window
-    (the streaming twin of operators/sessionize; T7/T9: watermark defines
-    the late-data drop policy)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.col("user_id"), F.session_window("ts", f"{int(gap_seconds)} seconds"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            (F.col("value_cents") / 100.0).alias("value_sum"),
-        )
-    )

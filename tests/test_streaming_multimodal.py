@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from audio_feature_extraction_spark.core.config import FrameSpec
@@ -329,58 +328,6 @@ def test_latency_stats():
     assert abs(rep["window_avg_ms"] - 70.0) < 1e-9
 
 
-def _sine(n=480, sr=16000):
-    t = np.arange(n, dtype=np.float64) / sr
-    return 0.5 * np.sin(2 * np.pi * 440.0 * t)
-
-
-def test_wav_pcm16_roundtrip():
-    from audio_feature_extraction_spark.multimodal import wav
-
-    sig = _sine()
-    payload = wav.encode_pcm16(sig, 16000)
-    dec, sr = wav.decode_wav(payload)
-    assert sr == 16000 and len(dec) == len(sig)
-    # 16-bit quantization: exact to within half an LSB
-    assert np.abs(dec - sig).max() <= 0.5 / 32768.0 + 1e-12
-
-
-def test_wav_formats_and_mixdown():
-    from audio_feature_extraction_spark.multimodal import wav
-
-    # stereo float32: mixdown = channel mean
-    sr = 8000
-    left = np.array([0.5, -0.5, 0.25], dtype=np.float32)
-    right = np.array([0.0, 0.5, 0.75], dtype=np.float32)
-    inter = np.empty(6, dtype="<f4"); inter[0::2] = left; inter[1::2] = right
-    data = inter.tobytes()
-    fmt = (3).to_bytes(2, "little") + (2).to_bytes(2, "little") + \
-        sr.to_bytes(4, "little") + (sr * 8).to_bytes(4, "little") + \
-        (8).to_bytes(2, "little") + (32).to_bytes(2, "little")
-    body = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt + \
-        b"data" + len(data).to_bytes(4, "little") + data
-    payload = b"RIFF" + len(body).to_bytes(4, "little") + body
-    dec, got_sr = wav.decode_wav(payload)
-    assert got_sr == sr
-    np.testing.assert_allclose(dec, (left.astype(np.float64) + right) / 2.0)
-    # 8-bit unsigned PCM: 128 -> 0.0
-    fmt8 = (1).to_bytes(2, "little") + (1).to_bytes(2, "little") + \
-        sr.to_bytes(4, "little") + sr.to_bytes(4, "little") + \
-        (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
-    d8 = bytes([128, 255, 0])
-    body8 = b"WAVE" + b"fmt " + len(fmt8).to_bytes(4, "little") + fmt8 + \
-        b"data" + len(d8).to_bytes(4, "little") + d8
-    dec8, _ = wav.decode_wav(b"RIFF" + len(body8).to_bytes(4, "little") + body8)
-    np.testing.assert_allclose(dec8, [0.0, 127 / 128.0, -1.0])
-
-
-def test_wav_rejects_non_wav():
-    from audio_feature_extraction_spark.multimodal import wav
-
-    with pytest.raises(ValueError):
-        wav.decode_wav(b"\x00" * 64)
-
-
 @pytest.mark.slow
 def test_state_ttl_flushes_idle_doc(spark, tmp_path):
     """T5 state-reset lifecycle: a doc idle past flush_timeout_seconds has
@@ -482,9 +429,11 @@ def test_stream_pit_serve_matches_batch_asof(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     tagged = pit.tag_pit_stream(
-        events, "event_type = 'view'", "event_type = 'click'"
+        events, "event_type = 'view'", {"value": "event_type = 'click'"}
     )
-    served = pit.stream_pit_serve(tagged, max_staleness_seconds=3600.0)
+    served = pit.stream_pit_serve(
+        tagged, ["value"], max_staleness_seconds=3600.0
+    )
     q = (
         served.writeStream.format("memory")
         .queryName("pit_out")
@@ -499,7 +448,7 @@ def test_stream_pit_serve_matches_batch_asof(spark, tmp_path):
         )
         q.processAllAvailable()
         got = {
-            r.event_id: (r.asof_value, r.asof_ts)
+            r.event_id: (r.asof_value, r.asof_value_ts)
             for r in spark.sql("select * from pit_out").collect()
         }
     finally:
@@ -557,9 +506,11 @@ def test_stream_pit_late_probe_not_served_future_state(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     tagged = pit.tag_pit_stream(
-        events, "event_type = 'view'", "event_type = 'click'"
+        events, "event_type = 'view'", {"value": "event_type = 'click'"}
     )
-    served = pit.stream_pit_serve(tagged, max_staleness_seconds=3600.0)
+    served = pit.stream_pit_serve(
+        tagged, ["value"], max_staleness_seconds=3600.0
+    )
     q = (
         served.writeStream.format("memory")
         .queryName("pit_late_probe")
@@ -574,7 +525,7 @@ def test_stream_pit_late_probe_not_served_future_state(spark, tmp_path):
         )
         q.processAllAvailable()
         got = {
-            r.event_id: (r.asof_value, r.asof_ts)
+            r.event_id: (r.asof_value, r.asof_value_ts)
             for r in spark.sql("select * from pit_late_probe").collect()
         }
     finally:
@@ -621,12 +572,12 @@ def test_stream_pit_serve_multi_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    tagged = pit.tag_pit_stream_multi(
+    tagged = pit.tag_pit_stream(
         events,
         "event_type = 'view'",
         {"click": "event_type = 'click'", "purchase": "event_type = 'purchase'"},
     )
-    served = pit.stream_pit_serve_multi(tagged, ["click", "purchase"])
+    served = pit.stream_pit_serve(tagged, ["click", "purchase"])
     q = (
         served.writeStream.format("memory")
         .queryName("pit_multi_out")
@@ -861,9 +812,9 @@ def test_stream_pit_serve_strict_matches_batch(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     tagged = pit.tag_pit_stream(
-        events, "event_type = 'view'", "event_type = 'click'"
+        events, "event_type = 'view'", {"value": "event_type = 'click'"}
     )
-    served = pit.stream_pit_serve(tagged, strict=True)
+    served = pit.stream_pit_serve(tagged, ["value"], strict=True)
     q = (
         served.writeStream.format("memory")
         .queryName("pit_strict_out")
@@ -878,7 +829,7 @@ def test_stream_pit_serve_strict_matches_batch(spark, tmp_path):
         )
         q.processAllAvailable()
         got = {
-            r.event_id: (r.asof_value, r.asof_ts)
+            r.event_id: (r.asof_value, r.asof_value_ts)
             for r in spark.sql("select * from pit_strict_out").collect()
         }
     finally:
@@ -933,13 +884,13 @@ def test_stream_pit_serve_multi_strict_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    tagged = pit.tag_pit_stream_multi(
+    tagged = pit.tag_pit_stream(
         events,
         "event_type = 'view'",
         {"click": "event_type = 'click'",
          "purchase": "event_type = 'purchase'"},
     )
-    served = pit.stream_pit_serve_multi(
+    served = pit.stream_pit_serve(
         tagged, ["click", "purchase"], strict=True
     )
     q = (
@@ -1043,3 +994,39 @@ def test_nb_expr_score_streams_with_trained_model(spark, tmp_path):
         q.stop()
     assert 0 < n1 < len(got)                 # genuinely two triggers
     assert got == expr_rows
+
+
+def test_nb_expr_score_null_elements_match_nb_score(spark):
+    """A NULL token element adds nothing to the compiled fold, as the
+    explode path's join drops its bucket: ``[3, NULL, 5, 9]`` scores
+    exactly like :func:`nb_score`, and ``[NULL]`` scores the bare prior,
+    like ``[]``."""
+    from audio_feature_extraction_spark.operators import textstats
+
+    rows = [
+        (f"doc_{i}", [(i * 7 + k) % (3 + i % 5) for k in range(12)], 12)
+        for i in range(30)
+    ]
+    rows += [
+        ("doc_901", [3, None, 5, 9], 4),
+        ("doc_902", [None], 1),
+        ("doc_903", [], 0),
+    ]
+    ts = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int"
+    )
+    wtab, pri = textstats.nb_train(ts)
+    weights, prior = textstats.nb_model_literals(wtab, pri)
+    cols = ("weak_label", "nb_score_micro", "predicted")
+    got = {
+        r.doc_id: tuple(r[c] for c in cols)
+        for r in textstats.nb_expr_score(ts, weights, prior).collect()
+    }
+    want = {
+        r.doc_id: tuple(r[c] for c in cols)
+        for r in textstats.nb_score(ts, wtab, pri).collect()
+    }
+    assert got["doc_901"] == want["doc_901"]
+    assert got["doc_901"][1] is not None
+    assert got["doc_902"][1] == got["doc_903"][1] == prior
+    assert got["doc_902"][2] == got["doc_903"][2] == int(prior > 0)
